@@ -13,12 +13,6 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-# Codelists longer than this join as a broadcast semi-join instead of an
-# IN-literal: very long IN lists bloat the plan and defeat scan-level
-# pushdown; a broadcast hash semi-join stays O(1) per probe row and
-# never shuffles the big side.
-ISIN_LITERAL_MAX = 128
-
 
 def not_null(df: DataFrame, *cols: str) -> DataFrame:
     """Reference P5: ``filter(!is.na(PATIENT_LINKAGE))``
@@ -29,26 +23,38 @@ def not_null(df: DataFrame, *cols: str) -> DataFrame:
     return out
 
 
+def codelist_predicate(col: str, codes: Sequence[int]) -> Column:
+    """Concept-ID membership as one ``col IN (...)`` predicate.
+
+    The expression is built as one SQL string — a single JVM call however
+    long the list (``Column.isin`` costs a py4j round trip per literal).
+    Every code must convert with ``int()`` (ValueError otherwise), so no
+    outside text reaches the SQL; the column name is backtick-quoted. An
+    empty codelist selects nothing.
+    """
+    literals = ", ".join(str(int(c)) for c in codes)
+    if not literals:
+        return F.lit(False)
+    quoted = "`" + col.replace("`", "``") + "`"
+    return F.expr(f"{quoted} IN ({literals})")
+
+
 def codelist_filter(df: DataFrame, col: str,
                     codes: Sequence[int] | DataFrame,
                     code_col: str = "concept_id") -> DataFrame:
     """Reference P9/J8: concept-ID membership against a codelist.
 
     The reference splices codelists into SQL text as IN-literals
-    (2_data_importing_cleaning.R:209,299) — a manual broadcast. Here:
-    short Python lists become ``isin`` (pushed to the scan); long lists
-    or codelist DataFrames become an explicitly-broadcast LEFT SEMI
-    join, the scalable form of the same idea.
+    (2_data_importing_cleaning.R:209,299), and so does this: a Python
+    codelist of any length becomes one IN predicate
+    (:func:`codelist_predicate`), pushed into the scan and evaluated as
+    a hash-set lookup once the list is long. A codelist DataFrame becomes
+    an explicitly-broadcast LEFT SEMI join.
     """
     if isinstance(codes, DataFrame):
         probe = codes.select(F.col(code_col).alias(col)).distinct()
         return df.join(F.broadcast(probe), on=col, how="left_semi")
-    codes = list(codes)
-    if len(codes) <= ISIN_LITERAL_MAX:
-        return df.filter(F.col(col).isin(codes))
-    spark = df.sparkSession
-    probe = spark.createDataFrame([(int(c),) for c in codes], f"{col} long").distinct()
-    return df.join(F.broadcast(probe), on=col, how="left_semi")
+    return df.filter(codelist_predicate(col, codes))
 
 
 def year_in(df: DataFrame, date_col: str, years: Sequence[int]) -> DataFrame:

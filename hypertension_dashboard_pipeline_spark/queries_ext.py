@@ -1295,11 +1295,13 @@ def a14_sketch_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("l_returnflag")
         .agg(F.count(F.lit(1)).alias("__ed"))
     )
-    g = sketches.join(exact_distinct, "l_returnflag")
+    # left join: a group whose partkeys are all NULL has no exact_distinct
+    # row, and countDistinct would give it 0
+    g = sketches.join(exact_distinct, "l_returnflag", "left")
+    ed = F.coalesce(F.col("__ed"), F.lit(0))
     return g.select(
         "l_returnflag",
-        (F.abs(F.col("__ad") - F.col("__ed"))
-         <= 0.15 * F.col("__ed")).cast("int").alias("hll_ok"),
+        (F.abs(F.col("__ad") - ed) <= 0.15 * ed).cast("int").alias("hll_ok"),
         (F.abs(F.col("__am") - F.col("__em"))
          <= 0.10 * F.col("__em")).cast("int").alias("tdigest_ok"),
     )

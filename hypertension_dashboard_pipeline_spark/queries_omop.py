@@ -60,8 +60,10 @@ def _in(codes) -> str:
 
 
 def _readings_cte(name: str, concepts, lo: int, hi: int, out: str) -> str:
-    """Oracle twin of plans/bp._readings: codelist + unit + look-back
-    years + plausibility band → same-day average, half-even 1dp."""
+    """One BP side of plans/bp.paired_daily_bp: codelist + unit +
+    look-back years + plausibility band → same-day average, half-even
+    1dp (the plan computes both sides in one aggregation; the oracle
+    joins the two)."""
     return f"""{name} AS (
         SELECT PATIENT_LINKAGE AS k, MEASUREMENT_DATE AS d,
                round_even(AVG(VALUE_AS_NUMBER::DOUBLE), 1) AS {out}

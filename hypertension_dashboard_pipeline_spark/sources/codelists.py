@@ -5,8 +5,8 @@ The reference loads these from Excel workbooks and splices them into
 SQL text as IN-literals (2_data_importing_cleaning.R:204-269,
 4_hypertension_phenotype_main.R:48-54). Here they are plain data — CSV/
 Parquet files or Python sequences — consumed by
-``operators.filters.codelist_filter``, which picks IN-literal vs
-broadcast-semi-join by size.
+``operators.filters.codelist_filter``, which turns a list of any length
+into one IN predicate on the scan.
 
 Only the blood-pressure measurement concepts and the mmHg unit are
 fixed OMOP constants (3_blood_pressure.R:98,102,121,125); the
@@ -18,7 +18,7 @@ from __future__ import annotations
 
 from collections.abc import Mapping, Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
 from ..schemas import CODELIST
 
@@ -63,7 +63,7 @@ def load_codelists_xlsx(paths: Mapping[str, str]) -> dict[str, list[int]]:
     takes the first column of concept IDs).
 
     Pure driver-side work over tiny files — the cluster only ever sees
-    the resulting int lists (IN-literal or broadcast semi-join via
+    the resulting int lists (IN predicates via
     ``operators.filters.codelist_filter``), so there is no distributed
     xlsx parsing to worry about at 100 TB.
     """
@@ -79,8 +79,3 @@ def load_codelists_xlsx(paths: Mapping[str, str]) -> dict[str, list[int]]:
             codes.append(int(row[0]))
         out[name] = codes
     return out
-
-
-def as_dataframe(spark: SparkSession, codes: Sequence[int]) -> DataFrame:
-    """Codelist as a (broadcastable) single-column DataFrame."""
-    return spark.createDataFrame([(int(c),) for c in codes], schema=CODELIST)

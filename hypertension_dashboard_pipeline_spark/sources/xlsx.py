@@ -7,8 +7,8 @@ column holds the OMOP concept IDs.  This container has no openpyxl, and
 the workbooks involved are tiny driver-side inputs (tens to hundreds of
 rows, read once at plan-build time), so a dependency-free reader of the
 SpreadsheetML subset those files use is the right scale trade-off: the
-cluster never sees the xlsx — only the broadcast/IN-literal codelists
-derived from it.
+cluster never sees the xlsx — only the IN-literal codelists derived
+from it.
 
 Supported: shared strings, inline strings, numbers, booleans, formula
 string results, sparse cells addressed by ``r="A1"`` references, sheet

@@ -9,6 +9,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from hypertension_dashboard_pipeline_spark.io import checkpoint
+from hypertension_dashboard_pipeline_spark.operators import filters as flt
 from hypertension_dashboard_pipeline_spark.plans.fixtures import CODELISTS, EXPECTED_COHORT, build_tables
 from hypertension_dashboard_pipeline_spark.plans import (
     bp as bp_plan,
@@ -23,8 +25,17 @@ from hypertension_dashboard_pipeline_spark.plans.phenotype import (
     build_phenotype,
     phenotype_stats,
 )
+from hypertension_dashboard_pipeline_spark.plans.run import run_pipeline
 
 YEAR = 2023
+
+# every fixture codelist padded past 128 codes with concept IDs that no
+# fixture row carries: real deployments ship lists of hundreds to
+# thousands of codes
+PADDED_CODELISTS = {
+    name: list(codes) + list(range(900_000_000, 900_000_200))
+    for name, codes in CODELISTS.items()
+}
 
 
 @pytest.fixture(scope="module")
@@ -176,8 +187,6 @@ def test_staged_runner_checkpoints_match_direct(spark, tables, phenotype,
     type-exact)."""
     import os
 
-    from hypertension_dashboard_pipeline_spark.plans.run import run_pipeline
-
     out = run_pipeline(spark, tables, CODELISTS, str(tmp_path), YEAR)
     for stage in ("stage2_cohort", "stage3_bp_flags", "stage4_phenotype",
                   "stage4_stats"):
@@ -191,6 +200,85 @@ def test_staged_runner_checkpoints_match_direct(spark, tables, phenotype,
         assert staged[k]["hypertension_130"] == direct[k]["hypertension_130"]
     # checkpoint round-trip preserved types (no CSV-style degradation)
     assert dict(out["phenotype"].dtypes) == dict(phenotype.dtypes)
+
+
+def _sorted_rows(df):
+    return sorted((tuple(r) for r in df.collect()), key=repr)
+
+
+def test_long_codelists_give_identical_outputs(spark, tables, tmp_path):
+    """Codelists past 128 codes (none of the extra codes in the data)
+    must change nothing in any of the four staged outputs."""
+    assert all(len(codes) > 128 for codes in PADDED_CODELISTS.values())
+    short = run_pipeline(spark, tables, CODELISTS, str(tmp_path / "short"), YEAR)
+    padded = run_pipeline(spark, tables, PADDED_CODELISTS,
+                          str(tmp_path / "padded"), YEAR)
+    for stage in ("cohort", "bp_flags", "phenotype", "stats"):
+        assert padded[stage].dtypes == short[stage].dtypes, stage
+        assert _sorted_rows(padded[stage]) == _sorted_rows(short[stage]), stage
+
+
+# ------------------------------------------------------------ plan shape
+
+
+@pytest.fixture(scope="module")
+def parquet_tables(tables, tmp_path_factory):
+    """The fixture tables as Parquet files, so every leaf of a plan is a
+    file scan unless the plan itself builds a local relation."""
+    root = tmp_path_factory.mktemp("omop_parquet")
+    return {name: checkpoint(df, str(root / name)) for name, df in tables.items()}
+
+
+def _cohort_of(tables, codelists):
+    return build_cohort(
+        tables["person"], tables["condition"], tables["measurement"],
+        tables["observation"], tables["procedure"], codelists, YEAR,
+    )
+
+
+def _executed_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_bp_stage_scans_measurement_once(parquet_tables, tmp_path):
+    cohort = checkpoint(_cohort_of(parquet_tables, PADDED_CODELISTS),
+                        str(tmp_path / "cohort"))
+    plan = _executed_plan(
+        bp_plan.build_bp_flags(cohort, parquet_tables["measurement"], YEAR)
+    )
+    scans = [line for line in plan.splitlines()
+             if "FileScan" in line and "MEASUREMENT_CONCEPT_ID" in line]
+    assert len(scans) == 1, plan
+
+
+def test_cohort_stage_has_no_local_codelist_probe(parquet_tables):
+    """Long codelists stay IN predicates on the scans: no relation built
+    on the driver (LocalTableScan, or Scan ExistingRDD from
+    createDataFrame) is joined in as a codelist probe."""
+    plan = _executed_plan(_cohort_of(parquet_tables, PADDED_CODELISTS))
+    assert "FileScan" in plan
+    assert "LocalTableScan" not in plan, plan
+    assert "ExistingRDD" not in plan, plan
+
+
+# ------------------------------------------------------------ codelists
+
+
+def test_codelist_filter_empty_list_selects_nothing(spark):
+    df = spark.createDataFrame([(1,), (None,)], "c long")
+    assert flt.codelist_filter(df, "c", []).count() == 0
+
+
+def test_codelist_filter_rejects_non_integer_code(spark):
+    df = spark.createDataFrame([(1,)], "c long")
+    with pytest.raises(ValueError):
+        flt.codelist_filter(df, "c", [1, "2) OR (1 = 1"])
+
+
+def test_codelist_filter_escapes_backtick_in_column_name(spark):
+    df = spark.createDataFrame([(1,), (2,), (3,)], "c long").toDF("odd`name")
+    out = flt.codelist_filter(df, "odd`name", [2, 3])
+    assert sorted(r[0] for r in out.collect()) == [2, 3]
 
 
 # ----------------------------------------------------- attrition bands

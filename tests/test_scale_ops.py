@@ -5,6 +5,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from hypertension_dashboard_pipeline_spark import queries_ext
 from hypertension_dashboard_pipeline_spark.io import load_table
 from hypertension_dashboard_pipeline_spark.operators.aggregates import (
     approx_distinct_and_percentiles,
@@ -37,6 +38,19 @@ def test_sketch_profile_error_bounds(spark, sf_dir):
         assert abs(nd_a - nd_e) / nd_e < 0.15, (k, nd_a, nd_e)
         # t-digest median of 1..50 integers: within one step of exact
         assert abs(med_a - med_e) <= 1.0, (k, med_a, med_e)
+
+
+def test_sketch_profile_keeps_all_null_partkey_group(spark, monkeypatch):
+    """a14_sketch_profile keeps a return-flag group whose partkeys are
+    all NULL (countDistinct gives it 0), as its oracle does."""
+    li = spark.createDataFrame(
+        [("A", 1, 5.0), ("A", 2, 6.0), ("A", 3, 7.0),
+         ("R", None, 5.0), ("R", None, 6.0), ("R", None, 7.0)],
+        "l_returnflag string, l_partkey long, l_quantity double",
+    )
+    monkeypatch.setattr(queries_ext, "load_table", lambda *_: li)
+    out = queries_ext.a14_sketch_profile(spark, "unused")
+    assert sorted(tuple(r) for r in out.collect()) == [("A", 1, 1), ("R", 1, 1)]
 
 
 def test_salted_join_equals_plain_join(spark, sf_dir):
