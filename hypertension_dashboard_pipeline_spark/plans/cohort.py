@@ -11,29 +11,36 @@ intermediate counts (the reference's manual QC idiom, SURVEY.md §5):
    (2_data_importing_cleaning.R:85-161)
 3. adult filter (YOB ≤ year-18, :186-187)
 4. exclusions — pregnancy (women 18-44 only), ESRD, palliative/
-   hospice care — each an evidence-key union across domain tables
-   filtered by codelist + year, anti-joined off the cohort
-   (:283-620)
+   hospice care: one 0/1 flag per reason and patient, from the
+   domain tables filtered by codelist + year; a patient with any
+   applicable flag leaves the cohort (:283-620)
 5. presentation labels: age, sex/race recodes, ZIP3 de-quote
    (:640-658)
 
-Scale: person-keyed aggregations and anti-joins shuffle on the
-high-cardinality patient key; codelists broadcast. Nothing touches the
-driver except codelist literals.
+Scale: every input is scanned once. Person is one hash aggregation on
+the patient key (consistency as min = max, the survivor as a min over a
+struct). Each domain table is one filtered scan (IN over the union of
+its codelists and years) emitting a flag column per reason; the union
+of those scans is one aggregation on the patient key, applied by one
+left join and a filter. No windows, no anti-joins, and nothing touches
+the driver except codelist literals.
 """
 
 from __future__ import annotations
 
+from functools import reduce
+from operator import and_
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.expressions import age_from_birth_year, recode, strip_ends, trim_chars
-from ..operators import aggregates as agg
+from ..functions.expressions import age_from_birth_year, flag, recode, trim_chars
 from ..operators import filters as flt
 from ..operators import joins as jn
 from ..sources.codelists import Codelists
 
 KEY = "PATIENT_LINKAGE"
+IDENTITY = ("YEAR_OF_BIRTH", "SEX", "RACE")
 
 RACE_RECODE = {
     "AFRICAN AMERICAN": "Black",
@@ -62,24 +69,27 @@ def base_population(person: DataFrame) -> DataFrame:
 
 
 def drop_misbridged(pop: DataFrame) -> DataFrame:
-    """Mis-bridge cleanup (2_data_importing_cleaning.R:85-161).
+    """Mis-bridge cleanup (2_data_importing_cleaning.R:85-161) as one
+    aggregate per patient key.
 
     A patient key appearing with conflicting YEAR_OF_BIRTH / SEX / RACE
-    is a bad linkage → dropped entirely (n_distinct != 1 on any).
-    Rows with missing STATE or ZIP3 are then removed
-    (2_data_importing_cleaning.R:147-148, ``filter(!is.na(STATE) &
-    !is.na(ZIP3))``) — a patient whose every row lacks location leaves
-    the cohort here, exactly as in the reference.  Remaining STATE/ZIP3
-    conflicts are tolerated → collapsed to one deterministic row (the
-    reference keeps an arbitrary one; SURVEY.md §2.10-4).
+    is a bad linkage → dropped entirely: each column must have
+    ``min = max``, which like ``n_distinct == 1`` ignores NULL and fails
+    when every value is NULL. Rows with missing STATE or ZIP3 cannot
+    survive (2_data_importing_cleaning.R:147-148, ``filter(!is.na(STATE)
+    & !is.na(ZIP3))``) — a patient whose every row lacks location leaves
+    the cohort here, exactly as in the reference. Remaining STATE/ZIP3
+    conflicts are tolerated → the survivor is the least located row by
+    (STATE, ZIP3, YEAR_OF_BIRTH, SEX, RACE), NULL first — a total order,
+    where the reference keeps an arbitrary row (SURVEY.md §2.10-4).
     """
-    consistent = agg.consistent_keys(pop, KEY, ["YEAR_OF_BIRTH", "SEX", "RACE"])
-    kept = jn.has_evidence(pop, consistent, KEY)
-    located = kept.filter(
-        F.col("STATE").isNotNull() & F.col("ZIP3").isNotNull()
+    located = F.col("STATE").isNotNull() & F.col("ZIP3").isNotNull()
+    per = pop.groupBy(KEY).agg(
+        reduce(and_, [F.min(c) == F.max(c) for c in IDENTITY]).alias("consistent"),
+        F.min(F.when(located, F.struct("STATE", "ZIP3", *IDENTITY))).alias("row"),
     )
-    return agg.dedup_deterministic(
-        located, KEY, [F.col("STATE").asc(), F.col("ZIP3").asc()]
+    return per.filter(F.col("consistent") & F.col("row").isNotNull()).select(
+        KEY, *(F.col(f"row.{c}") for c in ("YEAR_OF_BIRTH", "RACE", "SEX", "ZIP3", "STATE"))
     )
 
 
@@ -88,76 +98,60 @@ def adults(pop: DataFrame, year: int = 2023) -> DataFrame:
     return pop.filter(F.col("YEAR_OF_BIRTH") <= year - 18)
 
 
-def _domain_keys(df: DataFrame, concept_col: str, date_col: str,
-                 codes, years) -> DataFrame:
-    """Evidence keys for one domain table: codelist filter + year filter
-    → patient keys (the reference's `(key,'1')` exclusion queries,
-    2_data_importing_cleaning.R:283-303)."""
-    return flt.year_in(
-        flt.codelist_filter(df, concept_col, codes), date_col, years
-    ).select(KEY)
+# per domain table: concept column, date column, and the codelists of
+# each exclusion reason it carries evidence for
+# (2_data_importing_cleaning.R:283-400, 409-484, 526-611)
+DOMAINS = {
+    "condition": ("CONDITION_CONCEPT_ID", "CONDITION_START_DATE", {
+        "preg": ["preg_condition"],
+        "esrd": ["esrd_condition"],
+    }),
+    "measurement": ("MEASUREMENT_CONCEPT_ID", "MEASUREMENT_DATE", {
+        "preg": ["preg_measurement"],
+    }),
+    "observation": ("OBSERVATION_CONCEPT_ID", "OBSERVATION_DATE", {
+        "preg": ["preg_observation"],
+        "esrd": ["esrd_observation"],
+        "care": ["palliative_observation", "hospice_observation"],
+    }),
+    "procedure": ("PROCEDURE_CONCEPT_ID", "PROCEDURE_DATE", {
+        "preg": ["preg_procedure"],
+        "esrd": ["esrd_procedure"],
+        "care": ["palliative_procedure", "hospice_procedure"],
+    }),
+}
+REASONS = ("preg", "esrd", "care")
 
 
-def pregnancy_exclusion_keys(cohort: DataFrame, condition: DataFrame,
-                             measurement: DataFrame, observation: DataFrame,
-                             procedure: DataFrame, codelists: Codelists,
-                             year: int = 2023) -> DataFrame:
-    """Pregnancy evidence among women of reproductive age (18-44):
-    cohort-restricted union of condition/measurement/observation/
-    procedure hits (2_data_importing_cleaning.R:195-198, 283-400)."""
-    wra = cohort.filter(
-        F.col("YEAR_OF_BIRTH").between(year - 44, year - 18)
-        & (F.col("SEX") == "F")
-    ).select(KEY)
-    union = jn.evidence_union(
-        KEY,
-        _domain_keys(condition, "CONDITION_CONCEPT_ID", "CONDITION_START_DATE",
-                     codelists["preg_condition"], [year]),
-        _domain_keys(measurement, "MEASUREMENT_CONCEPT_ID", "MEASUREMENT_DATE",
-                     codelists["preg_measurement"], [year]),
-        _domain_keys(observation, "OBSERVATION_CONCEPT_ID", "OBSERVATION_DATE",
-                     codelists["preg_observation"], [year]),
-        _domain_keys(procedure, "PROCEDURE_CONCEPT_ID", "PROCEDURE_DATE",
-                     codelists["preg_procedure"], [year]),
-    )
-    return jn.has_evidence(union, wra, KEY)
+def exclusion_flags(condition: DataFrame, measurement: DataFrame,
+                    observation: DataFrame, procedure: DataFrame,
+                    codelists: Codelists, year: int = 2023) -> DataFrame:
+    """Per-patient exclusion evidence ``(KEY, preg, esrd, care)``, 0/1,
+    one row per key with any evidence.
 
-
-def esrd_exclusion_keys(condition: DataFrame, observation: DataFrame,
-                        procedure: DataFrame, codelists: Codelists,
-                        year: int = 2023) -> DataFrame:
-    """End-stage renal disease evidence, any adult
-    (2_data_importing_cleaning.R:409-484); look-back year included like
-    the reference's 2022-2023 window."""
-    years = [year - 1, year]
-    return jn.evidence_union(
-        KEY,
-        _domain_keys(condition, "CONDITION_CONCEPT_ID", "CONDITION_START_DATE",
-                     codelists["esrd_condition"], years),
-        _domain_keys(observation, "OBSERVATION_CONCEPT_ID", "OBSERVATION_DATE",
-                     codelists["esrd_observation"], years),
-        _domain_keys(procedure, "PROCEDURE_CONCEPT_ID", "PROCEDURE_DATE",
-                     codelists["esrd_procedure"], years),
-    )
-
-
-def care_exclusion_keys(observation: DataFrame, procedure: DataFrame,
-                        codelists: Codelists, year: int = 2023) -> DataFrame:
-    """Palliative/hospice care evidence
-    (2_data_importing_cleaning.R:526-611; note the reference's
-    undefined-variable bug at :610 — the intent, both lists, is
-    implemented; SURVEY.md §2.10-5d)."""
-    years = [year - 1, year]
-    return jn.evidence_union(
-        KEY,
-        _domain_keys(observation, "OBSERVATION_CONCEPT_ID", "OBSERVATION_DATE",
-                     codelists["palliative_observation"], years),
-        _domain_keys(procedure, "PROCEDURE_CONCEPT_ID", "PROCEDURE_DATE",
-                     codelists["palliative_procedure"], years),
-        _domain_keys(observation, "OBSERVATION_CONCEPT_ID", "OBSERVATION_DATE",
-                     codelists["hospice_observation"], years),
-        _domain_keys(procedure, "PROCEDURE_CONCEPT_ID", "PROCEDURE_DATE",
-                     codelists["hospice_procedure"], years),
+    Pregnancy counts in the measurement year only; ESRD and palliative/
+    hospice care include the look-back year like the reference's
+    2022-2023 window. Care uses both the palliative and the hospice
+    lists (the reference's undefined-variable bug at :610 is not
+    reproduced; SURVEY.md §2.10-5d). Pregnancy evidence still has to be
+    restricted to women of reproductive age by the caller.
+    """
+    tables = {"condition": condition, "measurement": measurement,
+              "observation": observation, "procedure": procedure}
+    years = {"preg": [year], "esrd": [year - 1, year], "care": [year - 1, year]}
+    scans = []
+    for name, (concept, date, lists) in DOMAINS.items():
+        codes = {r: [c for n in names for c in codelists[n]] for r, names in lists.items()}
+        every_code = [c for cs in codes.values() for c in cs]
+        every_year = sorted({y for r in lists for y in years[r]})
+        hits = flt.year_in(
+            flt.codelist_filter(tables[name], concept, every_code), date, every_year
+        ).filter(F.col(KEY).isNotNull())
+        flags = {r: flag(flt.codelist_predicate(concept, codes[r])
+                         & F.year(F.col(date)).isin(years[r])) for r in lists}
+        scans.append(hits.select(KEY, *(flags.get(r, F.lit(0)).alias(r) for r in REASONS)))
+    return reduce(DataFrame.unionByName, scans).groupBy(KEY).agg(
+        *(F.max(r).alias(r) for r in REASONS)
     )
 
 
@@ -179,14 +173,10 @@ def build_cohort(person: DataFrame, condition: DataFrame,
                  procedure: DataFrame, codelists: Codelists,
                  year: int = 2023) -> DataFrame:
     """Script-2 end-to-end: eligible adult cohort with clean labels."""
-    pop = drop_misbridged(base_population(person))
-    grown = adults(pop, year)
-    preg = pregnancy_exclusion_keys(grown, condition, measurement,
-                                    observation, procedure, codelists, year)
-    esrd = esrd_exclusion_keys(condition, observation, procedure,
-                               codelists, year)
-    care = care_exclusion_keys(observation, procedure, codelists, year)
-    eligible = jn.exclude(
-        jn.exclude(jn.exclude(grown, preg, KEY), esrd, KEY), care, KEY
-    )
+    grown = adults(drop_misbridged(base_population(person)), year)
+    flags = exclusion_flags(condition, measurement, observation, procedure,
+                            codelists, year)
+    wra = F.col("YEAR_OF_BIRTH").between(year - 44, year - 18) & (F.col("SEX") == "F")
+    excluded = ((F.col("preg") == 1) & wra) | (F.col("esrd") == 1) | (F.col("care") == 1)
+    eligible = jn.enrich(grown, flags, KEY).filter(~F.coalesce(excluded, F.lit(False)))
     return clean_labels(eligible, year)

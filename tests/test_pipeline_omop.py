@@ -6,12 +6,21 @@ aggregates (SURVEY.md §5).
 
 from __future__ import annotations
 
+import datetime as dt
+
 import pytest
 from pyspark.sql import functions as F
 
+from hypertension_dashboard_pipeline_spark import schemas as S
 from hypertension_dashboard_pipeline_spark.io import checkpoint
 from hypertension_dashboard_pipeline_spark.operators import filters as flt
-from hypertension_dashboard_pipeline_spark.plans.fixtures import CODELISTS, EXPECTED_COHORT, build_tables
+from hypertension_dashboard_pipeline_spark.plans.fixtures import (
+    CODELISTS,
+    EXPECTED_COHORT,
+    _person_row,
+    build_tables,
+    q,
+)
 from hypertension_dashboard_pipeline_spark.plans import (
     bp as bp_plan,
 )
@@ -102,6 +111,25 @@ def test_adult_filter(tables):
     pop = adults(drop_misbridged(base_population(tables["person"])), YEAR)
     keys = {r["PATIENT_LINKAGE"] for r in pop.collect()}
     assert "P10" not in keys
+
+
+def test_misbridge_survivor_ignores_row_order_and_partitions(spark):
+    """One key, two rows at the same (STATE, ZIP3), YOB 1980 vs NULL:
+    the survivor is fixed by a total order in which NULL sorts first,
+    so the NULL-YOB row survives and the patient leaves at the adult
+    filter, whatever the input order or partitioning."""
+    rows = [_person_row("M1", 1980), _person_row("M1", None)]
+    outs = []
+    for order in (rows, rows[::-1]):
+        for n in (1, 3):
+            person = spark.createDataFrame(spark.sparkContext.parallelize(order, n),
+                                           S.PERSON)
+            pop = drop_misbridged(base_population(person))
+            outs.append((_sorted_rows(pop), _sorted_rows(adults(pop, YEAR))))
+    assert all(out == outs[0] for out in outs), outs
+    survivors, grown = outs[0]
+    assert survivors == [("M1", None, "CAUCASIAN", "M", "303", "GA")]
+    assert grown == []
 
 
 def test_cohort_membership(cohort):
@@ -261,6 +289,90 @@ def test_cohort_stage_has_no_local_codelist_probe(parquet_tables):
     assert "ExistingRDD" not in plan, plan
 
 
+def test_cohort_stage_scans_each_input_once(parquet_tables):
+    """One FileScan per cohort input, each matched by a column only that
+    table has."""
+    plan = _executed_plan(_cohort_of(parquet_tables, PADDED_CODELISTS))
+    scans = [line for line in plan.splitlines() if "FileScan" in line]
+    for col in ("YEAR_OF_BIRTH", "CONDITION_CONCEPT_ID", "MEASUREMENT_CONCEPT_ID",
+                "OBSERVATION_CONCEPT_ID", "PROCEDURE_CONCEPT_ID"):
+        assert sum(col in line for line in scans) == 1, (col, plan)
+    assert len(scans) == 5, plan
+
+
+# ------------------------------------------------------ exclusion flags
+
+D22, D23 = dt.date(2022, 6, 1), dt.date(2023, 6, 1)
+
+
+def _eligible(spark, persons, condition=(), measurement=(), observation=(),
+              procedure=(), codelists=CODELISTS):
+    """Keys of the cohort built over tiny in-memory tables."""
+    df = build_cohort(
+        spark.createDataFrame(persons, S.PERSON),
+        spark.createDataFrame(list(condition), S.CONDITION_OCCURRENCE),
+        spark.createDataFrame(list(measurement), S.MEASUREMENT),
+        spark.createDataFrame(list(observation), S.OBSERVATION),
+        spark.createDataFrame(list(procedure), S.PROCEDURE_OCCURRENCE),
+        codelists, YEAR,
+    )
+    return {r["PATIENT_LINKAGE"] for r in df.collect()}
+
+
+def test_pregnancy_in_lookback_year_does_not_exclude(spark):
+    # the condition and procedure scans read look-back-year rows for
+    # ESRD and care; the pregnancy flag must still ignore them
+    kept = _eligible(
+        spark, [_person_row("W1", 1990, sex="F"), _person_row("W2", 1990, sex="F")],
+        condition=[("W1", 9001, q("pregnancy"), D22)],
+        procedure=[("W2", 9004, D22)],
+    )
+    assert kept == {"W1", "W2"}
+
+
+def test_pregnancy_outside_reproductive_age_women_does_not_exclude(spark):
+    kept = _eligible(
+        spark,
+        [_person_row("M1", 1990, sex="M"), _person_row("W1", 1970, sex="F"),
+         _person_row("W2", 1990, sex="F")],
+        condition=[(k, 9001, q("pregnancy"), D23) for k in ("M1", "W1", "W2")],
+    )
+    assert kept == {"M1", "W1"}
+
+
+def test_esrd_in_lookback_year_excludes(spark):
+    kept = _eligible(
+        spark, [_person_row(k, 1970) for k in ("E1", "E2", "E3", "K1")],
+        condition=[("E1", 9101, q("esrd"), D22)],
+        observation=[("E2", 9102, D22)],
+        procedure=[("E3", 9103, D22)],
+    )
+    assert kept == {"K1"}
+
+
+def test_empty_codelist_excludes_nobody(spark):
+    # esrd_observation empties one reason of a shared scan;
+    # preg_measurement empties measurement's only list
+    codelists = {**CODELISTS, "esrd_observation": [], "preg_measurement": []}
+    kept = _eligible(
+        spark,
+        [_person_row("E1", 1970), _person_row("C1", 1970), _person_row("W1", 1990, sex="F")],
+        measurement=[("W1", D23, 9002, q("preg test"), 1.0, 0, q(""))],
+        observation=[("E1", 9102, D23), ("C1", 9201, D23)],
+        codelists=codelists,
+    )
+    assert kept == {"E1", "W1"}
+
+
+def test_null_key_in_domain_table_excludes_nobody(spark):
+    kept = _eligible(
+        spark, [_person_row("K1", 1970), _person_row("W1", 1990, sex="F")],
+        condition=[(None, 9101, q("esrd"), D23), (None, 9001, q("pregnancy"), D23)],
+        observation=[(None, 9201, D23)],
+    )
+    assert kept == {"K1", "W1"}
+
+
 # ------------------------------------------------------------ codelists
 
 
@@ -299,14 +411,8 @@ def test_attrition_proportions_within_reference_bands(spark):
 
     from hypertension_dashboard_pipeline_spark import schemas as S
     from hypertension_dashboard_pipeline_spark.operators.aggregates import attrition_pct
-    from hypertension_dashboard_pipeline_spark.plans.cohort import (
-        care_exclusion_keys,
-        esrd_exclusion_keys,
-        pregnancy_exclusion_keys,
-    )
     from hypertension_dashboard_pipeline_spark.plans.fixtures import CODELISTS, q
     from hypertension_dashboard_pipeline_spark.plans import cohort as co
-    from hypertension_dashboard_pipeline_spark.operators import joins as jn
 
     N, N_WRA = 10_000, 3_000
     N_PREG = round(0.0897 * N_WRA)   # 269 -> 8.9667%
@@ -349,30 +455,22 @@ def test_attrition_proportions_within_reference_bands(spark):
 
     grown = co.adults(co.drop_misbridged(co.base_population(person)), YEAR)
     n_total = grown.count()
-    n_wra = grown.filter(
-        F.col("YEAR_OF_BIRTH").between(YEAR - 44, YEAR - 18)
-        & (F.col("SEX") == "F")
-    ).count()
+    wra = F.col("YEAR_OF_BIRTH").between(YEAR - 44, YEAR - 18) & (F.col("SEX") == "F")
+    n_wra = grown.filter(wra).count()
     assert (n_total, n_wra) == (N, N_WRA)
 
-    after_preg = jn.exclude(
-        grown,
-        pregnancy_exclusion_keys(grown, condition, measurement, observation,
-                                 procedure, CODELISTS, YEAR),
-        co.KEY,
-    )
+    # the reasons applied in the reference's order: pregnancy among
+    # WRA, then ESRD, then care
+    flagged = grown.join(
+        co.exclusion_flags(condition, measurement, observation, procedure,
+                           CODELISTS, YEAR),
+        co.KEY, "left",
+    ).fillna(0, subset=list(co.REASONS))
+    after_preg = flagged.filter(~(wra & (F.col("preg") == 1)))
     n1 = after_preg.count()
-    after_esrd = jn.exclude(
-        after_preg,
-        esrd_exclusion_keys(condition, observation, procedure, CODELISTS, YEAR),
-        co.KEY,
-    )
+    after_esrd = after_preg.filter(F.col("esrd") == 0)
     n2 = after_esrd.count()
-    n3 = jn.exclude(
-        after_esrd,
-        care_exclusion_keys(observation, procedure, CODELISTS, YEAR),
-        co.KEY,
-    ).count()
+    n3 = after_esrd.filter(F.col("care") == 0).count()
 
     # the reference's printed formulas, with its denominators
     pct_preg = attrition_pct(n_total, n1, denom=n_wra)
