@@ -12,7 +12,7 @@ hypertension surveillance ETL), re-architected Spark-first:
 * plus a beyond-reference extension surface for large-scale
   training-data pipelines: dedup (exact / MinHash-LSH / SimHash /
   n-gram Jaccard / embedding cosine), ANN similarity search, text
-  analysis, multimodal binary columns, and Structured Streaming.
+  analysis, and Structured Streaming.
 
 Layout:
     session.py    SparkSession factory (AQE on, UTC, Arrow)
@@ -20,7 +20,7 @@ Layout:
     io.py         parquet/csv sources & sinks, view registration
     functions/    expression-level helpers (scalar fns, text, vectors)
     operators/    relational operators (filters, joins, aggregates,
-                  windows, dedup, similarity, multimodal)
+                  windows, dedup, similarity)
     plans/        reference-pipeline equivalents (cohort, bp, phenotype)
     sources/      codelists + table registry
     streaming/    Structured Streaming variants of the batch aggs

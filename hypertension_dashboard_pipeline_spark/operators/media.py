@@ -1,10 +1,8 @@
 """Real media codecs over binary columns — pure stdlib + numpy.
 
-This container has no PIL/ffmpeg, but three production formats are
-fully decodable with the standard library alone, so the engine ships
-REAL decoders for them instead of the honest fakes in
-``operators/multimodal.py`` (which stay, for the formats that genuinely
-need native libs — video frames, JPEG):
+The package depends on no PIL/ffmpeg, but three production formats
+are fully decodable with the standard library alone, so the engine
+ships REAL decoders for them:
 
 * **PNG** — zlib inflate (stdlib) + the five per-row filters
   (None/Sub/Up/Average/Paeth) from the public PNG specification;

@@ -108,8 +108,9 @@ def p6_p7_range_conjunction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def p9_codelist_isin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P9: codelist membership as an IN-literal (short-list path of the
-    codelist filter; 2_data_importing_cleaning.R:299). Pushed to scan."""
+    """P9: codelist membership as one IN (...) predicate — the codelist
+    filter's single path for a Python list of any length
+    (2_data_importing_cleaning.R:299). Pushed to scan."""
     df = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey", "l_quantity")
     return flt.codelist_filter(df, "l_partkey", [1, 2, 3, 5, 8, 13, 21, 34])
 
@@ -346,9 +347,10 @@ def j7_outer_join_demoted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def j8_broadcast_codelist_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J8/P9 long-list path: codelist as a broadcast LEFT SEMI join —
-    the scalable form of the reference's IN-literal splicing
-    (2_data_importing_cleaning.R:209). The fact side never shuffles."""
+    """J8: the codelist filter's DataFrame path — a codelist held as a
+    DataFrame (here derived from ``part``) becomes a broadcast LEFT SEMI
+    join (2_data_importing_cleaning.R:209). The fact side never
+    shuffles."""
     li = load_table(spark, sf_dir, "lineitem")
     codes = (
         load_table(spark, sf_dir, "part")

@@ -1,6 +1,6 @@
 """Extension-surface queries: training-data-pipeline operators over the
 ``documents`` and ``embeddings`` tables (BASELINE.json north star),
-plus streaming and multimodal plumbing.
+plus streaming plumbing.
 
 Oracle strategy: everything hash-based uses md5 (not engine-native
 hashes like xxhash64/duckdb hash), folds sequentially, and rounds any
@@ -19,7 +19,6 @@ from .functions import text as tx
 from .functions.expressions import round_fixed
 from .io import load_table
 from .operators import dedup as dd
-from .operators import multimodal as mm
 from .operators import similarity as sim
 from .registry import register
 from .streaming.daily_window import run_available_now
@@ -1397,26 +1396,6 @@ def udf_pandas_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "multimodal_frame_sample",
-    oracle="""
-    SELECT doc_id, CAST(frame_idx AS INTEGER) AS frame_idx,
-           md5(doc_id::VARCHAR || ':' || frame_idx::VARCHAR) AS frame_hash
-    FROM (
-        SELECT doc_id,
-               unnest(range(0, octet_length(encode(text)) % 4 + 1)) AS frame_idx
-        FROM documents
-    )
-    """,
-)
-def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """1→N frame-sampling fan-out through mapInPandas (video/audio
-    chunking shape); frame identity is a stable digest so the oracle
-    reproduces the fan-out exactly."""
-    docs = load_table(spark, sf_dir, "documents")
-    return mm.sample_frames(mm.documents_as_binary(docs))
-
-
 # --------------------------------------------------------------------------
 # embedding centroids + the curation flagship
 # --------------------------------------------------------------------------
@@ -1582,89 +1561,8 @@ def curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# multimodal + streaming
+# streaming
 # --------------------------------------------------------------------------
-
-
-@register(
-    "multimodal_extract_features",
-    oracle="""
-    SELECT doc_id, CAST(i AS INTEGER) AS pos,
-           ('0x' || substr(md5(text), i*4 + 1, 4))::BIGINT / 65535.0 AS value
-    FROM documents, range(0, 8) t(i)
-    """,
-)
-def multimodal_extract_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Arrow-batched feature extraction over binary payloads
-    (mapInPandas → fixed-width array<double> column) with a
-    deterministic stub featurizer — the embedding-inference plumbing.
-
-    The operator returns (doc_id, features array<double>); the gate
-    query registers the EXPLODED (doc_id, pos, value) form because the
-    driver's canonicalizer sorts on object columns and cannot hash
-    list values. Exact IEEE division keeps cross-engine floats
-    bit-identical, so every vector component is still oracle-checked."""
-    from .operators.multimodal import documents_as_binary, extract_features
-
-    docs = documents_as_binary(load_table(spark, sf_dir, "documents"))
-    feats = extract_features(docs)
-    return feats.select(
-        "doc_id", F.posexplode("features").alias("pos", "value")
-    )
-
-
-@register(
-    "multimodal_resize_meta",
-    oracle="""
-    WITH d AS (
-        SELECT doc_id,
-               CAST(octet_length(encode(text)) % 640 + 1 AS INTEGER)
-                   AS fake_width,
-               CAST(octet_length(encode(text)) * 7 % 480 + 1 AS INTEGER)
-                   AS fake_height
-        FROM documents
-    )
-    SELECT doc_id, fake_width, fake_height,
-           CAST(FLOOR(fake_width * LEAST(224.0 / fake_width,
-                                         224.0 / fake_height)) AS INTEGER)
-               AS out_w,
-           CAST(FLOOR(fake_height * LEAST(224.0 / fake_width,
-                                          224.0 / fake_height)) AS INTEGER)
-               AS out_h
-    FROM d
-    """,
-)
-def multimodal_resize_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Aspect-preserving resize geometry over decoded dimensions:
-    decode in Python (Arrow batches), geometry JVM-side — the
-    split that keeps Python out of per-pixel work."""
-    from .operators.multimodal import (
-        decode_metadata,
-        documents_as_binary,
-        resize_meta,
-    )
-
-    docs = documents_as_binary(load_table(spark, sf_dir, "documents"))
-    return resize_meta(decode_metadata(docs))
-
-
-@register(
-    "multimodal_decode_meta",
-    oracle="""
-    SELECT doc_id,
-           octet_length(encode(text)) AS n_bytes,
-           CAST(octet_length(encode(text)) % 640 + 1 AS INTEGER) AS fake_width,
-           CAST(octet_length(encode(text)) * 7 % 480 + 1 AS INTEGER) AS fake_height
-    FROM documents
-    """,
-)
-def multimodal_decode_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Binary-column decode plumbing: text→binary payload →
-    Arrow-batched mapInPandas stub decoder emitting typed metadata. The
-    pandas boundary is the real thing; only the pixel decode is faked
-    (no media libs in container)."""
-    docs = load_table(spark, sf_dir, "documents")
-    return mm.decode_metadata(mm.documents_as_binary(docs))
 
 
 @register(

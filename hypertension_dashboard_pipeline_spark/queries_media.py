@@ -18,9 +18,8 @@ At scale: each query is scan -> mapInPandas (encode) -> mapInPandas
 (decode+stats); no shuffle, no collect, partitioning preserved — the
 embarrassingly-parallel shape media decode should have at 100 TB.
 
-Beyond-reference surface (the reference pipeline has no media path;
-see SURVEY.md §2 / operators/multimodal.py for the env-gated formats
-that genuinely need native libs).
+Beyond-reference surface: the reference pipeline has no media path
+(SURVEY.md §2).
 """
 
 from __future__ import annotations
@@ -354,43 +353,6 @@ def media_audio_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return media.audio_stats(corpus)
 
 
-# GIF frame formulas (operators/gif.py constants): w = k%11+2,
-# h = k%7+2, n_frames = k%5+2; palette entry i = (i, 3i%256, 7i%256);
-# frame f pixel index = (x*5 + y*9 + f*13 + k) % 256.
-_GIF_IDX = "((x * 5 + y * 9 + f * 13 + d.k) % 256)"
-
-
-@register(
-    "media_gif_transparency_stats",
-    oracle=f"""
-    SELECT d.doc_id,
-           CAST(f AS INT) AS frame_idx,
-           CAST(d.k % 11 + 2 AS INT) AS width,
-           CAST(d.k % 7 + 2 AS INT) AS height,
-           CAST(SUM(x * CASE WHEN (x * 5 + y * 9 + f * 13) % 16 = 0
-                             THEN 0 ELSE 255 END) AS BIGINT) AS sum_xa,
-           CAST(SUM(CASE WHEN (x * 5 + y * 9 + f * 13) % 16 = 0
-                         THEN 1 ELSE 0 END) AS BIGINT) AS n_transparent
-    FROM {_KEYED_DOCS},
-         range(0, 12) t(x), range(0, 8) s(y), range(0, 6) u(f)
-    WHERE x < d.k % 11 + 2 AND y < d.k % 7 + 2 AND f < d.k % 5 + 2
-    GROUP BY d.doc_id, d.k, f
-    """,
-)
-def media_gif_transparency_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GIF89a graphic-control-extension transparency: every frame
-    declares transparent slot ``k % 16`` and the index lattice runs
-    mod 16, so the transparency mask SHIFTS per frame; interlaced for
-    every third doc — x-weighted alpha sums verify the mask lands on
-    the right pixels after de-interlace.  The oracle reduces
-    ``(idx formula) % 16 == k % 16`` to the k-free residue test."""
-    from .operators import gif
-
-    docs = load_table(spark, sf_dir, "documents")
-    corpus = gif.synth_gif_trns_corpus(docs)
-    return gif.gif_alpha_stats(corpus)
-
-
 @register(
     "media_bmp_variant_stats",
     oracle=f"""
@@ -506,752 +468,3 @@ def media_audio_stereo_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     corpus = media.synth_stereo_audio_corpus(docs)
     return media.audio_channel_stats(corpus)
-
-
-@register(
-    "media_gif_frame_stats",
-    oracle=f"""
-    SELECT d.doc_id,
-           CAST(f AS INT) AS frame_idx,
-           CAST(d.k % 11 + 2 AS INT) AS width,
-           CAST(d.k % 7 + 2 AS INT) AS height,
-           CAST(SUM({_GIF_IDX}) AS BIGINT) AS sum_r,
-           CAST(SUM({_GIF_IDX} * 3 % 256) AS BIGINT) AS sum_g,
-           CAST(SUM({_GIF_IDX} * 7 % 256) AS BIGINT) AS sum_b
-    FROM {_KEYED_DOCS},
-         range(0, 12) t(x), range(0, 8) s(y), range(0, 6) u(f)
-    WHERE x < d.k % 11 + 2 AND y < d.k % 7 + 2 AND f < d.k % 5 + 2
-    GROUP BY d.doc_id, d.k, f
-    """,
-)
-def media_gif_frame_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL video-shaped frame extraction: every document carries an
-    animated GIF (interlaced for every third doc), and each frame is
-    actually LZW-decoded, palette-mapped, de-interlaced, and fanned
-    out 1->N with integer channel sums.  The oracle recomputes the
-    per-frame sums from the palette/index formulas — it never touches
-    a byte — so a parity match certifies the LZW decoder, the 4-pass
-    interlace inversion, and the palette mapping."""
-    from .operators import gif
-
-    docs = load_table(spark, sf_dir, "documents")
-    corpus = gif.synth_gif_corpus(docs)
-    return gif.gif_frame_stats(corpus)
-
-
-# JPEG closed-form chain (operators/jpeg.py): constant 8x8 tiles are
-# the verifiability trick — only the DC coefficient survives the DCT,
-# DC quantize/dequantize/reconstruct is exact dyadic IEEE arithmetic,
-# and every lossy rounding in the codec is floor(x + 0.5), so the
-# decoded color is a closed form of the source color that SQL can
-# recompute.  Literals are cast to DOUBLE everywhere (DuckDB numeric
-# literals default to exact DECIMAL, which would NOT match the
-# codec's float64 ops).  q00 = 16 (luma) / 17 (chroma) per the
-# Annex K tables.
-_RHU = "FLOOR({x} + 0.5::DOUBLE)"
-_CLAMP = "LEAST(255.0::DOUBLE, GREATEST(0.0::DOUBLE, {x}))"
-
-
-def _cl_rhu(x: str) -> str:
-    return _CLAMP.format(x=_RHU.format(x=x))
-
-
-def _dc_chain(v: str, q: int) -> str:
-    dcq = _RHU.format(x=f"8.0::DOUBLE * ({v} - 128.0::DOUBLE) / {q}.0::DOUBLE")
-    return _cl_rhu(f"{dcq} * {q}.0::DOUBLE / 8.0::DOUBLE + 128.0::DOUBLE")
-
-
-_JPEG_ORACLE = f"""
-    WITH tiles AS (
-        SELECT d.doc_id, d.k, i, j,
-               CAST((i * 31 + j * 17 + d.k) % 256 AS DOUBLE) AS r0,
-               CAST((i * 13 + j * 7 + 2 * d.k) % 256 AS DOUBLE) AS g0,
-               CAST((i * 3 + j * 29 + 3 * d.k) % 256 AS DOUBLE) AS b0
-        FROM {{keyed}}, range(0, 4) t(i), range(0, 3) s(j)
-        WHERE i < d.k % 4 + 1 AND j < d.k % 3 + 1
-    ), ycc AS (
-        SELECT doc_id, k,
-               {_cl_rhu("0.299::DOUBLE * r0 + 0.587::DOUBLE * g0"
-                        " + 0.114::DOUBLE * b0")} AS y,
-               {_cl_rhu("-0.168736::DOUBLE * r0 - 0.331264::DOUBLE * g0"
-                        " + 0.5::DOUBLE * b0 + 128.0::DOUBLE")} AS cb,
-               {_cl_rhu("0.5::DOUBLE * r0 - 0.418688::DOUBLE * g0"
-                        " - 0.081312::DOUBLE * b0 + 128.0::DOUBLE")} AS cr
-        FROM tiles
-    ), rec AS (
-        SELECT doc_id, k,
-               {_dc_chain('y', 16)} AS yd,
-               {_dc_chain('cb', 17)} AS cbd,
-               {_dc_chain('cr', 17)} AS crd
-        FROM ycc
-    ), rgb AS (
-        SELECT doc_id, k,
-               {_cl_rhu("yd + 1.402::DOUBLE * (crd - 128.0::DOUBLE)")} AS rr,
-               {_cl_rhu("yd - 0.344136::DOUBLE * (cbd - 128.0::DOUBLE)"
-                        " - 0.714136::DOUBLE * (crd - 128.0::DOUBLE)")} AS gg,
-               {_cl_rhu("yd + 1.772::DOUBLE * (cbd - 128.0::DOUBLE)")} AS bb
-        FROM rec
-    )
-    SELECT doc_id,
-           CAST((k % 4 + 1) * 8 AS INT) AS width,
-           CAST((k % 3 + 1) * 8 AS INT) AS height,
-           CAST(SUM(rr) * 64 AS BIGINT) AS sum_r,
-           CAST(SUM(gg) * 64 AS BIGINT) AS sum_g,
-           CAST(SUM(bb) * 64 AS BIGINT) AS sum_b
-    FROM rgb
-    GROUP BY doc_id, k
-""".format(keyed=_KEYED_DOCS)
-
-
-@register("media_jpeg_decode_stats", oracle=_JPEG_ORACLE)
-def media_jpeg_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL baseline JPEG decode: every document carries a 4:4:4
-    sequential JPEG of constant 8x8 tiles, decoded through the full
-    marker/huffman/DC-prediction/zigzag/dequant/IDCT/color-convert
-    path, integer channel sums out.  The oracle recomputes the decoded
-    colors via the exact closed form of the DC-only chain (verified
-    exhaustively over 17,760 colors in tests) — it never touches a
-    byte, so a parity match certifies the decoder."""
-    from .operators import jpeg
-
-    docs = load_table(spark, sf_dir, "documents")
-    corpus = jpeg.synth_jpeg_corpus(docs)
-    return jpeg.jpeg_stats(corpus)
-
-
-@register("media_jpeg_restart_stats", oracle=_JPEG_ORACLE)
-def media_jpeg_restart_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Baseline JPEG decode WITH restart intervals (DRI + cyclic RSTn,
-    ITU T.81 E.1.4): every document's stream resyncs every k%4+1 MCUs
-    — byte-aligned marker consumption, cyclic RSTn order enforcement,
-    and mid-image DC prediction resets.  Restart markers change the
-    entropy framing, not the coefficients, hence the shared baseline
-    oracle; plain-vs-restart decode equality is pinned bit-exactly in
-    tests/test_jpeg.py."""
-    from .operators import jpeg
-
-    docs = load_table(spark, sf_dir, "documents")
-    corpus = jpeg.synth_restart_jpeg_corpus(docs)
-    return jpeg.jpeg_stats(corpus)
-
-
-@register("media_jpeg_progressive_stats", oracle=_JPEG_ORACLE)
-def media_jpeg_progressive_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL progressive JPEG decode (SOF2, ITU T.81 Annex G): the same
-    constant-tile images as media_jpeg_decode_stats, entropy-coded
-    through the 14-scan spectral-selection + successive-approximation
-    script — DC first/refine, AC first with EOB runs, AC refinement
-    with correction bits — so the decoder must reassemble every
-    coefficient across scans to reproduce the pixels.  Progressive is
-    a different entropy coding of the SAME quantized coefficients,
-    hence the shared oracle: both queries must land on identical
-    closed-form sums, and the baseline/progressive decode-equality is
-    additionally pinned bit-exactly in tests/test_jpeg.py."""
-    from .operators import jpeg
-
-    docs = load_table(spark, sf_dir, "documents")
-    corpus = jpeg.synth_progressive_jpeg_corpus(docs)
-    return jpeg.jpeg_stats(corpus)
-
-
-# Chroma-subsampled variant of the closed-form oracle: the tile color
-# lattice is identical, but tiles are MCU-sized — 16x16 for 4:2:0
-# (even keys), 16x8 for 4:2:2 (odd keys) — so the per-tile pixel count
-# and the image height depend on the key's parity.  A tile constant
-# over a whole MCU survives the chroma box-mean decimation exactly
-# (the mean of a constant box is the constant and floor(x+0.5) is the
-# identity on integers), so the decoded color is the SAME DC-only
-# closed form as the 4:4:4 oracle.
-_JPEG_SUBSAMPLED_ORACLE = f"""
-    WITH tiles AS (
-        SELECT d.doc_id, d.k, i, j,
-               CAST((i * 31 + j * 17 + d.k) % 256 AS DOUBLE) AS r0,
-               CAST((i * 13 + j * 7 + 2 * d.k) % 256 AS DOUBLE) AS g0,
-               CAST((i * 3 + j * 29 + 3 * d.k) % 256 AS DOUBLE) AS b0
-        FROM {{keyed}}, range(0, 4) t(i), range(0, 3) s(j)
-        WHERE i < d.k % 4 + 1 AND j < d.k % 3 + 1
-    ), ycc AS (
-        SELECT doc_id, k,
-               {_cl_rhu("0.299::DOUBLE * r0 + 0.587::DOUBLE * g0"
-                        " + 0.114::DOUBLE * b0")} AS y,
-               {_cl_rhu("-0.168736::DOUBLE * r0 - 0.331264::DOUBLE * g0"
-                        " + 0.5::DOUBLE * b0 + 128.0::DOUBLE")} AS cb,
-               {_cl_rhu("0.5::DOUBLE * r0 - 0.418688::DOUBLE * g0"
-                        " - 0.081312::DOUBLE * b0 + 128.0::DOUBLE")} AS cr
-        FROM tiles
-    ), rec AS (
-        SELECT doc_id, k,
-               {_dc_chain('y', 16)} AS yd,
-               {_dc_chain('cb', 17)} AS cbd,
-               {_dc_chain('cr', 17)} AS crd
-        FROM ycc
-    ), rgb AS (
-        SELECT doc_id, k,
-               CASE WHEN k % 2 = 0 THEN 256 ELSE 128 END AS tile_px,
-               {_cl_rhu("yd + 1.402::DOUBLE * (crd - 128.0::DOUBLE)")} AS rr,
-               {_cl_rhu("yd - 0.344136::DOUBLE * (cbd - 128.0::DOUBLE)"
-                        " - 0.714136::DOUBLE * (crd - 128.0::DOUBLE)")} AS gg,
-               {_cl_rhu("yd + 1.772::DOUBLE * (cbd - 128.0::DOUBLE)")} AS bb
-        FROM rec
-    )
-    SELECT doc_id,
-           CAST((k % 4 + 1) * 16 AS INT) AS width,
-           CAST((k % 3 + 1) * CASE WHEN k % 2 = 0 THEN 16 ELSE 8 END
-                AS INT) AS height,
-           CAST(SUM(rr * tile_px) AS BIGINT) AS sum_r,
-           CAST(SUM(gg * tile_px) AS BIGINT) AS sum_g,
-           CAST(SUM(bb * tile_px) AS BIGINT) AS sum_b
-    FROM rgb
-    GROUP BY doc_id, k
-""".format(keyed=_KEYED_DOCS)
-
-
-@register("media_jpeg_subsampled_stats", oracle=_JPEG_SUBSAMPLED_ORACLE)
-def media_jpeg_subsampled_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL chroma-subsampled JPEG decode — the sampling layouts that
-    dominate real-world corpora: even keys carry 4:2:0 streams (16x16
-    MCUs, four luma blocks interleaved per MCU), odd keys 4:2:2 (16x8
-    MCUs).  The decoder must parse the SOF sampling factors, walk the
-    T.81 A.2.3 MCU-interleaved block order, reconstruct each component
-    at its own resolution, and box-replicate chroma back to full size.
-    Tiles are constant per MCU, so chroma decimation is exact and the
-    oracle recomputes the same DC-only closed form as the 4:4:4
-    queries (scaled by the MCU pixel count); 420/422 cross-coding
-    bit-identity vs progressive and restart framings is pinned in
-    tests/test_jpeg.py."""
-    from .operators import jpeg
-
-    docs = load_table(spark, sf_dir, "documents")
-    corpus = jpeg.synth_subsampled_jpeg_corpus(docs)
-    return jpeg.jpeg_stats(corpus)
-
-
-# ---------------------------------------------------------------------------
-# Perceptual-hash media dedup (operators/phash.py) — the LAION-style
-# corpus-dedup read over DECODED pixels.  Same zero-byte oracle design:
-# Spark decodes real PNG/BMP bytes and hashes the pixels; DuckDB
-# recomputes the identical pure-integer hash chain (BT.601/1000
-# grayscale, floor-map resize, integer-mean threshold, two's-complement
-# bit packing) from the generation formulas.
-# ---------------------------------------------------------------------------
-
-# near-dup corpus formulas (operators/phash.py constants)
-_PH_KEYED = (
-    "(SELECT doc_id, kk % 20 AS kc, (kk // 20) % 4 AS v,"
-    " (kk % 20) % 5 + 12 AS w, (kk % 20) % 3 + 10 AS h"
-    " FROM (SELECT doc_id, ((doc_id % 2147483648) + 2147483648)"
-    " % 2147483648 AS kk FROM documents) q) d"
-)
-
-
-def _ph_gray(sx: str, sy: str) -> str:
-    """Closed-form grayscale of the near-dup corpus at source pixel
-    (sx, sy) — channel formulas + sparse variant noise + BT.601/1000."""
-    nz = f"(CASE WHEN (({sx})*2 + ({sy})) % 5 = 0 THEN v*2 ELSE 0 END)"
-    r = f"((({sx})*7 + ({sy})*11 + kc*29 + {nz}) % 256)"
-    g = f"((({sx})*3 + ({sy})*13 + kc*17 + {nz}) % 256)"
-    b = f"((({sx})*5 + ({sy})*7 + kc*23 + {nz}) % 256)"
-    return f"(({r})*299 + ({g})*587 + ({b})*114) // 1000"
-
-
-# signed-64 bit packing: bit 63 is the sign bit, written as the
-# two's-complement expression (the bare literal would parse as HUGEINT)
-_PH_PACK = (
-    "CAST(SUM(CASE WHEN b = 0 THEN 0"
-    " WHEN i = 63 THEN (-9223372036854775807 - 1)::BIGINT"
-    " ELSE (1::BIGINT << i) END) AS BIGINT)"
-)
-
-_AHASH_BODY = f"""g8 AS (
-        SELECT d.doc_id, gy * 8 + gx AS i,
-               {_ph_gray("(gx * w) // 8", "(gy * h) // 8")} AS gray
-        FROM {_PH_KEYED}, range(0, 8) t(gx), range(0, 8) s(gy)
-    ), thr AS (
-        SELECT doc_id, CAST(SUM(gray) AS BIGINT) // 64 AS m
-        FROM g8 GROUP BY doc_id
-    ), abits AS (
-        SELECT g8.doc_id, i, CASE WHEN gray > m THEN 1 ELSE 0 END AS b
-        FROM g8 JOIN thr USING (doc_id)
-    ), asig AS (
-        SELECT doc_id, {_PH_PACK} AS ahash FROM abits GROUP BY doc_id
-    )"""
-
-_DHASH_BODY = f"""dbits AS (
-        SELECT d.doc_id, gy * 8 + gx AS i,
-               CASE WHEN ({_ph_gray("((gx + 1) * w) // 9", "(gy * h) // 8")})
-                       > ({_ph_gray("(gx * w) // 9", "(gy * h) // 8")})
-                    THEN 1 ELSE 0 END AS b
-        FROM {_PH_KEYED}, range(0, 8) t(gx), range(0, 8) s(gy)
-    ), dsig AS (
-        SELECT doc_id, {_PH_PACK} AS dhash FROM dbits GROUP BY doc_id
-    )"""
-
-# per-doc exact content row: dimensions, weighted fingerprint, total
-# channel sum (the closed form of image_content_signatures' output)
-_FP_BODY = f"""fpx AS (
-        SELECT d.doc_id, d.w, d.h,
-               ((y * w + x) * 3) AS i3, x, y, kc,
-               CASE WHEN (x*2 + y) % 5 = 0 THEN v*2 ELSE 0 END AS nz
-        FROM {_PH_KEYED}, range(0, 16) t(x), range(0, 12) s(y)
-        WHERE x < d.w AND y < d.h
-    ), perdoc AS (
-        SELECT doc_id, MIN(w) AS w, MIN(h) AS h,
-               CAST(SUM(((x*7 + y*11 + kc*29 + nz) % 256) * (i3 + 1)
-                      + ((x*3 + y*13 + kc*17 + nz) % 256) * (i3 + 2)
-                      + ((x*5 + y*7 + kc*23 + nz) % 256) * (i3 + 3))
-                    AS BIGINT) AS fp,
-               CAST(SUM(((x*7 + y*11 + kc*29 + nz) % 256)
-                      + ((x*3 + y*13 + kc*17 + nz) % 256)
-                      + ((x*5 + y*7 + kc*23 + nz) % 256))
-                    AS BIGINT) AS sum_rgb
-        FROM fpx GROUP BY doc_id
-    )"""
-
-_AHASH_CTE = "\n    WITH " + _AHASH_BODY
-_DHASH_CTE = "\n    WITH " + _DHASH_BODY
-
-
-def _ph_corpus_sigs(spark: SparkSession, sf_dir: str):
-    from .operators import phash
-
-    docs = load_table(spark, sf_dir, "documents")
-    return phash.image_content_signatures(
-        phash.synth_neardup_image_corpus(docs)
-    )
-
-
-@register(
-    "media_pixel_dup_groups",
-    oracle="\n    WITH " + _FP_BODY + """
-    SELECT CAST(w AS INT) AS width, CAST(h AS INT) AS height, fp,
-           COUNT(*) AS n_docs,
-           MIN(doc_id) AS min_doc, MAX(doc_id) AS max_doc
-    FROM perdoc GROUP BY w, h, fp HAVING COUNT(*) >= 2
-    """,
-)
-def media_pixel_dup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact image dedup over DECODED pixels: every payload (mixed
-    PNG/BMP) is really decoded, fingerprinted by a positionally-
-    weighted integer sum of the RGB lattice, and grouped — a PNG and a
-    BMP with identical pixels dedupe together (format-independent
-    content identity).  One shuffle on the fingerprint; the oracle
-    recomputes fingerprints from the generation formulas without
-    touching a byte."""
-    from .operators import phash
-
-    sigs = _ph_corpus_sigs(spark, sf_dir)
-    return phash.signature_dup_groups(sigs, ["width", "height", "fp"])
-
-
-@register(
-    "media_ahash_dedup_groups",
-    oracle=_AHASH_CTE + """
-    SELECT ahash, COUNT(*) AS n_docs,
-           MIN(doc_id) AS min_doc, MAX(doc_id) AS max_doc
-    FROM asig GROUP BY ahash HAVING COUNT(*) >= 2
-    """,
-)
-def media_ahash_dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Perceptual dedup by average hash: decode -> integer BT.601
-    grayscale -> 8x8 floor-map resize -> threshold against the integer
-    mean -> 64-bit signature, grouped.  aHash absorbs the corpus'
-    small brightness perturbations, so groups are LARGER than exact
-    pixel groups — the perceptual-dedup read.  The oracle recomputes
-    the full hash chain in closed form (never decodes a byte)."""
-    from .operators import phash
-
-    sigs = _ph_corpus_sigs(spark, sf_dir)
-    return phash.signature_dup_groups(sigs, ["ahash"])
-
-
-@register(
-    "media_dedup_compaction",
-    oracle="\n    WITH " + _FP_BODY + ",\n    " + _AHASH_BODY + ",\n    "
-    + _DHASH_BODY + """
-    SELECT (SELECT COUNT(*) FROM perdoc) AS n_docs,
-           (SELECT COUNT(DISTINCT (w, h, fp)) FROM perdoc) AS n_pixel_sigs,
-           (SELECT COUNT(DISTINCT ahash) FROM asig) AS n_ahash_sigs,
-           (SELECT COUNT(DISTINCT dhash) FROM dsig) AS n_dhash_sigs
-    """,
-)
-def media_dedup_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dedup-compaction evaluation: how much each signature layer
-    collapses the corpus — documents vs exact pixel identities vs
-    perceptual aHash/dHash identities (perceptual layers absorb the
-    brightness variants, so their counts sit at or below the exact
-    count).  One decode pass, one 1-row aggregate; the oracle
-    recomputes all three signature layers in closed form."""
-    from .operators import phash
-
-    sigs = _ph_corpus_sigs(spark, sf_dir)
-    return sigs.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.countDistinct("width", "height", "fp").alias("n_pixel_sigs"),
-        F.countDistinct("ahash").alias("n_ahash_sigs"),
-        F.countDistinct("dhash").alias("n_dhash_sigs"),
-    )
-
-
-@register(
-    "media_curation_pipeline",
-    oracle="\n    WITH " + _FP_BODY + """
-    , mins AS (
-        SELECT w, h, fp, MIN(doc_id) AS doc_id
-        FROM perdoc GROUP BY w, h, fp
-    )
-    SELECT p.doc_id, CAST(p.w AS INT) AS width, CAST(p.h AS INT) AS height,
-           CAST(p.w * p.h AS BIGINT) AS n_px, p.sum_rgb
-    FROM perdoc p JOIN mins m
-      ON p.w = m.w AND p.h = m.h AND p.fp = m.fp AND p.doc_id = m.doc_id
-    WHERE p.w * p.h >= 130
-      AND p.sum_rgb >= 340 * p.w * p.h
-      AND p.sum_rgb <= 420 * p.w * p.h
-    """,
-)
-def media_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """End-to-end media curation: decode real bytes -> exact-dup
-    survivor selection (min doc id per pixel-identity group) -> integer
-    quality band (minimum pixel count + mean-brightness band expressed
-    as exact integer bounds on the channel sum).  The LAION-style
-    keep-list, one decode pass + one shuffle; the oracle runs the same
-    selection on formula-derived rows."""
-    from .operators import phash
-
-    sigs = _ph_corpus_sigs(spark, sf_dir)
-    survivors = phash.image_dedup_survivors(sigs)
-    n_px = (F.col("width").cast("long") * F.col("height")).alias("n_px")
-    return (
-        survivors.select("doc_id", "width", "height", n_px, "sum_rgb")
-        .filter(
-            (F.col("n_px") >= 130)
-            & (F.col("sum_rgb") >= 340 * F.col("n_px"))
-            & (F.col("sum_rgb") <= 420 * F.col("n_px"))
-        )
-    )
-
-
-@register(
-    "media_audio_dup_groups",
-    oracle="""
-    WITH keyed AS (
-        SELECT doc_id,
-               (((doc_id % 2147483648) + 2147483648) % 2147483648) % 30 AS kc
-        FROM documents
-    ), pcm AS (
-        SELECT doc_id, kc, i,
-               (i*i*37 + i*1009 + kc*31) % 65536 - 32768 AS s
-        FROM keyed, range(0, 70) t(i)
-        WHERE i < kc % 50 + 20
-    ), perdoc AS (
-        SELECT doc_id,
-               CAST(MIN(8000 + (kc % 3) * 4000) AS INT) AS sample_rate,
-               CAST(MIN(kc % 50 + 20) AS BIGINT) AS n_samples,
-               CAST(SUM(s * (i + 1)) AS BIGINT) AS fp
-        FROM pcm GROUP BY doc_id
-    )
-    SELECT sample_rate, n_samples, fp, COUNT(*) AS n_docs,
-           MIN(doc_id) AS min_doc, MAX(doc_id) AS max_doc
-    FROM perdoc GROUP BY sample_rate, n_samples, fp
-    HAVING COUNT(*) >= 2
-    """,
-)
-def media_audio_dup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact audio dedup over DECODED PCM: every payload is a real WAV
-    (stdlib encoder), really RIFF-parsed back, fingerprinted by a
-    positionally-weighted int64 sample sum, and grouped with the rate
-    and length — byte-identical recordings dedupe across documents.
-    The oracle recomputes the fingerprints from the sample formula
-    without touching a byte."""
-    from .operators import phash
-
-    docs = load_table(spark, sf_dir, "documents")
-    sigs = phash.audio_content_signatures(
-        phash.synth_dup_audio_corpus(docs)
-    )
-    return phash.signature_dup_groups(
-        sigs, ["sample_rate", "n_samples", "fp"]
-    )
-
-
-@register(
-    "media_gif_frame_dup_groups",
-    oracle="""
-    WITH keyed AS (
-        SELECT doc_id,
-               (((doc_id % 2147483648) + 2147483648) % 2147483648) % 12 AS kc
-        FROM documents
-    ), cells AS (
-        SELECT doc_id, f, x, y, ((kc + f*3) % 10) AS fc
-        FROM keyed, range(0, 6) u(f), range(0, 6) t(x), range(0, 5) s(y)
-        WHERE f < kc % 4 + 3
-    ), perframe AS (
-        SELECT doc_id, f,
-               CAST(SUM(((x*5 + y*9 + fc*21) % 256) * (y*6 + x + 1))
-                    AS BIGINT) AS fp
-        FROM cells GROUP BY doc_id, f
-    )
-    SELECT fp, COUNT(*) AS n_frames, COUNT(DISTINCT doc_id) AS n_docs,
-           MIN(doc_id) AS min_doc, MAX(doc_id) AS max_doc
-    FROM perframe GROUP BY fp HAVING COUNT(*) >= 2
-    """,
-)
-def media_gif_frame_dup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Frame-level dedup across animations (the video-frame-dedup
-    read): every document's GIF is really LZW-decoded, each frame
-    fingerprinted from the decoded palette-index grid, and identical
-    frames grouped across documents AND frame positions.  1->N decode
-    fan-out with no shuffle, then one shuffle on the fingerprint.  The
-    oracle recomputes the per-frame fingerprints from the generation
-    formulas — a parity match certifies the frame decode path."""
-    from .operators import phash
-
-    docs = load_table(spark, sf_dir, "documents")
-    return phash.frame_dup_groups(
-        phash.gif_frame_signatures(phash.synth_framedup_gif_corpus(docs))
-    )
-
-
-@register(
-    "media_phash_dedup_groups",
-    oracle=_DHASH_CTE.replace("WITH", "WITH RECURSIVE", 1) + """
-    , usig AS (SELECT DISTINCT dhash FROM dsig),
-    spairs AS (
-        SELECT a.dhash AS sa, b.dhash AS sb
-        FROM usig a, usig b
-        WHERE a.dhash < b.dhash
-          AND bit_count(xor(a.dhash, b.dhash)) <= 6
-    ), sedges AS (
-        SELECT sa AS s, sb AS t FROM spairs
-        UNION SELECT sb, sa FROM spairs
-    ), reach AS (
-        SELECT s AS sig, s AS r FROM sedges
-        UNION
-        SELECT e.t, reach.r FROM reach JOIN sedges e ON e.s = reach.sig
-    ), scomp AS (
-        SELECT sig, MIN(r) AS comp FROM reach GROUP BY sig
-    ), sig2comp AS (
-        SELECT u.dhash, COALESCE(sc.comp, u.dhash) AS comp
-        FROM usig u LEFT JOIN scomp sc ON sc.sig = u.dhash
-    ), gid AS (
-        SELECT s2.comp, MIN(s.doc_id) AS group_id
-        FROM dsig s JOIN sig2comp s2 USING (dhash)
-        GROUP BY s2.comp
-    )
-    SELECT s.doc_id, g.group_id
-    FROM dsig s JOIN sig2comp s2 USING (dhash)
-                JOIN gid g ON g.comp = s2.comp
-    """,
-)
-def media_phash_dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Group-output perceptual image dedup: every document labeled with
-    the min doc id of its transitive dHash near-dup family — n output
-    rows, never the O(family²) pair expansion.  Components run on
-    DISTINCT signatures (a template family is one node); the oracle is
-    a recursive-CTE closure over the same signature graph, computed
-    from the generation formulas without decoding a byte."""
-    from .operators import phash
-
-    sigs = _ph_corpus_sigs(spark, sf_dir)
-    return phash.phash_dedup_groups(sigs, sig_col="dhash", max_hamming=6)
-
-
-def _calib_sweep_sql(cte: str, tbl: str, sig: str) -> str:
-    """The precision/recall threshold-sweep oracle over one signature
-    CTE (``dsig``/``dhash`` or ``asig``/``ahash``) — the all-pairs
-    form the lossless chunk-pair blocking provably equals."""
-    return cte + f"""
-    , fam AS (
-        SELECT doc_id,
-               ((doc_id % 2147483648) + 2147483648) % 2147483648 % 20
-                   AS family
-        FROM documents
-    ), ap AS (
-        SELECT CAST(bit_count(xor(a.{sig}, b.{sig})) AS INTEGER)
-                   AS hamming,
-               CASE WHEN fa.family = fb.family THEN 1 ELSE 0 END
-                   AS same_fam
-        FROM {tbl} a JOIN {tbl} b ON a.doc_id < b.doc_id
-        JOIN fam fa ON fa.doc_id = a.doc_id
-        JOIN fam fb ON fb.doc_id = b.doc_id
-    ), tr AS (
-        SELECT CAST(COUNT(CASE WHEN same_fam = 1 THEN 1 END) AS BIGINT)
-                   AS n_truth
-        FROM ap
-    )
-    SELECT CAST(th.t AS INT) AS max_hamming,
-           CAST(COUNT(ap.hamming) AS BIGINT) AS n_pairs,
-           CAST(COUNT(CASE WHEN ap.same_fam = 1 THEN 1 END) AS BIGINT)
-               AS n_hit,
-           MIN(tr.n_truth) AS n_truth,
-           CASE WHEN COUNT(ap.hamming) > 0 THEN
-               FLOOR(COUNT(CASE WHEN ap.same_fam = 1 THEN 1 END)::DOUBLE
-                     / COUNT(ap.hamming) * 1000000.0 + 0.5) / 1000000.0
-           END AS precision,
-           CASE WHEN MIN(tr.n_truth) > 0 THEN
-               FLOOR(COUNT(CASE WHEN ap.same_fam = 1 THEN 1 END)::DOUBLE
-                     / MIN(tr.n_truth) * 1000000.0 + 0.5) / 1000000.0
-           END AS recall
-    FROM range(0, 7) th(t) CROSS JOIN tr
-    LEFT JOIN ap ON ap.hamming <= th.t
-    GROUP BY th.t
-    """
-
-
-_DHASH_SWEEP_SQL = _calib_sweep_sql(_DHASH_CTE, "dsig", "dhash")
-_AHASH_SWEEP_SQL = _calib_sweep_sql(_AHASH_CTE, "asig", "ahash")
-
-
-@register("media_hamming_calibration", oracle=_DHASH_SWEEP_SQL)
-def media_hamming_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Threshold calibration for the perceptual-hash dedup family:
-    precision/recall of dHash Hamming cutoffs 0..6 against the
-    corpus's ground-truth content families (docs sharing kc render the
-    same base image; variants differ by sparse noise) — the evaluation
-    a pipeline owner runs before choosing max_hamming for
-    phash_dedup_groups at scale (the minhash_calibration/lsh_recall
-    methodology applied to perceptual hashes).  Candidates are
-    generated ONCE at hamming<=6 via the lossless blocking and folded
-    to a <=7-row histogram in one aggregation; the oracle does the
-    plain all-pairs sweep the blocking provably equals."""
-    from .operators import phash
-
-    sigs = _ph_corpus_sigs(spark, sf_dir)
-    km = 2147483648
-    fam = (
-        load_table(spark, sf_dir, "documents")
-        .select(
-            F.col("doc_id").cast("long").alias("doc_id"),
-            (((F.col("doc_id") % km) + km) % km % 20).alias("family"),
-        )
-    )
-    return phash.hamming_calibration(
-        sigs, fam, thresholds=(0, 1, 2, 3, 4, 5, 6), sig_col="dhash"
-    )
-
-
-@register("media_ahash_calibration", oracle=_AHASH_SWEEP_SQL)
-def media_ahash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The aHash twin of media_hamming_calibration: the same
-    precision/recall threshold sweep over AVERAGE-hash signatures, so
-    a pipeline owner reads the two curves side by side before picking
-    which perceptual hash (and which cutoff) to trust for
-    phash_dedup_groups — average-hash thresholds against the global
-    mean are more brightness-stable but less edge-sensitive than
-    dHash's gradient bits, and this pair of queries quantifies that
-    trade on the same corpus and truth labeling.  Identical scale
-    shape: one blocked candidate generation folded to a <=7-row
-    histogram, broadcast threshold sweep."""
-    from .operators import phash
-
-    sigs = _ph_corpus_sigs(spark, sf_dir)
-    km = 2147483648
-    fam = (
-        load_table(spark, sf_dir, "documents")
-        .select(
-            F.col("doc_id").cast("long").alias("doc_id"),
-            (((F.col("doc_id") % km) + km) % km % 20).alias("family"),
-        )
-    )
-    return phash.hamming_calibration(
-        sigs, fam, thresholds=(0, 1, 2, 3, 4, 5, 6), sig_col="ahash"
-    )
-
-
-@register(
-    "media_calibration_select",
-    oracle=f"""
-    WITH u AS (
-        SELECT 'dhash' AS hash_kind, dc.* FROM ({_DHASH_SWEEP_SQL}) dc
-        UNION ALL
-        SELECT 'ahash' AS hash_kind, ac.* FROM ({_AHASH_SWEEP_SQL}) ac
-    ), scored AS (
-        SELECT hash_kind, max_hamming, n_pairs, n_hit, n_truth,
-               precision, recall,
-               CASE WHEN n_pairs + n_truth > 0 THEN
-                   FLOOR(2.0::DOUBLE * n_hit / (n_pairs + n_truth)
-                         * 1000000.0 + 0.5) / 1000000.0
-               END AS f1
-        FROM u
-    )
-    SELECT hash_kind, max_hamming, n_pairs, n_hit, n_truth,
-           precision, recall, f1
-    FROM scored
-    QUALIFY ROW_NUMBER() OVER (
-        PARTITION BY hash_kind
-        ORDER BY f1 DESC, max_hamming ASC
-    ) = 1
-    """,
-)
-def media_calibration_select(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Calibration -> selection: reads BOTH perceptual-hash
-    calibration curves (dHash + aHash precision/recall sweeps) and
-    emits each hash's operating threshold — argmax exact F1
-    (``2*n_hit/(n_pairs+n_truth)``, the harmonic mean computed from
-    the integer curve columns) with the tighter-threshold tie-break.
-    This is the 1-row-per-hash actionable knob phash_dedup_groups
-    consumes, closing the measure->choose->run loop of the
-    minhash_calibration methodology.  All corpus-sized work happens
-    inside the two sweeps (one blocked candidate generation each,
-    folded to <=7-row histograms); the selection itself is a
-    row_number window over a bounded 14-row frame.  The signature
-    relation feeds BOTH sweeps, so it is persisted once (the standing
-    _maybe_persist/release contract) — the decode+hash stage runs one
-    corpus pass instead of two."""
-    from .operators import phash
-    from .operators.dedup import _maybe_persist, release_persisted
-
-    release_persisted()
-    sigs = _maybe_persist(_ph_corpus_sigs(spark, sf_dir), True)
-    km = 2147483648
-    fam = (
-        load_table(spark, sf_dir, "documents")
-        .select(
-            F.col("doc_id").cast("long").alias("doc_id"),
-            (((F.col("doc_id") % km) + km) % km % 20).alias("family"),
-        )
-    )
-    curves = None
-    for kind in ("dhash", "ahash"):
-        c = phash.hamming_calibration(
-            sigs, fam, thresholds=(0, 1, 2, 3, 4, 5, 6), sig_col=kind,
-            release=False,
-        ).withColumn("hash_kind", F.lit(kind))
-        curves = c if curves is None else curves.unionByName(c)
-    return phash.calibration_operating_point(
-        curves, key_cols=("hash_kind",)
-    ).select(
-        "hash_kind", "max_hamming", "n_pairs", "n_hit", "n_truth",
-        "precision", "recall", "f1",
-    )
-
-
-@register(
-    "media_dhash_hamming_pairs",
-    oracle=_DHASH_CTE + """
-    , usig AS (SELECT DISTINCT dhash FROM dsig),
-    sp AS (
-        SELECT a.dhash AS sa, b.dhash AS sb,
-               CAST(bit_count(xor(a.dhash, b.dhash)) AS INTEGER) AS hamming
-        FROM usig a, usig b
-        WHERE a.dhash < b.dhash
-          AND bit_count(xor(a.dhash, b.dhash)) <= 6
-    )
-    SELECT LEAST(x.doc_id, y.doc_id) AS id_a,
-           GREATEST(x.doc_id, y.doc_id) AS id_b, sp.hamming
-    FROM sp JOIN dsig x ON x.dhash = sp.sa JOIN dsig y ON y.dhash = sp.sb
-    UNION ALL
-    SELECT a.doc_id AS id_a, b.doc_id AS id_b, 0 AS hamming
-    FROM dsig a JOIN dsig b ON a.dhash = b.dhash AND a.doc_id < b.doc_id
-    """,
-)
-def media_dhash_hamming_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup image pairs by difference-hash Hamming distance <= 6
-    over decoded pixels, using the LOSSLESS chunk-pair blocking proven
-    on SimHash (operators/dedup.py:near_signature_pairs): candidates
-    join on 16-bit chunk-pair keys over DISTINCT signatures, so
-    signature multiplicity never inflates the shuffle; the oracle does
-    the plain all-pairs Hamming filter the blocking provably equals."""
-    from .operators import phash
-
-    sigs = _ph_corpus_sigs(spark, sf_dir)
-    return phash.hamming_doc_pairs(sigs, sig_col="dhash", max_hamming=6)

@@ -41,10 +41,8 @@ def register(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryF
 
 
 # The external driver evaluates the FIRST 50 registered queries against
-# their oracles (CORRECTNESS_r01 covered registration positions 1-50
-# only, leaving the whole LLM-pipeline extension surface unchecked).
-# Registration order is therefore a deliberate artifact governed by a
-# WINDOW CONTRACT (enforced by tests/test_registry_contract.py):
+# their oracles, so registration order is a deliberate artifact governed
+# by a WINDOW CONTRACT (enforced by tests/test_registry_contract.py):
 #
 #   1. _FRONT lists exactly the externally-gated window (<= 50 names),
 #      in registration order; everything else registers after it.
@@ -59,607 +57,20 @@ def register(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryF
 #      (tests/test_driver_parity.py runs EVERY registered query against
 #      its oracle — the authoritative gate; the driver window is a
 #      sampled re-verification of it).
-#   4. Rotation history:
-#      r3 swapped s1_scan_project_alias + p12_plausibility_band out for
-#      the two end-to-end OMOP pipeline queries.
-#      r4 executed the big core re-verification rotation: the external
-#      gate DID run (CORRECTNESS_r04 + BENCH_r04 landed) — 47/50 green;
-#      the 3 red rows (a15_time_rollup, a23_incremental_rollup,
-#      streaming_incremental_rollup) were bit-exact in value and failed
-#      only on DECIMAL hash canonicalization, fixed in r5 by the
-#      dec_present presentation rule (functions/expressions.py; the
-#      no-DecimalType-in-output contract is enforced by
-#      tests/test_driver_parity.py::_assert_no_decimal).
-#      r5 window: the 41 never-externally-verified queries (the whole
-#      queries_analytics.py surface, r4 wave-2/3 debuts, decimal-fixed
-#      rollups) + drifted dedup family + flagships + 4 r5 debuts +
-#      the late-r5 zero-norm similarity fix = 50/50, ALL green
-#      (CORRECTNESS_r05).
-#      r6 window (this round) = exactly the mechanical drift set of
-#      this round's changes (40 queries) + flagship + a28 (never
-#      externally verified) + 8 slots of the oldest r4-debut
-#      evidence.  The changes driving the drift:
-#        * round_fixed non-finite passthrough (ADVICE r5 medium):
-#          every transitive round_fixed caller re-verifies under the
-#          fixed semantics — the whole w3-w6/a2x/analytics surface;
-#        * a24 skew_factor F.round -> round_fixed (ADVICE r5 high);
-#        * F.round backlog burndown, families cosine (sim_* x6,
-#          via functions.vectors.cosine), quality_score
-#          (text_quality_score, curation_pipeline,
-#          dedup_quality_survivor), plus per-query migrations of
-#          everything rotating in that still carried F.round
-#          (emb_label_centroids, sim_quantized_topk, text_bm25_topk,
-#          text_decontaminate, streaming_daily_window,
-#          sim_cosine_near_dup via cosine_near_dup_pairs);
-#        * bounded-run shuffle-partition pin (streaming/runner.py)
-#          for streaming_{dedup,daily_window,session_window,
-#          stateful_counters}.
-#      STILL ON OLD EVIDENCE after this round (r4★ green +
-#      fingerprint-pinned + local 152-query sweep) — first picks for
-#      the r7 window: j12_fuzzy_join_blocked, j13_merge_upsert,
-#      a14_sketch_profile, text_chunk_documents,
-#      sample_temperature_mix, sample_k_per_group, plus the remaining
-#      F.round backlog families (migrate WHEN rotated, never before):
-#      a6_freq_table, a11_attrition_stats, a13_grouped_percentiles,
-#      f16_profile_stats, text_repetition_ratio,
-#      dedup_ngram_jaccard + dedup_minhash_lsh + curation's jaccard
-#      filter (shared operators.dedup.shingle_pairs_jaccard /
-#      minhash_lsh_pairs — rotate the dedup family together,
-#      SURVEY.md round-boundary step 2), streaming_static_join
-#      (stateless; pin optional).
-#      NEVER EXTERNALLY VERIFIED (r6 debuts, registered outside the
-#      window under the new-query exemption; all sf0.01+sf0.001
-#      oracle-green locally) — the other r7-window candidates:
-#      a29_heavy_hitters_sampled, a30_grouped_mad_outliers,
-#      a31_cms_point_estimates, ts_gap_fill_interpolate,
-#      dq_drift_psi, text_tfidf_top_terms, emb_top_component,
-#      emb_remove_top_component, f17_json_extract_stats,
-#      sample_global_index, s2_sink_partitioned_roundtrip,
-#      s6_catalog_schema_contract, s3_csv_roundtrip,
-#      s8_jsonl_orc_roundtrip, text_gopher_rules,
-#      dedup_prefix_filter_pairs (rotate with the dedup family — it
-#      shares exploded_shingles), dedup_duplicate_spans,
-#      dedup_span_coverage, emb_random_projection, sim_ivf_pq_topk,
-#      graph_triangle_count, text_vocab_encode, text_feature_hashing.
-#      That is ~23 debuts + ~14 stale-evidence carries + flagships:
-#      more than one 50-slot window after the mechanical drift set —
-#      prioritize (1) drift, (2) flagships, (3) debuts touching shared
-#      callees being migrated, (4) oldest evidence, and spill the
-#      rest to r8.
-#      r7 window (this round): CORRECTNESS_r06 was 50/50 green, so the
-#      window executes the plan above verbatim — the dedup family
-#      rotates together with the round_fixed migration of its shared
-#      callees (shingle_pairs_jaccard / minhash_lsh_pairs — the LAST
-#      F.round family), the five solo F.round stragglers (a6, a11,
-#      a13, f16, text_repetition_ratio) migrate while rotated in, all
-#      8 displaced carries + streaming_static_join re-verify, and
-#      every remaining r6 debut gets its external debut.  That seats
-#      42; the tail slots go to r7 debuts.  NOT in this window
-#      (externally green r6, fingerprint-pinned, locally swept):
-#      everything CORRECTNESS_r06 just verified.
-#      NEVER EXTERNALLY VERIFIED after r7 (r7 debuts registered
-#      outside the window under the new-query exemption; all
-#      sf0.01 + sf0.001 oracle-green locally) — the r8-window
-#      candidates, in rough priority (largest algorithmic surface
-#      first): text_bpe_train + text_bpe_encode (shared train
-#      chain — rotate together), curation_dsir_weights,
-#      text_tfidf_cosine_pairs, sim_hard_negatives +
-#      sim_knn_accuracy (shared _directed_lsh_scored — rotate
-#      together), sim_ivf_recall (composes sim_ivf_topk +
-#      sim_cosine_topk oracles), ts_ewma_last8 + streaming_ewma
-#      (shared oracle), ts_cusum_alarm + streaming_cusum (shared
-#      oracle), emb_standardize, dedup_winnow_pairs (shares
-#      winnow_fingerprints with in-window text_winnow_fingerprints),
-#      j22_returned_item_revenue, a32_custdist,
-#      j23_sales_opportunity, plus the wave-1/2 r7 debuts already
-#      listed in QUERIES.md (graph_kcore, dedup_minhash_merge,
-#      dq_referential_integrity, j14_interval_overlap,
-#      sample_weighted_k_per_group, emb_centroid_drift,
-#      text_zipf_fit, streaming_ohlc, j18_asof_join_forward,
-#      text_source_similarity, dq_drift_ks, j19_volume_shipping,
-#      j20_market_share, rec_copurchase_lift, j21_cdc_apply,
-#      dedup_containment_pairs, text_winnow_fingerprints*,
-#      dedup_contaminated_spans*, sample_stratified_exact*,
-#      sim_exact_vector_dup*, text_token_entropy*,
-#      ts_resample_ohlc*, events_type_pmi* — the *-marked eight
-#      already sit in the r7 window tail).  Late-r7 wave-9/10 debuts
-#      (also never externally verified; local oracle-green at
-#      sf0.01 + sf0.001): the remaining TPC-H shapes
-#      j24_min_cost_supplier (Q2), a33_order_priority_late (Q4),
-#      a34_forecast_revenue (Q6), j25_product_profit (Q9),
-#      a35_important_parts (Q11), j26_late_shipment_priority (Q12),
-#      a36_promo_revenue_share (Q14), j27_top_supplier (Q15),
-#      a37_supplier_part_breadth (Q16), j28_small_qty_revenue (Q17),
-#      a38_disjunctive_revenue (Q19), j29_dominant_suppliers (Q20),
-#      j30_waiting_suppliers (Q21) — the TPC-H Q1-Q22 shape surface
-#      is now CLOSED — plus sample_kcenter_diversity, sim_mmr_rerank
-#      (unrolled greedy oracles), graph_adamic_adar,
-#      graph_lpa_communities (unrolled synchronous rounds),
-#      events_user_stickiness, events_cohort_ltv, events_user_features,
-#      ts_seasonality_profile, w8_percent_rank_cume, a39_grouped_corr,
-#      curation_mixture_report, dedup_cluster_size_profile, and the
-#      evaluation trio dedup_lsh_recall (MinHash-LSH candidate recall
-#      vs exact-Jaccard truth), text_retrieval_ndcg (graded NDCG@10 of
-#      the BM25 ranking), streaming_cms_estimates (CMS as streaming
-#      aggregation state, value-checked by a31's batch oracle),
-#      streaming_hll_distinct (per-(type, day) HLL sketches as
-#      streaming state, a17's oracle), streaming_kll_quantiles
-#      (a16's sketch built by the stream), curation_attrition_funnel
-#      (the reference's attrition idiom over the curation stages),
-#      curation_budget_select, curation_dsir_sample (Gumbel top-k
-#      resampling over the verified weights — rotate with
-#      curation_dsir_weights, shared oracle text), a40_grouping_sets,
-#      a41_yoy_growth (TPC-DS Q4/Q11 as LAG over the yearly
-#      aggregate), dq_uniqueness_report, sim_mips_topk,
-#      sim_range_search (when-guard fix shape), emb_norm_profile,
-#      graph_bfs_levels, graph_degree_distribution,
-#      s13_compaction_roundtrip, events_value_gini,
-#      events_anomaly_seasonal, dedup_minhash_calibration (rotate
-#      with dedup_lsh_recall — both compose the minhash + exact
-#      oracles), a42_top_customer_share, ts_autocorr_lag1,
-#      s14_text_source_roundtrip, s15_dpp_partitioned_join (the
-#      dynamicpruning plan invariant is pinned in test_plans).
-#      More debuts
-#      than one window: spill by the standard priority rule (drift >
-#      flagships > shared-callee groups > oldest evidence).
-#      LATENT-BUG ROTATION (r8, found by sim_ivf_recall's
-#      adversarial run): brute_force_topk / ivf_topk
-#      (operators/similarity.py) crash on zero-norm corpus vectors
-#      under ANSI (DIVIDE_BY_ZERO in cosine) — the near-dup
-#      operator's exclusion contract never reached them.  Fix the
-#      operators + their oracles (_cosine_oracle_topk, _ivf_oracle,
-#      _lsh_bucket_topk_oracle) in r8 and rotate sim_cosine_topk,
-#      sim_ivf_topk, sim_lsh_bucket_topk(+indexed), sim_batch_ann_topk
-#      into that window TOGETHER (shared-callee rule).  Until then
-#      sim_ivf_recall carries its own exclusion on both sides.
-#      MECHANISM (pinned down by sim_range_search's adversarial run,
-#      late r7): a norm>0 PRE-FILTER does not protect the division —
-#      CombineFilters merges it with any later filter on the cosine
-#      and codegen subexpression elimination evaluates the division
-#      before the AND short-circuits.  The fix shape is the
-#      WHEN-GUARD (division inside F.when(norm>0, ...), NULL rows
-#      dropped by the downstream compare), as now implemented in
-#      sim_range_search.  (A pre-filter with NO later filter on the
-#      cosine — mmr_rerank's shape — is safe: the division lives in
-#      the projection, which only sees surviving rows.)
-#      r8 window (this round): CORRECTNESS_r07 was 50/50 green, so the
-#      window executes the r7→r8 plan: (1) the LATENT-BUG ROTATION —
-#      the five pinned cosine top-k queries rotate TOGETHER with the
-#      when-guard fix (cosine_guarded in functions/vectors.py; wired
-#      into brute_force_topk / ivf_topk / lsh_bucket_topk(+indexed)
-#      and the batch-ANN scoring) and the self-dot WHERE guards in
-#      _cosine_oracle_topk / _ivf_oracle / _lsh_bucket_topk_oracle /
-#      _batch_ann_oracle; sim_ivf_recall (composes the fixed oracles)
-#      and sim_range_search (the proven fix shape) debut beside them;
-#      the whole family is additionally parity-checked on the
-#      zero-norm adversarial corpus (test_adversarial_embeddings).
-#      (2) The flagship's last F.round (pct_flagged, the r5 midpoint
-#      class) migrates to round_fixed inside its standing slot —
-#      zero F.round sites remain in non-test source.  (3) The other
-#      41 slots DRAIN THE 80-QUERY EXTERNAL-EVIDENCE BACKLOG by the
-#      standard priority rule: shared-callee debut groups rotate
-#      together (bpe pair, ewma pair, cusum pair, directed-LSH pair,
-#      streaming-sketch trio, DSIR pair, winnow pair-half, the
-#      minhash-evaluation pair), then oldest evidence (the r7
-#      wave-1/2 debuts), then the S13–S15 IO roundtrips whose
-#      external rows were pending.  Debut velocity is capped (~15
-#      new registrations this round) so the r9 window can close the
-#      remaining ~37-name queue.
-#      NOT in this window (externally green ≤ r7, fingerprint-pinned,
-#      locally swept): everything CORRECTNESS_r07 just verified, and
-#      the r7-green carries.
-#      NEVER EXTERNALLY VERIFIED after r8 — the r9-window queue
-#      (44 names = the 37 backlog names the 50-slot window could not
-#      seat + the 7 r8 debuts), in the standard priority order
-#      (drift > flagships > shared-callee groups > oldest evidence):
-#        * the closed TPC-H wave (oldest first): j24_min_cost_supplier,
-#          a33_order_priority_late, a34_forecast_revenue,
-#          j25_product_profit, a35_important_parts,
-#          j26_late_shipment_priority, a36_promo_revenue_share,
-#          j27_top_supplier, a37_supplier_part_breadth,
-#          j28_small_qty_revenue, a38_disjunctive_revenue,
-#          j29_dominant_suppliers, j30_waiting_suppliers;
-#        * wave-10+ debuts: sample_kcenter_diversity,
-#          graph_adamic_adar, events_user_stickiness,
-#          w8_percent_rank_cume, ts_seasonality_profile,
-#          events_cohort_ltv, a39_grouped_corr, graph_lpa_communities,
-#          events_user_features, a40_grouping_sets, a41_yoy_growth,
-#          dq_uniqueness_report, graph_bfs_levels, events_value_gini,
-#          events_anomaly_seasonal, graph_degree_distribution,
-#          a42_top_customer_share, ts_autocorr_lag1, sim_mmr_rerank,
-#          curation_mixture_report, dedup_cluster_size_profile,
-#          text_retrieval_ndcg, curation_attrition_funnel,
-#          curation_budget_select;
-#        * r8 debuts (all sf0.001+sf0.01 oracle-green locally,
-#          adversarial-swept): ts_holt_linear, w9_user_streaks,
-#          events_interarrival_profile, graph_neighbor_jaccard,
-#          dedup_corpus_overlap_hll, curation_pack_efficiency,
-#          emb_quantile_clip;
-#        * displaced from the r8 window by the late-r8 sweep-find
-#          drift (sim_exact_vector_dup, f17_json_extract,
-#          text_chunk_documents, a12, j9 rotated in instead):
-#          text_tfidf_cosine_pairs, dedup_minhash_merge,
-#          text_zipf_fit, j18_asof_join_forward,
-#          text_source_similarity, j14_interval_overlap (yielded to
-#          the a16 empty-input-contract drift);
-#        * streaming_holt (late-r8 twin debut — rotate WITH
-#          ts_holt_linear, shared oracle, if either drifts);
-#        * sim_cluster_purity (late-r8 evaluation debut — its oracle
-#          embeds the unrolled-Lloyd CTE chain, so rotate WITH
-#          emb_kmeans_lloyd if the kmeans family ever drifts).
-#      That queue is 52 names + flagship/curation = 54: FOUR names
-#      spill past r9's window — pick the spills by lowest priority
-#      (or let any r9 drift decide); r10's carry stays a handful,
-#      queue effectively closed by r10.
-#      QUEUED EMPTY-INPUT FIXES (r8 empty-corpus sweep triage; each
-#      crashes ONLY on a fully empty documents table, so severity is
-#      far below the zero-norm class — fix WHEN each rotates, never
-#      before, to avoid burning extra window slots):
-#        * text_bm25_topk / text_retrieval_ndcg — the driver-side
-#          avgdl/corpus-stats splice collects None on an empty
-#          corpus; fix shape: bail to the typed empty result when
-#          the stats row is NULL (the mergeable_quantile_profile
-#          empty-input contract, operators/aggregates.py).
-#        * curation_attrition_funnel — stage percentage divides by a
-#          zero first-stage count; fix shape: when-guard the ratio
-#          (the dedup_lsh_recall treatment).
-#      r9 window (this round): CORRECTNESS_r08 was 50/50 green, so the
-#      window drains the 52-name queue while seating this round's
-#      mechanical drift — the r8 verdict's scale fixes, each landed
-#      WITH its rotation:
-#        * tail-fold state bound (verdict #1): ewma_last /
-#          holt_linear_last pre-truncate map-side via _tail_truncated
-#          (operators/timeseries.py — per-key state ≤ tail at any
-#          history length; equivalence pinned by
-#          tests/test_tail_truncation.py) → ts_ewma_last8 rotates,
-#          ts_holt_linear debuts on the fixed form.  cusum_alarms is
-#          UNCHANGED by design: its full history is semantic (every
-#          value moves the reset state), the at-scale path is the
-#          streaming twin's 16-byte state (module docstring +
-#          SCALING.md record) — so ts_cusum_alarm/streaming_cusum
-#          do not drift and keep their fresh r8 rows.
-#        * empty-corpus fixes (verdict #3): bm25_topk's typed-empty
-#          bail (shared by text_bm25_topk + text_retrieval_ndcg) and
-#          curation_attrition_funnel's when-guarded ratios (both
-#          engines carry the guard); crash_sweep's KNOWN_EMPTY_LIMITS
-#          is now EMPTY and tests/test_empty_corpus_contracts.py pins
-#          the behavior.
-#        * unbounded-broadcast fixes (verdict #4): the F.broadcast(deg)
-#          hints dropped from graph_neighbor_jaccard (AQE decides;
-#          per-part counts are an unbounded dimension) and the same
-#          shape fixed in rec_copurchase_lift (broadcast the ≤20-row
-#          top side instead of the per-part cnt side);
-#          graph_adamic_adar reviewed — no hint to drop.  The
-#          full-grep audit then widened the fix to EVERY in-window
-#          TPC-H shape: customer/supplier/part are corpus-SCALING
-#          dimensions (billions of rows at 100 TB), so their hints
-#          came off in j24/j25/j27/j28/j29/j30/a35/a36/a37/a38
-#          (nation/region/1-row scalars keep theirs; AQE still
-#          broadcasts the small sides at test SF — bench-verified
-#          free).  The SAME class remains in SIX queries that are
-#          externally green and OUTSIDE this window — j15/j16/j17
-#          (F.broadcast(c)), j19/j20 (c + s), j22 (full customer
-#          broadcast onto a 20-row top — flip to F.broadcast(top)),
-#          and events_last_touch_attribution
-#          (value_by_purchase scales with events) — fix-on-rotation
-#          in r10, fix shape proven on the 10 sibling queries this
-#          round.
-#        * streaming chunk-order fix (ADVICE r8 #4): holt + ewma
-#          _update_user now concat all Arrow chunks per key BEFORE the
-#          (ts, event_id) sort (per-chunk sorts do not compose);
-#          streaming_cusum keeps the old form until its r10 rotation
-#          to avoid burning two extra slots on an un-drifted pair.
-#      Window = flagship + curation + the 4 out-of-queue drift names
-#      (ts_ewma_last8, streaming_ewma, text_bm25_topk,
-#      rec_copurchase_lift) + 44 queue names (the 5 drifted queue
-#      members seat first).  EIGHT names spill to r10 (lowest
-#      priority): the 6 sweep-displaced r7 debuts
-#      (text_tfidf_cosine_pairs, dedup_minhash_merge, text_zipf_fit,
-#      j18_asof_join_forward, text_source_similarity,
-#      j14_interval_overlap), sim_cluster_purity (deliberately held
-#      for r10 so the kmeans family rotates TOGETHER with the planned
-#      _lloyd_centroids merge + k-clamp, ADVICE r8 #2/#3, alongside
-#      emb_kmeans_lloyd), and emb_quantile_clip (last r8 debut).
-#      ALSO QUEUED FOR r10 (fix WHEN rotated, with their families):
-#        * streaming_cusum + ts_cusum_alarm — the chunk concat-sort
-#          fix (mirrors this round's holt/ewma change);
-#        * cosine-family NaN guard (ADVICE r8 #1): extend
-#          cosine_guarded to finite self-dots (~F.isnan(daa) etc.)
-#          with matching oracle predicates — rotates the five pinned
-#          top-k queries together.  SHAPE VERIFIED cross-engine in a
-#          late-r9 scratch run: a NaN-component vector passes the
-#          current daa>0 guard in BOTH engines (NaN>0 is true in
-#          Spark comparisons AND DuckDB CASE) and ranks FIRST under
-#          ORDER BY cos_sim DESC; `& ~F.isnan(daa)` ↔
-#          `AND NOT isnan(daa)` excludes it identically on both
-#          sides (the NULL then falls to the standing isNotNull
-#          drop).  Add a NaN-component vector to the adversarial
-#          embeddings corpus when the family rotates;
-#        * kmeans _lloyd_centroids merge + k-clamp (ADVICE r8 #2/#3)
-#          — rotates emb_kmeans_lloyd + sim_cluster_purity.
-#        * grouped_topk_partial (operators/windows.py) → the JVM
-#          WindowGroupLimit form (r9 finding: Catalyst rewrites a
-#          row_number<=k filter into a Partial/Final rank-limit pair
-#          that truncates each partition BEFORE the exchange — the
-#          same map-side bound as the hand-rolled mapInPandas stage
-#          with zero Python; proven on the ewma/holt tail folds this
-#          round, probe + plan pins in tests/test_plans.py).
-#          Migrating it rotates its callers sim_batch_ann_topk,
-#          sample_k_per_group, sample_weighted_k_per_group together
-#          (shared-callee rule) and shrinks the ARROW_DECLARED
-#          exemption list in test_plans.py by three.  DE-RISKED by a
-#          scratch prototype on the batch-ANN shape at sf0.1 (late
-#          r9, SCALING.md): identical 40 rows, 1.63s vs 2.07s
-#          (-21%), WindowGroupLimit pair in the plan.
-#        * scaling-dim broadcast hints in j15/j16/j17/j19/j20/j22 and
-#          events_last_touch_attribution (see the r9 window notes
-#          above) — drop c/s hints, flip j22 to F.broadcast(top);
-#          rotate each with its fix (shape proven on the 10 sibling
-#          queries this round).
-#      With the 8 spilled names + those families, the r10 window is
-#      ~30 names — the external-evidence queue effectively closes.
-#      r10 window (this round): CORRECTNESS_r09 was 50/50 green, so
-#      the window executes the written r9→r10 plan — all five queued
-#      fix-families landed WITH their rotations, plus what the
-#      NaN-hardened adversarial corpus flushed out:
-#        * cosine NaN guard (verdict #3): cosine_guarded now requires
-#          finite self-dots (~F.isnan(daa) & ~F.isnan(dbb)); matching
-#          NOT isnan legs in _cosine_oracle_topk / _ivf_oracle (incl.
-#          the NaN-poisoned-centroid exclusion) /
-#          _lsh_bucket_topk_oracle / _batch_ann_oracle /
-#          _ivf_recall_oracle's excluded view + sim_ivf_recall's
-#          pre-filter → the five pinned top-k queries +
-#          sim_ivf_recall rotate together.
-#        * the NaN-component vector added to the adversarial
-#          embeddings corpus (as planned) flushed FOUR more latent
-#          NaN divergences, each fixed with its rotation:
-#          sim_quantized_topk (floor(NaN) has no int8 code — vectors
-#          with NaN max|x| excluded from the index both sides),
-#          sim_mmr_rerank (NaN rel ranked FIRST into the pool, then
-#          crashed the driver-side floor — isnan legs on the
-#          query-pick and pool filters, both engines),
-#          emb_top_component + emb_remove_top_component (one garbage
-#          vector turned the corpus' dominant direction into NaN and
-#          crashed the driver floor-round — the second-moment scan
-#          now excludes non-finite gram-slices both sides; the
-#          remove-top PROJECTION still covers every row),
-#          emb_quantile_clip (percentiles over finite components
-#          only — the engines disagree where NaN sorts inside a
-#          percentile; NaN components pass through unclipped).
-#        * kmeans family (verdict #4): kmeans_lloyd /
-#          kmeans_assignments merged through _lloyd_centroids with
-#          the k-clamp (1..k-1-row corpora return len(centroids)
-#          clusters; empty corpora return the typed empty result;
-#          tests/test_analytics.py pins both) → emb_kmeans_lloyd +
-#          sim_cluster_purity rotate together (purity's first
-#          external row).
-#        * grouped_topk_partial → the JVM WindowGroupLimit form
-#          (verdict #5, de-risked in r9's SCALING probe, −21%): the
-#          mapInPandas stage deleted; callers sim_batch_ann_topk,
-#          sample_k_per_group, sample_weighted_k_per_group rotate
-#          together; test_plans' ARROW_DECLARED list shrank by three
-#          and the WindowGroupLimit pair is pinned for all callers.
-#        * streaming CUSUM chunk concat-sort (verdict #2 / ADVICE
-#          r9 #2): streaming/cusum.py now concats all Arrow chunks
-#          per key BEFORE the (ts, event_id) sort, mirroring the
-#          r9 holt/ewma fix; tests/test_streaming_chunk_order.py
-#          gained a CUSUM pin whose value set makes the broken
-#          per-chunk composition fire a spurious ALARM (nonlinear
-#          reset = worst-case order sensitivity) → streaming_cusum +
-#          ts_cusum_alarm (shared oracle) rotate together.
-#        * scaling-dimension broadcast hints (verdict #1): dropped in
-#          j15/j16/j17 (customer), j19/j20 (customer+supplier); j22
-#          flipped to F.broadcast(top) (the bounded 20-row side);
-#          events_last_touch_attribution's value_by_purchase
-#          un-hinted; rec_copurchase_lift re-hints its still-bounded
-#          first-join output on the part_b join (ADVICE r9 #4 —
-#          hints do not propagate through join outputs).
-#        * tail-fold truncation tiebreaker (ADVICE r9 #1):
-#          _tail_truncated's window now tiebreaks on value_col DESC,
-#          so a violated unique-trailing-order-column contract still
-#          truncates a deterministic SET → ts_ewma_last8 +
-#          streaming_ewma + ts_holt_linear + streaming_holt rotate
-#          (shared oracles; pinned in tests/test_tail_truncation.py).
-#        * the vacuous per-part-count broadcast pin (ADVICE r9 #3)
-#          was rewritten against the LOGICAL plan's JoinHints (the
-#          old physical fragment could never match expr-id suffixes,
-#          and tiny-SF statistics LEGITIMATELY broadcast unhinted
-#          sides) — test-only, no fingerprint effect.
-#      Window = flagships + the 26 drifted + 3 shared-oracle twins
-#      (streaming_ewma, streaming_holt, ts_cusum_alarm) + the 6
-#      remaining never-externally-green names + 13 evidence-refresh
-#      padders (the oldest r1-era rows).  With this window the
-#      external-evidence queue CLOSES: cumulative coverage reaches
-#      272/272.
-#
-#   r11 queue (written at r10 build time): the five media-decode
-#      debuts (media_image_decode_stats, media_image_resize_nn,
-#      media_audio_decode_stats, media_gif_frame_stats,
-#      media_jpeg_decode_stats — queries_media.py, real
-#      PNG/BMP/WAV/GIF/JPEG codecs) registered
-#      OUTSIDE the window per the brand-new-query exemption
-#      (local-oracle-green from their first commit, adversarial-swept,
-#      hostile negative-id parity verified).  They take their external
-#      debut in the r11 rotation alongside whatever r10 drift the
-#      driver flags; everything else r10 touched is already seated
-#      above.
-#      r11 window (this round): CORRECTNESS_r10 was 50/50 green, so the
-#      window executes the written r10→r11 plan — the five media
-#      debuts take their first external rows (cumulative external
-#      coverage reaches 277/277: full-catalog closure), and every
-#      remaining slot burns down the oldest standing evidence:
-#        * media five (queries_media.py).  The r10 ADVICE fixes land
-#          WITH this rotation (fix-on-rotation rule): gif _lzw_decode
-#          raises the documented ValueError instead of a bare KeyError
-#          on a corrupt first-code-after-clear; the JPEG marker walk
-#          skips spec-legal 0xFF fill bytes and standalone TEM/RST
-#          markers; PNG Sub/Up/Average/Paeth filter reconstruction is
-#          vectorized (Up/None whole-row numpy, Sub/Average/Paeth
-#          column-strided — foreign PNGs no longer hit per-byte Python
-#          loops); the duplicate `from .media import` in
-#          synth_gif_corpus merged.  All four drift only the media
-#          five (verified by the fingerprint diff).
-#        * evidence refresh, strictly oldest-first: the four r1 rows
-#          (p4, u2, u3, w2), the one r2 row (s1), all 26 r3 rows
-#          (dedup basics, multimodal meta quartet, text basics,
-#          u1/w1/l3/j8/a4/f9/f11/p12b/pack/sample/sessionize/split),
-#          and 12 of the 18 r4 rows (the j1–j7 join family + a1, a2,
-#          a3, a7, a9).  Spill to r12: a10_grouped_distinct +
-#          the p-family (p5, p6_p7, p9, p10, p12) — the youngest of
-#          the r4 cohort, all fingerprint-pinned and locally swept.
-#      NEW THIS ROUND (registered outside the window under the
-#      brand-new-query exemption, r12 debut queue): the media-dedup
-#      surface over decoded content (operators/phash.py) —
-#      media_pixel_dup_groups (exact cross-format image dedup),
-#      media_ahash_dedup_groups (perceptual average-hash groups),
-#      media_dhash_hamming_pairs (difference-hash near-dup pairs via
-#      the lossless chunk-pair blocking), media_phash_dedup_groups
-#      (group-output survivor labeling over the signature graph),
-#      media_audio_dup_groups (decoded-PCM exact dedup),
-#      media_gif_frame_dup_groups (frame-level dedup across
-#      animations), media_dedup_compaction (signature-layer
-#      evaluation), media_curation_pipeline (decode -> survivor ->
-#      quality band, the LAION-style keep-list) — plus
-#      text_hybrid_rrf (BM25 + cosine reciprocal-rank fusion, the RAG
-#      retrieval shape; scoped determinism + adversarial + empty
-#      checks green).  All nine are local-oracle-green at
-#      sf0.001+sf0.01 from their first commit; the media eight are
-#      hostile-id adversarial-swept (tests/test_adversarial_media.py)
-#      and empty-corpus pinned.
-#      r12 window (this round): CORRECTNESS_r11 was 50/50 green, so the
-#      window executes the written r11→r12 plan — the nine r11 debuts
-#      take their first external rows (cumulative coverage closes at
-#      286/286), and this round's mechanical drift rides along:
-#        * Adam7-interlaced PNG decode landed in operators/media.py
-#          (png_encode(interlace=)/seven-pass _png_decode_inner via the
-#          extracted _unfilter), which drifts every png-consuming
-#          query: the six phash image queries (already seated as
-#          debuts) + media_image_decode_stats + media_image_resize_nn.
-#        * the ADVICE r11 oracle fix (zero-norm/NaN query-vector guard
-#          in _hybrid_rrf_oracle's sem CTE) drifts text_hybrid_rrf —
-#          already seated as a debut.
-#        * evidence refresh: the six spilled r4 rows (a10 + p-family),
-#          the entire 17-name r5 cohort, and the 14 oldest r6 rows
-#          (flagship-adjacent OMOP pair, the five streaming queries,
-#          the w3-w6 window family, a15/a17/j10).
-#      NEW THIS ROUND (registered outside the window under the
-#      brand-new-query exemption; r13 debut queue):
-#      media_png_interlaced_stats (Adam7 decode verified by
-#      position-weighted sums), media_hamming_calibration (precision/
-#      recall sweep of dHash Hamming thresholds vs family truth),
-#      text_hybrid_weighted_rrf (weighted reciprocal-rank fusion),
-#      media_jpeg_progressive_stats (SOF2 Annex G decode — DC
-#      first/refine, AC first with EOB runs, AC refinement — shares
-#      the baseline oracle, since progressive is a different entropy
-#      coding of the same quantized coefficients),
-#      media_png_palette_stats (color-type-3 PLTE decode at bit depth
-#      4: sub-byte MSB-first unpacking composed with Adam7 for even
-#      keys; position-weighted sums of the EXPANDED RGB), and
-#      media_jpeg_restart_stats (DRI + cyclic RSTn resync with DC
-#      prediction resets; framing-only change, shares the baseline
-#      oracle), and media_ahash_calibration (the aHash twin of the
-#      dHash threshold sweep — the two curves read side by side).
-#      STILL ON r6 EVIDENCE after this round (first picks for r13):
-#      a20_grouped_regression, a21_histogram_totalprice,
-#      a23_incremental_rollup, a24_key_skew_profile,
-#      a25_winsorized_stats, a27_pricing_summary, a28_unpivot_priority,
-#      cust_rfm_segments, dq_drift_kl, emb_gram_matrix,
-#      emb_label_centroids, events_anomaly_zscore, events_funnel,
-#      events_path_transitions, graph_pagerank_transitions,
-#      j10_asof_join, j11_range_join, s2_sink_partitioned_roundtrip,
-#      s6_catalog_schema_contract, sim_cosine_near_dup,
-#      sim_pq_adc_topk, sim_semdedup, text_decontaminate,
-#      text_lm_bigram_score, text_quality_score.
-#
-#   r13 window (this round): CORRECTNESS_r12 was 50/50 green, so the
-#      window executes the written r12→r13 plan — the seven r12
-#      debuts take their first external rows (cumulative external
-#      coverage closes at 293/293, full-catalog closure for the
-#      second time), and this round's drift rides along:
-#        * chroma-subsampled JPEG (4:2:0/4:2:2) restructured both
-#          entropy codings to MCU-interleaved block order
-#          (operators/jpeg.py), drifting every jpeg-consuming query;
-#          the three ADVICE r12 fixes (DC-scan Ta=0, fill-before-RSTn
-#          tolerance, grayscale replicate in image_position_stats)
-#          land WITH this rotation per the fix-on-rotation rule.
-#        * PNG bit depth 16 (big-endian sample pairs, uint16
-#          reconstruction) + tRNS transparency (palette alpha table
-#          AND grey/RGB color-key forms) extend png_encode/
-#          _png_decode_inner, drifting every png-consuming query —
-#          all already seated as debuts or drift riders.
-#      NEW THIS ROUND — seated INSIDE the window (slots were free, so
-#      these take their external row immediately instead of queuing
-#      for r14): media_jpeg_subsampled_stats (mixed 420/422 corpus,
-#      closed-form chroma-decimation oracle), media_calibration_select
-#      (argmax-F1 / recall-at-precision-floor operating point over
-#      both calibration curves), media_png_16bit_stats (full-range
-#      16-bit decode, position-weighted), media_png_trns_stats (both
-#      tRNS forms, position-weighted alpha), media_png_graya_stats
-#      (color type 4, mixed 8/16-bit — completes the IHDR color-type
-#      matrix), media_png_subbyte_stats (depth-1/2/4 greyscale with
-#      exact ×255/85/17 sample scaling — completes the bit-depth
-#      matrix).
-#      Evidence refresh fills the rest: the full 25-name r6 queue
-#      (above) — j10_asof_join finally rotates after two
-#      displacements.
 _FRONT: list[str] = [
     # flagship + headline extension pipeline (always externally gated)
     "flagship_cohort_pipeline",
     "curation_pipeline",
-    # --- r13 debuts: the seven r12-registered queries (the only
-    # names without an external row in any prior round) ---
-    "media_png_interlaced_stats",
-    "media_png_palette_stats",
-    "media_jpeg_progressive_stats",
-    "media_jpeg_restart_stats",
-    "media_hamming_calibration",
-    "media_ahash_calibration",
+    # codelist-filter docstrings rewritten for the one IN (...) path
+    "p9_codelist_isin",
+    "j8_broadcast_codelist_join",
+    # evidence refresh
     "text_hybrid_weighted_rrf",
-    # --- mechanical drift riders (jpeg.py subsampling restructure +
-    # media.py 16-bit/tRNS decode path) ---
-    "media_pixel_dup_groups",
-    "media_ahash_dedup_groups",
-    "media_dhash_hamming_pairs",
-    "media_phash_dedup_groups",
-    "media_dedup_compaction",
-    "media_curation_pipeline",
-    "media_image_decode_stats",
-    "media_image_resize_nn",
-    "media_jpeg_decode_stats",
-    # --- r13-registered queries, seated in-window immediately ---
-    "media_jpeg_subsampled_stats",
-    "media_calibration_select",
-    "media_png_16bit_stats",
-    "media_png_trns_stats",
-    "media_png_graya_stats",
-    "media_png_subbyte_stats",
-    "media_audio_depth_stats",
-    # --- drift riders: the WAV 8/24/32-bit decode extension touches
-    # wav_encode/wav_decode, shared by both audio queries; the GIF
-    # GCE-transparency decode touches gif_decode, shared by both GIF
-    # queries ---
-    "media_audio_decode_stats",
-    "media_audio_dup_groups",
-    "media_gif_frame_stats",
-    "media_gif_frame_dup_groups",
-    # --- evidence refresh: the entire 25-name r6 queue ---
     "a20_grouped_regression",
     "a21_histogram_totalprice",
     "a23_incremental_rollup",
     "a24_key_skew_profile",
     "a25_winsorized_stats",
-    # r13-OPTIMIZATION slots (second batch): these two queries' own
-    # bodies changed (curation_attrition_funnel — barrier-pinned
-    # *_from scoring + persisted scored frame + single-pass exact
-    # dedup; graph_bfs_levels — seed probe rewritten as one aggregation
-    # over the distinct (order, part) projection, replacing the eager
-    # pair self-join probe job (the edge-persist variant was measured
-    # SLOWER and rejected); see
-    # OPTIMIZATION_r13.md), and own-source changes must be externally
-    # gated.  They take the refresh slots a27_pricing_summary and
-    # a28_unpivot_priority held (both drop to the r14 refresh queue
-    # with the four names below — the optimization round's external
-    # gate re-runs the full catalog anyway).
     "curation_attrition_funnel",
     "graph_bfs_levels",
     "cust_rfm_segments",
@@ -673,20 +84,9 @@ _FRONT: list[str] = [
     "j10_asof_join",
     "j11_range_join",
     "s2_sink_partitioned_roundtrip",
-    # r13-OPTIMIZATION slot: a14's own body changed (the mixed
-    # distinct/sketch aggregation split — OPTIMIZATION_r13.md §7), and
-    # own-source changes must be externally gated; it takes the
-    # refresh slot s6_catalog_schema_contract held (s6 drops to the
-    # r14 refresh queue with the four names below — the optimization
-    # round's external gate re-runs the full catalog anyway).
     "a14_sketch_profile",
     "sim_cosine_near_dup",
     "text_quality_score",
-    # (text_decontaminate, text_lm_bigram_score, sim_pq_adc_topk,
-    # sim_semdedup spill to the r14 refresh queue — displaced by the
-    # WAV-depth and GIF-transparency drift riders; a27_pricing_summary
-    # and a28_unpivot_priority join them, displaced by the two
-    # r13-optimization seats above)
 ]
 
 # Driver window size (observed: the external gate samples the first 50

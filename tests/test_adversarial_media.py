@@ -27,38 +27,19 @@ MEDIA_QUERIES = [
     "media_image_decode_stats",
     "media_image_resize_nn",
     "media_audio_decode_stats",
-    "media_gif_frame_stats",
-    "media_jpeg_decode_stats",
-    "media_pixel_dup_groups",
-    "media_ahash_dedup_groups",
-    "media_dhash_hamming_pairs",
-    "media_audio_dup_groups",
-    "media_gif_frame_dup_groups",
-    "media_phash_dedup_groups",
-    "media_dedup_compaction",
-    "media_curation_pipeline",
-    # r12 codec-matrix debuts
     "media_png_interlaced_stats",
     "media_png_palette_stats",
-    "media_jpeg_progressive_stats",
-    "media_jpeg_restart_stats",
-    "media_hamming_calibration",
-    "media_ahash_calibration",
-    # r13 codec-matrix debuts
-    "media_jpeg_subsampled_stats",
-    "media_calibration_select",
     "media_png_16bit_stats",
     "media_png_trns_stats",
     "media_png_graya_stats",
     "media_png_subbyte_stats",
     "media_audio_depth_stats",
     "media_bmp_variant_stats",
-    "media_gif_transparency_stats",
     "media_audio_stereo_stats",
 ]
 
-# negative, zero, huge, and 2^31-straddling ids; enough ids in a small
-# range that the dedup/near-dup queries still form groups and pairs
+# negative, zero, huge, and 2^31-straddling ids, plus two small
+# contiguous ranges
 _HOSTILE_IDS = (
     [-1, -7, -20, -2_147_483_648, -2_147_483_649, 0]
     + [2**40 + i for i in range(25)]

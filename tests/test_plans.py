@@ -23,6 +23,56 @@ from hypertension_dashboard_pipeline_spark import registry
 registry.load_all()
 
 
+# Declared exceptions to the whole-registry plan sweeps below; each
+# entry names a registered query and says why it is allowed.
+BROADCAST_PRODUCT_DECLARED = {
+    "sim_batch_ann_topk",  # 8-row query batch × corpus, by design
+    "a24_key_skew_profile",  # 10-row top-k × 1-row totals, by design
+    "cust_rfm_segments",  # 1-row scalar sides (global max date, quartile cuts) — the scalar-subquery compile shape
+    "ts_gap_fill_locf",  # 1-row scalar side (global horizon date)
+    "graph_pagerank_transitions",  # 1-row scalar sides (node count N, dangling mass) per iteration
+    "text_lm_bigram_score",  # 1-row scalar side (vocabulary size V)
+    "a26_equidepth_histogram",  # 1-row scalar side (decile cut points)
+    "dq_drift_kl",  # 1-row scalar side (global event count n)
+    "ts_gap_fill_interpolate",  # 1-row scalar side (global horizon date)
+    "a29_heavy_hitters_sampled",  # 1-row scalar side (global count N), twice
+    "dq_drift_psi",  # day-grid x |event types| dense scaffold (bounded) + 1-row total
+    "text_tfidf_top_terms",  # 1-row scalar side (document count N)
+    "graph_triangle_count",  # 1-row scalar sides (mean-weight threshold; tri x wedges final join)
+    "dq_referential_integrity",  # 1-row scalar sides (n_child x n_orphans per audited relationship)
+    "events_type_pmi",  # 1-row scalar side (global distinct-user count N)
+    "rec_copurchase_lift",  # 1-row scalar side (order count N) applied AFTER the top-20 truncation
+    "j23_sales_opportunity",  # 1-row scalar side (global avg-balance cutoff) — the Q22 scalar-subquery shape
+    "curation_dsir_weights",  # 64-row bucket stats x 1-row global token totals, by design
+    "text_tfidf_cosine_pairs",  # 1-row scalar side (document count N)
+    "a35_important_parts",  # 1-row scalar side (nation inventory total)
+    "text_retrieval_ndcg",  # 1-row scalar side (corpus relevant count)
+    "curation_dsir_sample",  # inherits dsir_weights' declared 1-row token-totals product
+    "graph_bfs_levels",  # round-1 frontier is a 1-row literal seed (constant-folded join key)
+    "dedup_corpus_overlap_hll",  # |sources|² pair stage over the ~20-row KB-sized sketch relation, by design (no row data crosses it)
+}
+
+ARROW_DECLARED = {
+    "udf_pandas_token_count",  # demonstrative pandas_udf
+    # real media codecs: decode IS per-row Python by nature (PIL would
+    # charge the same); the engine-side contract is Arrow batching +
+    # exchange-free plans, pinned by the partition-invariance test in
+    # tests/test_media.py
+    "media_image_decode_stats",
+    "media_image_resize_nn",
+    "media_audio_decode_stats",
+    "media_png_interlaced_stats",
+    "media_png_palette_stats",
+    "media_png_16bit_stats",
+    "media_png_trns_stats",
+    "media_png_graya_stats",
+    "media_png_subbyte_stats",
+    "media_audio_depth_stats",
+    "media_bmp_variant_stats",
+    "media_audio_stereo_stats",
+}
+
+
 @pytest.fixture(scope="module")
 def plan(spark, sf_dir):
     def get(name: str) -> str:
@@ -151,38 +201,9 @@ def test_no_registered_query_plans_a_cartesian_product(spark, sf_dir):
     DECLARED exceptions: a broadcast product against a deliberately
     tiny side is legitimate (a query batch of 8 vectors scored against
     the whole corpus IS per-row work, not a join explosion) — each one
-    must be listed here with its reason, so an accidental product
-    still fails.
+    must be listed in BROADCAST_PRODUCT_DECLARED with its reason, so an
+    accidental product still fails.
     """
-    BROADCAST_PRODUCT_DECLARED = {
-        "sim_batch_ann_topk",  # 8-row query batch × corpus, by design
-        "a24_key_skew_profile",  # 10-row top-k × 1-row totals, by design
-        "cust_rfm_segments",  # 1-row scalar sides (global max date, quartile cuts) — the scalar-subquery compile shape
-        "ts_gap_fill_locf",  # 1-row scalar side (global horizon date)
-        "graph_pagerank_transitions",  # 1-row scalar sides (node count N, dangling mass) per iteration
-        "text_lm_bigram_score",  # 1-row scalar side (vocabulary size V)
-        "a26_equidepth_histogram",  # 1-row scalar side (decile cut points)
-        "dq_drift_kl",  # 1-row scalar side (global event count n)
-        "ts_gap_fill_interpolate",  # 1-row scalar side (global horizon date)
-        "a29_heavy_hitters_sampled",  # 1-row scalar side (global count N), twice
-        "dq_drift_psi",  # day-grid x |event types| dense scaffold (bounded) + 1-row total
-        "text_tfidf_top_terms",  # 1-row scalar side (document count N)
-        "graph_triangle_count",  # 1-row scalar sides (mean-weight threshold; tri x wedges final join)
-        "dq_referential_integrity",  # 1-row scalar sides (n_child x n_orphans per audited relationship)
-        "events_type_pmi",  # 1-row scalar side (global distinct-user count N)
-        "rec_copurchase_lift",  # 1-row scalar side (order count N) applied AFTER the top-20 truncation
-        "j23_sales_opportunity",  # 1-row scalar side (global avg-balance cutoff) — the Q22 scalar-subquery shape
-        "curation_dsir_weights",  # 64-row bucket stats x 1-row global token totals, by design
-        "text_tfidf_cosine_pairs",  # 1-row scalar side (document count N)
-        "a35_important_parts",  # 1-row scalar side (nation inventory total)
-        "text_retrieval_ndcg",  # 1-row scalar side (corpus relevant count)
-        "curation_dsir_sample",  # inherits dsir_weights' declared 1-row token-totals product
-        "graph_bfs_levels",  # round-1 frontier is a 1-row literal seed (constant-folded join key)
-        "dedup_corpus_overlap_hll",  # |sources|² pair stage over the ~20-row KB-sized sketch relation, by design (no row data crosses it)
-        "media_ahash_calibration",  # same shape as media_hamming_calibration below
-        "media_hamming_calibration",  # 7-row threshold list × <=7-row per-hamming histogram inequality join + 1-row truth total — corpus work ends at the histogram aggregate (plan-asserted in scripts/scaling_probe_r12.py)
-        "media_calibration_select",  # the union of the two calibration sweeps above — inherits their declared bounded inequality joins; the selection itself is a window over the <=14-row stacked curve (plan-asserted in scripts/scaling_probe_r13.py)
-    }
     offenders = []
     for name, fn in registry.QUERIES.items():
         if name.startswith("streaming_"):
@@ -218,62 +239,6 @@ def test_no_registered_query_uses_row_python_eval(spark, sf_dir):
     themselves allowed only in the queries declared to use them; the
     rest of the surface must stay entirely JVM-side.
     """
-    ARROW_DECLARED = {
-        "udf_pandas_token_count",          # demonstrative pandas_udf
-        "multimodal_decode_meta",          # mapInPandas plumbing
-        "multimodal_extract_features",
-        "multimodal_resize_meta",
-        "multimodal_frame_sample",
-        # grouped_topk_partial migrated to the JVM WindowGroupLimit
-        # form in r10 — its three callers (sim_batch_ann_topk,
-        # sample_k_per_group, sample_weighted_k_per_group) no longer
-        # carry any Arrow/Python stage
-        # real media codecs (r10): decode IS per-row Python by nature
-        # (PIL would charge the same); the engine-side contract is
-        # Arrow batching + exchange-free plans, pinned by
-        # scripts/scaling_probe_r10.py and the partition-invariance
-        # tests in tests/test_media.py / test_gif.py / test_jpeg.py
-        "media_image_decode_stats",
-        "media_image_resize_nn",
-        "media_audio_decode_stats",
-        "media_gif_frame_stats",
-        "media_jpeg_decode_stats",
-        # perceptual-hash dedup (r11): decode + hash in one Arrow
-        # stage, then pure JVM groupBy / chunk-pair join downstream
-        "media_pixel_dup_groups",
-        "media_ahash_dedup_groups",
-        "media_dhash_hamming_pairs",
-        "media_audio_dup_groups",
-        "media_gif_frame_dup_groups",
-        "media_phash_dedup_groups",
-        "media_dedup_compaction",
-        "media_curation_pipeline",
-        # r12 media extensions: Adam7 decode, progressive JPEG decode,
-        # and the calibration query's signature stage — same Arrow
-        # decode contract, plans pinned in scripts/scaling_probe_r12.py
-        "media_png_interlaced_stats",
-        "media_jpeg_progressive_stats",
-        "media_hamming_calibration",
-        "media_png_palette_stats",
-        "media_jpeg_restart_stats",
-        "media_ahash_calibration",
-        # r13 media extensions: chroma-subsampled JPEG, the PNG IHDR
-        # matrix (16-bit, tRNS, grey+alpha, sub-byte), WAV depth/
-        # stereo, BMP variants, GIF transparency, and the calibration
-        # selection (its corpus work is the two sweeps' signature
-        # stage) — same Arrow decode contract, plans pinned in
-        # scripts/scaling_probe_r13.py
-        "media_jpeg_subsampled_stats",
-        "media_calibration_select",
-        "media_png_16bit_stats",
-        "media_png_trns_stats",
-        "media_png_graya_stats",
-        "media_png_subbyte_stats",
-        "media_audio_depth_stats",
-        "media_bmp_variant_stats",
-        "media_gif_transparency_stats",
-        "media_audio_stereo_stats",
-    }
     ARROW_NODES = ("ArrowEvalPython", "MapInPandas", "FlatMapGroupsInPandas")
     row_eval, undeclared_arrow = [], []
     for name, fn in registry.QUERIES.items():
@@ -288,6 +253,14 @@ def test_no_registered_query_uses_row_python_eval(spark, sf_dir):
     assert not undeclared_arrow, (
         f"Arrow Python nodes outside the declared set: {undeclared_arrow}"
     )
+
+
+def test_declared_exceptions_name_registered_queries():
+    """An exemption must not outlive its query: a stale entry would
+    silently exempt any future query registered under that name."""
+    for declared in (BROADCAST_PRODUCT_DECLARED, ARROW_DECLARED):
+        stale = sorted(declared - set(registry.QUERIES))
+        assert not stale, f"declared exceptions for unregistered queries: {stale}"
 
 
 # ----------------------------------------------------------- r5 operators
