@@ -33,11 +33,6 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # sources  (reference S1/S3/S4, SURVEY.md §2.1)
 # --------------------------------------------------------------------------
 
-def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """Engine source of record. Columnar scan with pushdown/pruning."""
-    return spark.read.parquet(path)
-
-
 def read_csv(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
     """CSV source with a mandatory explicit schema.
 
@@ -321,10 +316,12 @@ def checkpoint(df: DataFrame, path: str) -> DataFrame:
 
     Spark-native replacement for the reference's export/import CSV
     checkpoints: breaks lineage for iteration speed while preserving
-    types exactly.
+    types exactly. The reader schema is the written DataFrame's own, so
+    reading back runs no schema-inference job (as :func:`footer_schema`
+    does for :func:`load_table`).
     """
     df.write.mode("overwrite").parquet(path)
-    return df.sparkSession.read.parquet(path)
+    return df.sparkSession.read.schema(df.schema).parquet(path)
 
 
 def write_parquet(df: DataFrame, path: str, mode: str = "overwrite") -> None:

@@ -10,10 +10,11 @@ later stage reads the persisted boundary instead of recomputing the
 lineage, exactly the iteration pattern the reference's analysts used
 CSVs for.
 
-Checkpoints also serve the 100 TB posture: a stage boundary is where
-you change partitioning deliberately (the cohort is written bucketed
-by PATIENT_LINKAGE via io.write_bucketed when a warehouse is
-available, so every downstream patient-keyed join starts co-located).
+Each checkpoint is a plain Parquet directory, overwritten on every run,
+with as many files as the stage's last shuffle left partitions; nothing
+is bucketed or partitioned by PATIENT_LINKAGE, so the next stage plans
+its patient-keyed joins from the files afresh. The read-back takes its
+schema from the written DataFrame and starts no Spark job.
 """
 
 from __future__ import annotations

@@ -16,6 +16,12 @@ Scale notes (local[32] test box vs. 1000-executor target):
   large initial value is safe.
 * Session timezone is pinned to UTC so timestamp semantics don't depend
   on the host — mandatory for deterministic cross-engine comparison.
+* PySpark's DataFrame debugging (``spark.python.sql.dataFrameDebugging.enabled``)
+  is off. When on, every DataFrame and Column call captures its Python
+  call site and sends it to the JVM: most of the py4j round trips spent
+  building the cohort and BP stages, paid on every run.
+  Errors keep their class, message and JVM stack; they lose only the
+  Python ``file:line`` in the DataFrame query context.
 """
 
 from __future__ import annotations
@@ -73,6 +79,8 @@ def build_session(
         "spark.sql.files.maxPartitionBytes": "134217728",
         # quiet progress bars in test output
         "spark.ui.showConsoleProgress": "false",
+        # --- no per-call Python origin capture on the driver ---
+        "spark.python.sql.dataFrameDebugging.enabled": "false",
     }
     if extra_conf:
         conf.update(extra_conf)

@@ -230,6 +230,41 @@ def test_staged_runner_checkpoints_match_direct(spark, tables, phenotype,
     assert dict(out["phenotype"].dtypes) == dict(phenotype.dtypes)
 
 
+def test_checkpoint_read_back_starts_no_job(spark, tables, tmp_path,
+                                            monkeypatch):
+    """Each of run_pipeline's four checkpoints is read back with the
+    written DataFrame's schema: no schema-inference job runs, and the
+    schema equals the one Spark infers from the files."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    sc = spark.sparkContext
+    reads = []
+    parquet = DataFrameReader.parquet
+
+    def grouped_parquet(self, *paths, **options):
+        group = f"read-back-{len(reads)}"
+        reads.append((group, paths))
+        sc.setJobGroup(group, group)
+        try:
+            return parquet(self, *paths, **options)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", grouped_parquet)
+    out = run_pipeline(spark, tables, CODELISTS, str(tmp_path), YEAR)
+    monkeypatch.undo()
+    # job events reach the status tracker through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+
+    stages = {"cohort": "stage2_cohort", "bp_flags": "stage3_bp_flags",
+              "phenotype": "stage4_phenotype", "stats": "stage4_stats"}
+    assert [paths for _, paths in reads] == [
+        (str(tmp_path / d),) for d in stages.values()]
+    for (group, (path,)), stage in zip(reads, stages):
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == [], stage
+        assert out[stage].schema == spark.read.parquet(path).schema, stage
+
+
 def _sorted_rows(df):
     return sorted((tuple(r) for r in df.collect()), key=repr)
 
