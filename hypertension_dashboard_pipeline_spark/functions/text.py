@@ -50,12 +50,6 @@ def punct_ratio_raw(c: Column | str) -> Column:
     return F.when(n > 0, p.cast("double") / n).otherwise(F.lit(0.0))
 
 
-def punct_ratio(c: Column | str, scale: int = 6) -> Column:
-    from .expressions import round_fixed
-
-    return round_fixed(punct_ratio_raw(c), scale)
-
-
 STOPWORDS_EN = (
     "the a an and or of to in is are was for on with as at by it this that",
 )
@@ -63,8 +57,8 @@ STOPWORDS_EN = (
 
 def stopword_ratio_raw_from(ltoks: Column,
                             stopwords: str | None = None) -> Column:
-    """``stopword_ratio_raw`` over a PRE-TOKENIZED lowercased token
-    array — callers that materialize the array once per row (a prior
+    """Fraction of (English) stopwords in a PRE-TOKENIZED lowercased
+    token array — callers that materialize the array once per row (a prior
     projection) pay ONE regex split instead of one per reference:
     the scoring expressions sit inside conditional branches
     (CASE WHEN), where codegen's subexpression elimination does not
@@ -75,18 +69,6 @@ def stopword_ratio_raw_from(ltoks: Column,
     n = F.size(ltoks)
     hits = F.size(F.filter(ltoks, lambda t: t.isin(words)))
     return F.when(n > 0, hits.cast("double") / n).otherwise(F.lit(0.0))
-
-
-def stopword_ratio_raw(c: Column | str, stopwords: str | None = None) -> Column:
-    """Fraction of tokens that are (English) stopwords (unrounded)."""
-    return stopword_ratio_raw_from(tokens(F.lower(_col(c))), stopwords)
-
-
-def stopword_ratio(c: Column | str, stopwords: str | None = None,
-                   scale: int = 6) -> Column:
-    from .expressions import round_fixed
-
-    return round_fixed(stopword_ratio_raw(c, stopwords), scale)
 
 
 def quality_score_from(toks: Column, ltoks: Column, c: Column | str,
@@ -139,11 +121,6 @@ def lang_marker_hits_from(ltoks: Column, lang: str) -> Column:
     (see ``stopword_ratio_raw_from`` for the materialization
     rationale)."""
     return F.size(F.filter(ltoks, _marker_isin(list(LANG_MARKERS[lang]))))
-
-
-def lang_marker_hits(c: Column | str, lang: str) -> Column:
-    """Number of tokens matching the language's marker-word set."""
-    return lang_marker_hits_from(tokens(F.lower(_col(c))), lang)
 
 
 def lang_id_from(ltoks: Column) -> Column:
@@ -209,21 +186,3 @@ def word_shingles(c: Column | str, k: int = 3) -> Column:
             lambda i: F.concat_ws(" ", F.slice(toks, i, k)),
         ),
     ).otherwise(F.array().cast("array<string>"))
-
-
-def _seeded_hasher(prefix: str):
-    # single-arg lambda is required: a 2-arg callable would make
-    # F.transform pass the array index as the second argument
-    return lambda s: F.md5(F.concat(F.lit(prefix), s))
-
-
-def minhash_signature(shingles: Column, n_hashes: int = 16) -> Column:
-    """MinHash signature as an array of n lexicographic-min md5 digests,
-    one per seed. md5-string min is engine-agnostic (plain ASCII
-    ordering), so oracles can reproduce signatures exactly."""
-    return F.array(
-        *[
-            F.array_min(F.transform(shingles, _seeded_hasher(f"seed{i}:")))
-            for i in range(n_hashes)
-        ]
-    )

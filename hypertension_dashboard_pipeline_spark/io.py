@@ -324,10 +324,6 @@ def checkpoint(df: DataFrame, path: str) -> DataFrame:
     return df.sparkSession.read.schema(df.schema).parquet(path)
 
 
-def write_parquet(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    df.write.mode(mode).parquet(path)
-
-
 def write_csv(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     """Final-export CSV (the reference's output format), header included."""
     df.write.mode(mode).option("header", "true").csv(path)

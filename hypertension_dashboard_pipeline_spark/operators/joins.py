@@ -4,8 +4,7 @@ Every reference join is an equi-join on the patient key (one composite
 case). On a cluster, the big patient-keyed joins are sort-merge joins
 shuffled on the key; codelist-sized sides broadcast. AQE re-plans
 strategy and splits skewed partitions at runtime, so nothing here picks
-a physical join — we only make small sides explicit with
-``F.broadcast`` where the engine knows the side is dimension-sized.
+a physical join or forces a broadcast.
 """
 
 from __future__ import annotations
@@ -60,14 +59,6 @@ def evidence_union(key: str, *domains: DataFrame) -> DataFrame:
     """
     keys = [d.select(F.col(key)) for d in domains]
     return reduce(DataFrame.unionByName, keys).distinct()
-
-
-def broadcast_dim(fact: DataFrame, dim: DataFrame,
-                  on: str | Sequence[str], how: str = "inner") -> DataFrame:
-    """Reference J8: dimension-sized side joined broadcast-hash, the
-    engine form of the reference's IN-literal splicing
-    (2_data_importing_cleaning.R:209)."""
-    return fact.join(F.broadcast(dim), on=on, how=how)
 
 
 def asof_join(left: DataFrame, right: DataFrame, on: Sequence[str],

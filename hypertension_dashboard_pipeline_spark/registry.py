@@ -112,7 +112,6 @@ def load_all() -> None:
     from . import queries_core  # noqa: F401
     from . import queries_ext  # noqa: F401
     from . import queries_io  # noqa: F401
-    from . import queries_media  # noqa: F401
     from . import queries_omop  # noqa: F401
 
     _reorder()

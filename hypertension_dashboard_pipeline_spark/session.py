@@ -87,9 +87,3 @@ def build_session(
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
-
-
-def get_session() -> SparkSession:
-    """Active session if one exists, else a default-configured one."""
-    active = SparkSession.getActiveSession()
-    return active if active is not None else build_session()

@@ -54,30 +54,20 @@ BROADCAST_PRODUCT_DECLARED = {
 
 ARROW_DECLARED = {
     "udf_pandas_token_count",  # demonstrative pandas_udf
-    # real media codecs: decode IS per-row Python by nature (PIL would
-    # charge the same); the engine-side contract is Arrow batching +
-    # exchange-free plans, pinned by the partition-invariance test in
-    # tests/test_media.py
-    "media_image_decode_stats",
-    "media_image_resize_nn",
-    "media_audio_decode_stats",
-    "media_png_interlaced_stats",
-    "media_png_palette_stats",
-    "media_png_16bit_stats",
-    "media_png_trns_stats",
-    "media_png_graya_stats",
-    "media_png_subbyte_stats",
-    "media_audio_depth_stats",
-    "media_bmp_variant_stats",
-    "media_audio_stereo_stats",
 }
 
 
 @pytest.fixture(scope="module")
 def plan(spark, sf_dir):
+    """Executed-plan string of a registered query, built once per name
+    for the module (the two whole-registry sweeps share it)."""
+    built: dict[str, str] = {}
+
     def get(name: str) -> str:
-        df = registry.QUERIES[name](spark, sf_dir)
-        return df._jdf.queryExecution().executedPlan().toString()
+        if name not in built:
+            df = registry.QUERIES[name](spark, sf_dir)
+            built[name] = df._jdf.queryExecution().executedPlan().toString()
+        return built[name]
 
     return get
 
@@ -188,7 +178,7 @@ def test_bucketed_join_skips_shuffle(spark, sf_dir, tmp_path_factory):
         spark.sql("DROP TABLE IF EXISTS bkt_orders")
 
 
-def test_no_registered_query_plans_a_cartesian_product(spark, sf_dir):
+def test_no_registered_query_plans_a_cartesian_product(plan):
     """No registered query may fall back to an all-pairs join in its
     default configuration — at 100 TB a CartesianProduct /
     BroadcastNestedLoopJoin over a fact table is a non-starter.  The
@@ -205,11 +195,10 @@ def test_no_registered_query_plans_a_cartesian_product(spark, sf_dir):
     accidental product still fails.
     """
     offenders = []
-    for name, fn in registry.QUERIES.items():
+    for name in registry.QUERIES:
         if name.startswith("streaming_"):
             continue
-        df = fn(spark, sf_dir)
-        p = df._jdf.queryExecution().executedPlan().toString()
+        p = plan(name)
         if "CartesianProduct" in p or (
             "BroadcastNestedLoopJoin" in p
             and name not in BROADCAST_PRODUCT_DECLARED
@@ -230,7 +219,7 @@ def test_lsh_index_probe_prunes_partitions(plan):
     assert "bucket" in pf and "=" in pf, scan
 
 
-def test_no_registered_query_uses_row_python_eval(spark, sf_dir):
+def test_no_registered_query_uses_row_python_eval(plan):
     """Python may touch data only through Arrow-vectorized surfaces
     (pandas_udf / mapInPandas / applyInPandas).  A row-at-a-time
     BatchEvalPython node pickles every row across the JVM-Python
@@ -241,10 +230,10 @@ def test_no_registered_query_uses_row_python_eval(spark, sf_dir):
     """
     ARROW_NODES = ("ArrowEvalPython", "MapInPandas", "FlatMapGroupsInPandas")
     row_eval, undeclared_arrow = [], []
-    for name, fn in registry.QUERIES.items():
+    for name in registry.QUERIES:
         if name.startswith("streaming_"):
             continue
-        p = fn(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
+        p = plan(name)
         if "BatchEvalPython" in p:
             row_eval.append(name)
         if any(n in p for n in ARROW_NODES) and name not in ARROW_DECLARED:
