@@ -22,8 +22,9 @@ from hypertension_dashboard_pipeline_spark.session import build_session, cpu_cou
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 # Headline set: the flagship pipeline + the heaviest operator from each
-# family (agg, join, window, dedup/LSH, similarity, text, graph,
-# curation composition, streaming).
+# family (agg, join, window, dedup/LSH, similarity, text, curation
+# composition).  The graph and streaming members are gone with their
+# queries, so the TOTAL is not comparable to earlier BENCH_r*.json.
 HEADLINE = [
     "flagship_cohort_pipeline",
     "a3_same_day_avg",
@@ -38,11 +39,9 @@ HEADLINE = [
     "sim_cosine_near_dup",
     "text_quality_score",
     "curation_pipeline",
-    "streaming_dedup",
-    # round-4 wave-2 additions (graph iteration + segment dedup): the
-    # headline TOTAL is therefore not comparable to rounds <= 3 —
-    # compare per-query (BENCH_NOTES.md).
-    "graph_pagerank_transitions",
+    # round-4 wave-2 addition (segment dedup): the headline TOTAL is
+    # therefore not comparable to rounds <= 3 — compare per-query
+    # (BENCH_NOTES.md).
     "text_segment_boilerplate",
     "j16_local_supplier_volume",
     "emb_pq_codes",
@@ -52,8 +51,7 @@ HEADLINE = [
 def run_once(spark, name: str) -> tuple[float, float]:
     # TIMER CONTRACT (fixed since r2 — do not change, deltas must stay
     # comparable round-over-round): the timer wraps the query-function
-    # call too. Streaming queries execute their bounded run inside it,
-    # and batch probe .first() calls (query-vector lookups) are real
+    # call too: batch probe .first() calls (query-vector lookups) are real
     # per-query work. The construction part is also reported separately
     # so plan-execution regressions are attributable: r1 timed only the
     # sink write, which is why every r1→r2 delta shifted ~+0.1s

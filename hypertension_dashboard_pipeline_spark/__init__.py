@@ -12,7 +12,7 @@ hypertension surveillance ETL), re-architected Spark-first:
 * plus a beyond-reference extension surface for large-scale
   training-data pipelines: dedup (exact / MinHash-LSH / SimHash /
   n-gram Jaccard / embedding cosine), ANN similarity search, text
-  analysis, and Structured Streaming.
+  analysis.
 
 Layout:
     session.py    SparkSession factory (AQE on, UTC, Arrow)
@@ -23,7 +23,6 @@ Layout:
                   windows, dedup, similarity)
     plans/        reference-pipeline equivalents (cohort, bp, phenotype)
     sources/      codelists + table registry
-    streaming/    Structured Streaming variants of the batch aggs
 """
 
 __version__ = "0.1.0"

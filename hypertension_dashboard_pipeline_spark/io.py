@@ -178,20 +178,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
-def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-stream source over the events table with the same ts
-    normalization as :func:`load_table` (the file stream source needs a
-    directory path, so the events file is glob-selected from the shared
-    testdata dir)."""
-    schema, raw_nanos = events_read_plan(sf_dir)
-    src = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    return normalize_events_ts(src, raw_nanos)
-
-
 def read_jdbc(spark: SparkSession, url: str, table: str, *,
               partition_column: str | None = None,
               lower_bound: int | None = None,

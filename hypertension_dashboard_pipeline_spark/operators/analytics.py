@@ -313,7 +313,7 @@ def cohort_retention(
 
 
 # --------------------------------------------------------------------------
-# batch sessionization (gap-based)
+# batch sessionization (gap-based) and view -> purchase attribution
 # --------------------------------------------------------------------------
 
 
@@ -325,9 +325,7 @@ def sessionize(
     id_col: str = "event_id",
 ) -> DataFrame:
     """Gap-based batch sessionization: a new session starts whenever a
-    user's inter-event gap exceeds ``gap_us`` microseconds — the batch
-    twin of the streaming ``session_window`` aggregation
-    (streaming/sessions, `streaming_session_window`), and the analytics
+    user's inter-event gap exceeds ``gap_us`` microseconds — the analytics
     shape behind every "sessions per user / session duration"
     dashboard (reference analog: the same-day visit grouping of
     `3_blood_pressure.R`, generalized from calendar-day to activity
@@ -378,6 +376,29 @@ def sessionize(
         (F.unix_micros(F.max("ts")) - F.unix_micros(F.min("ts"))).alias(
             "duration_us"
         ),
+    )
+
+
+def view_purchase_attribution(views: DataFrame, purchases: DataFrame,
+                              horizon: str = "1 hour") -> DataFrame:
+    """Purchases attributed to same-user views within ``horizon``
+    before the purchase: ``v.ts <= p.ts < v.ts + horizon``.  Every
+    candidate pair is emitted, so an attribution policy (last touch,
+    first touch, linear) is one aggregate over the same join."""
+    v = views.selectExpr(
+        "user_id AS v_user", "event_id AS view_id", "ts AS v_ts"
+    )
+    p = purchases.selectExpr(
+        "user_id AS p_user", "event_id AS purchase_id", "ts AS p_ts"
+    )
+    return v.join(
+        p,
+        (F.col("v_user") == F.col("p_user"))
+        & (F.col("p_ts") >= F.col("v_ts"))
+        & (F.col("p_ts") < F.col("v_ts") + F.expr(f"INTERVAL {horizon}")),
+    ).select(
+        F.col("v_user").alias("user_id"), "view_id", "purchase_id",
+        "v_ts", "p_ts",
     )
 
 
@@ -651,8 +672,7 @@ def power_iteration_top_component(
     of squares, and the iteration count is fixed — so a SQL engine
     replaying the identical IEEE ops on the identical (pre-rounded)
     gram values produces the identical doubles.  No convergence test
-    (a data-dependent stopping rule would be engine-divergent; the
-    PageRank fixed-iteration precedent).
+    (a data-dependent stopping rule would be engine-divergent).
     """
     d = len(gram)
     v = [1.0 / math.sqrt(float(d))] * d

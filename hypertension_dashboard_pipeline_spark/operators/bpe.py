@@ -18,7 +18,7 @@ non-overlapping:
     otherwise                                 ->  append
 
 ``localCheckpoint`` truncates the growing lineage per iteration (the
-k-means/PageRank treatment); without it iteration k replays all k-1
+k-means treatment); without it iteration k replays all k-1
 prior rewrites inside every pair-count job.
 
 Reference analog: none — the reference has no subword machinery; this

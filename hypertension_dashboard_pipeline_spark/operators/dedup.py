@@ -973,7 +973,6 @@ def incremental_ingest(existing: DataFrame, incoming: DataFrame,
     touches only the (small) digest column — with the existing side
     stored as a bucketed digest table the ingest never reshuffles the
     corpus — and the within-batch dedup is one groupBy on the digest.
-    This is the batch twin of streaming/dedup.py's watermark dedup.
     """
     from ..functions.text import fingerprint
 

@@ -29,10 +29,7 @@ each partition truncates to its per-key last-``tail`` rows BEFORE the
 exchange) — per-key state is ≤ ``tail`` elements at ANY history
 length.  ``cusum_alarms`` is different BY SEMANTICS: the alarm count
 folds over the key's FULL history (every value moves the reset
-state), so no prefix can be dropped in a batch recomputation — the
-at-scale path for unbounded histories is the streaming twin
-(streaming/cusum.py), which carries exactly (s, a): 16 bytes/key in
-the state store, never a collected list.
+state), so no prefix can be dropped in a batch recomputation.
 """
 
 from __future__ import annotations
@@ -224,8 +221,7 @@ def ewma_last(df: DataFrame, key_col: str, order_cols: list[str],
     JVM-side WindowGroupLimit Partial/Final pair) so the collected
     per-key array is ≤ ``tail`` elements at any history length — no
     unbounded aggregation buffer anywhere; one extra cheap count pass
-    carries the full n_events.  A streaming variant carries the same
-    ``tail``-value state in applyInPandasWithState (streaming/ewma.py).
+    carries the full n_events.
 
     Null measurements are SKIPPED (the SUM/AVG convention) — without
     the explicit filter, Spark's collect_list silently drops nulls
@@ -285,8 +281,7 @@ def cusum_alarms(df: DataFrame, key_col: str, order_cols: list[str],
 
     Scale: one shuffle on the key; per-key state is the collected
     value list (pre-truncate unbounded histories with a
-    latest-k-per-key window; a streaming variant carries (s, a) in
-    applyInPandasWithState).
+    latest-k-per-key window).
 
     Null measurements are SKIPPED (same contract and reason as
     ``ewma_last``); all-null keys emit no row.

@@ -18,12 +18,12 @@ intermediate counts (the reference's manual QC idiom, SURVEY.md §5):
    (:640-658)
 
 Scale: every input is scanned once. Person is one hash aggregation on
-the patient key (consistency as min = max, the survivor as a min over a
-struct). Each domain table is one filtered scan (IN over the union of
-its codelists and years) emitting a flag column per reason; the union
-of those scans is one aggregation on the patient key, applied by one
-left join and a filter. No windows, no anti-joins, and nothing touches
-the driver except codelist literals.
+the patient key (one value per identity column, NULL counted as a value;
+the survivor as a min over a struct). Each domain table is one filtered
+scan (IN over the union of its codelists and years) emitting a flag
+column per reason; the union of those scans is one aggregation on the
+patient key, applied by one left join and a filter. No windows, no
+anti-joins, and nothing touches the driver except codelist literals.
 """
 
 from __future__ import annotations
@@ -73,9 +73,9 @@ def drop_misbridged(pop: DataFrame) -> DataFrame:
     aggregate per patient key.
 
     A patient key appearing with conflicting YEAR_OF_BIRTH / SEX / RACE
-    is a bad linkage → dropped entirely: each column must have
-    ``min = max``, which like ``n_distinct == 1`` ignores NULL and fails
-    when every value is NULL. Rows with missing STATE or ZIP3 cannot
+    is a bad linkage → dropped entirely: like dplyr's ``n_distinct``,
+    NULL counts as a value, so each column must be NULL on every row or
+    on none with ``min = max``. Rows with missing STATE or ZIP3 cannot
     survive (2_data_importing_cleaning.R:147-148, ``filter(!is.na(STATE)
     & !is.na(ZIP3))``) — a patient whose every row lacks location leaves
     the cohort here, exactly as in the reference. Remaining STATE/ZIP3
@@ -84,8 +84,13 @@ def drop_misbridged(pop: DataFrame) -> DataFrame:
     where the reference keeps an arbitrary row (SURVEY.md §2.10-4).
     """
     located = F.col("STATE").isNotNull() & F.col("ZIP3").isNotNull()
+
+    def one_value(c: str):
+        n = F.count(c)
+        return (n == 0) | ((n == F.count(F.lit(1))) & (F.min(c) == F.max(c)))
+
     per = pop.groupBy(KEY).agg(
-        reduce(and_, [F.min(c) == F.max(c) for c in IDENTITY]).alias("consistent"),
+        reduce(and_, [one_value(c) for c in IDENTITY]).alias("consistent"),
         F.min(F.when(located, F.struct("STATE", "ZIP3", *IDENTITY))).alias("row"),
     )
     return per.filter(F.col("consistent") & F.col("row").isNotNull()).select(

@@ -82,6 +82,13 @@ PERSON_ROWS = [
     # the null row is removed, the patient survives on the located row
     _person_row("P22", 1991, state="FL"),
     ("P22", 1991, q("CAUCASIAN"), q("M"), 8507, None, "GA"),
+    # GOLD_MISBRIDGE_NULL_YOB: YOB {1980, NULL} is two values to dplyr's
+    # n_distinct -> dropped at the mis-bridge stage
+    _person_row("P23", 1980),
+    _person_row("P23", None),
+    # GOLD_NULL_SEX: SEX NULL on every row is one value -> kept
+    ("P24", 1992, q("CAUCASIAN"), None, None, q("303"), "GA"),
+    ("P24", 1992, q("CAUCASIAN"), None, None, q("303"), "GA"),
 ]
 
 # (key, date, concept, value, unit) -> expanded to full measurement rows
@@ -168,11 +175,11 @@ DRUG_ROWS = [
     ("P20", 9501, D(2021, 5, 10)),  # wrong year
 ]
 
-# cohort membership after all exclusions (15 patients; P21 drops on
-# all-null location, P22 survives via its located row)
+# cohort membership after all exclusions (16 patients; P21/P23 drop, P22
+# survives via its located row, P24 with an all-NULL SEX)
 EXPECTED_COHORT = {
     "P01", "P02", "P03", "P04", "P05", "P06", "P09", "P13", "P14",
-    "P15", "P17", "P18", "P19", "P20", "P22",
+    "P15", "P17", "P18", "P19", "P20", "P22", "P24",
 }
 
 

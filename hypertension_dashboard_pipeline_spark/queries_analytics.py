@@ -941,34 +941,6 @@ def a29_heavy_hitters_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "streaming_incremental_rollup",
-    oracle="""
-    SELECT CAST(date_trunc('day', ts) AS DATE) AS day, event_type,
-           COUNT(*) AS n_events,
-           CAST(CAST(CAST(SUM(CAST(value AS DECIMAL(18,6)))
-                          AS DECIMAL(28,6)) AS VARCHAR) AS DOUBLE)
-               AS value_sum,
-           FLOOR(CAST(CAST(CAST(SUM(CAST(value AS DECIMAL(18,6)))
-                               AS DECIMAL(28,6)) AS VARCHAR) AS DOUBLE)
-                 / COUNT(*) * 10000.0 + 0.5) / 10000.0 AS value_avg
-    FROM events
-    GROUP BY 1, 2
-    """,
-)
-def streaming_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming IVM (streaming/ivm.py): the events stream maintains a
-    materialized (day, event_type) rollup via foreachBatch — each
-    microbatch appends a mergeable exact partial; reads merge the
-    partials store.  The oracle is the BATCH aggregation of all
-    events: microbatch boundaries are provably invisible because the
-    partials are exact and merge-associative (split-invariance
-    property-tested), which is the whole point of the pattern."""
-    from .streaming.ivm import run_rollup_maintenance
-
-    return run_rollup_maintenance(spark, sf_dir)
-
-
 # --------------------------------------------------------------------------
 # SCD-2 history intervals
 # --------------------------------------------------------------------------
@@ -1364,128 +1336,6 @@ def ts_gap_fill_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "graph_pagerank_transitions",
-    oracle="""
-    WITH seq AS (
-      SELECT user_id, event_type,
-             LEAD(event_type) OVER (
-               PARTITION BY user_id ORDER BY ts, event_id) AS nxt
-      FROM events
-    ),
-    e AS (
-      SELECT event_type AS src, nxt AS dst, COUNT(*) AS w
-      FROM seq WHERE nxt IS NOT NULL GROUP BY 1, 2
-    ),
-    outw AS (SELECT src, SUM(w) AS tw FROM e GROUP BY 1),
-    en AS (
-      SELECT e.src, e.dst, CAST(e.w AS DOUBLE) / outw.tw AS p
-      FROM e JOIN outw USING (src)
-    ),
-    nodes AS (SELECT src AS v FROM e UNION SELECT dst FROM e),
-    nn AS (SELECT COUNT(*) AS n FROM nodes),
-    r0 AS (SELECT v, CAST(1 AS DOUBLE) / n AS rank FROM nodes, nn),
-    d1 AS (
-      SELECT COALESCE(SUM(rank), 0.0) AS dm FROM r0
-      WHERE v NOT IN (SELECT src FROM e)
-    ),
-    r1 AS (
-      SELECT nd.v,
-             (CAST(1 AS DOUBLE) - CAST(0.85 AS DOUBLE)) / MAX(nn.n)
-             + CAST(0.85 AS DOUBLE)
-               * (COALESCE(SUM(r.rank * en.p), 0.0)
-                  + MAX(d1.dm) / MAX(nn.n)) AS rank
-      FROM nodes nd CROSS JOIN nn CROSS JOIN d1
-      LEFT JOIN en ON en.dst = nd.v
-      LEFT JOIN r0 r ON r.v = en.src
-      GROUP BY nd.v
-    ),
-    d2 AS (
-      SELECT COALESCE(SUM(rank), 0.0) AS dm FROM r1
-      WHERE v NOT IN (SELECT src FROM e)
-    ),
-    r2 AS (
-      SELECT nd.v,
-             (CAST(1 AS DOUBLE) - CAST(0.85 AS DOUBLE)) / MAX(nn.n)
-             + CAST(0.85 AS DOUBLE)
-               * (COALESCE(SUM(r.rank * en.p), 0.0)
-                  + MAX(d2.dm) / MAX(nn.n)) AS rank
-      FROM nodes nd CROSS JOIN nn CROSS JOIN d2
-      LEFT JOIN en ON en.dst = nd.v
-      LEFT JOIN r1 r ON r.v = en.src
-      GROUP BY nd.v
-    ),
-    d3 AS (
-      SELECT COALESCE(SUM(rank), 0.0) AS dm FROM r2
-      WHERE v NOT IN (SELECT src FROM e)
-    ),
-    r3 AS (
-      SELECT nd.v,
-             (CAST(1 AS DOUBLE) - CAST(0.85 AS DOUBLE)) / MAX(nn.n)
-             + CAST(0.85 AS DOUBLE)
-               * (COALESCE(SUM(r.rank * en.p), 0.0)
-                  + MAX(d3.dm) / MAX(nn.n)) AS rank
-      FROM nodes nd CROSS JOIN nn CROSS JOIN d3
-      LEFT JOIN en ON en.dst = nd.v
-      LEFT JOIN r2 r ON r.v = en.src
-      GROUP BY nd.v
-    ),
-    d4 AS (
-      SELECT COALESCE(SUM(rank), 0.0) AS dm FROM r3
-      WHERE v NOT IN (SELECT src FROM e)
-    ),
-    r4 AS (
-      SELECT nd.v,
-             (CAST(1 AS DOUBLE) - CAST(0.85 AS DOUBLE)) / MAX(nn.n)
-             + CAST(0.85 AS DOUBLE)
-               * (COALESCE(SUM(r.rank * en.p), 0.0)
-                  + MAX(d4.dm) / MAX(nn.n)) AS rank
-      FROM nodes nd CROSS JOIN nn CROSS JOIN d4
-      LEFT JOIN en ON en.dst = nd.v
-      LEFT JOIN r3 r ON r.v = en.src
-      GROUP BY nd.v
-    )
-    SELECT v AS event_type,
-           FLOOR(rank * 1000000.0 + 0.5) / 1000000.0 AS pagerank
-    FROM r4
-    """,
-)
-def graph_pagerank_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Weighted PageRank (4 iterations, d=0.85) over the event-type
-    transition graph (operators/graph.pagerank): LEAD builds the edge
-    list, then each iteration is one join of the rank vector against
-    the normalized edges plus one groupBy — the Pregel step as
-    join+agg, no driver-side vectors, so the identical loop handles a
-    billion-node graph (ranks/edges hash-partitioned on the join key,
-    tiny sides broadcast).  Dangling mass is redistributed via a 1-row
-    aggregate each round, and the oracle's unrolled CTEs carry the
-    SAME per-round dm/n term — so the parity holds even if a
-    regenerated corpus produces an event type with no out-edges.
-    Fixed iterations + final 6dp ``round_fixed`` (not engine round,
-    functions/expressions.py) keep it exactly reproducible."""
-    from pyspark.sql import Window
-
-    from .functions.expressions import round_fixed
-    from .operators import graph as gr
-
-    ev = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    edges = (
-        ev.select(
-            F.col("event_type").alias("src"),
-            F.lead("event_type").over(w).alias("dst"),
-        )
-        .filter(F.col("dst").isNotNull())
-        .groupBy("src", "dst")
-        .agg(F.count("*").alias("w"))
-    )
-    ranks = gr.pagerank(edges, iterations=4, damping=0.85)
-    return ranks.select(
-        F.col("v").alias("event_type"),
-        round_fixed("rank", 6).alias("pagerank"),
-    )
-
-
-@register(
     "events_anomaly_zscore",
     oracle="""
     WITH daily AS (
@@ -1832,9 +1682,9 @@ def j16_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def events_last_touch_attribution(spark: SparkSession, sf_dir: str
                                   ) -> DataFrame:
-    """LAST-touch policy over the view→purchase interval join (the
-    batch twin of streaming_stream_stream_join's output): each
-    purchase credits its most recent in-horizon view via ONE max-struct
+    """LAST-touch policy over the view→purchase interval join
+    (operators/analytics.view_purchase_attribution): each purchase
+    credits its most recent in-horizon view via ONE max-struct
     aggregate — (v_ts, view_id) argmax, deterministic under the
     view_id tiebreak, no window sort.  Composition point: any other
     policy (first-touch, linear) is a different aggregate over the
@@ -1842,15 +1692,13 @@ def events_last_touch_attribution(spark: SparkSession, sf_dir: str
     ``value_by_purchase`` scales with the events corpus, so it carries
     no broadcast hint — both sides of the value join are already
     purchase-keyed and AQE broadcasts when the runtime size fits."""
-    from .streaming.stream_join import view_purchase_attribution
-
     ev = load_table(spark, sf_dir, "events")
     views = ev.filter(F.col("event_type") == "view")
     purchases = ev.filter(F.col("event_type") == "purchase")
     value_by_purchase = purchases.select(
         F.col("event_id").alias("purchase_id"), "value"
     )
-    pairs = view_purchase_attribution(views, purchases, "1 hour")
+    pairs = an.view_purchase_attribution(views, purchases, "1 hour")
     return (
         pairs.join(value_by_purchase, "purchase_id")
         .groupBy("purchase_id")
@@ -1933,7 +1781,7 @@ def events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-based batch sessionization (operators/analytics.sessionize,
     30-min inactivity gap): LAG marks session starts, a running SUM
     over the same per-user sort numbers them, one per-session
-    aggregate — the batch twin of `streaming_session_window`, ONE
+    aggregate — the three steps share ONE
     shuffle on user_id total.  Boundaries are deterministic (total
     (ts, event_id) order) and durations are exact microsecond
     BIGINTs, so the oracle matches bit-for-bit."""
@@ -2253,57 +2101,6 @@ def a31_cms_point_estimates(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "graph_triangle_count",
-    oracle="""
-    WITH p AS (
-        SELECT x.l_suppkey AS u, y.l_suppkey AS v, COUNT(*) AS w
-        FROM lineitem x
-        JOIN lineitem y ON x.l_orderkey = y.l_orderkey
-                       AND x.l_suppkey < y.l_suppkey
-        GROUP BY 1, 2
-    ), t AS (
-        SELECT SUM(w) AS tw, COUNT(*) AS np FROM p
-    ), und AS (
-        SELECT u, v FROM p, t WHERE w > tw // np
-    ), deg AS (
-        SELECT x, COUNT(*) AS deg
-        FROM (SELECT u AS x FROM und UNION ALL SELECT v FROM und)
-        GROUP BY 1
-    ), tri AS (
-        SELECT COUNT(*) AS n_triangles
-        FROM und e1
-        JOIN und e2 ON e2.u = e1.v
-        JOIN und e3 ON e3.u = e1.u AND e3.v = e2.v
-    ), wd AS (
-        SELECT CAST(SUM(deg * (deg - 1) / 2) AS BIGINT) AS n_wedges
-        FROM deg
-    )
-    SELECT n_triangles, n_wedges,
-           CASE WHEN n_wedges > 0
-                THEN FLOOR(3.0 * n_triangles / n_wedges * 1000000.0 + 0.5)
-                     / 1000000.0
-           END AS global_clustering
-    FROM tri, wd
-    """,
-)
-def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Triangle count + global clustering coefficient of the supplier
-    co-occurrence graph (suppliers adjacent when their same-order
-    co-occurrence count exceeds the graph-wide mean — the threshold is
-    the integer-floor form ``w > total DIV n_pairs``, exactly
-    equivalent to ``w·n > total`` with no float comparison, so the
-    edge set is scale-free and engine-exact).  Enumeration is the
-    degree-ordered edge-iterator: wedges fan out only from each
-    edge's (degree, id)-minimal endpoint, bounding pivot out-degree
-    by O(sqrt(m)) — the "curse of the last reducer" guard that keeps
-    celebrity vertices from exploding the self-join at 100 TB
-    (operators/graph.py triangle_stats)."""
-    from .operators.graph import triangle_stats
-
-    return triangle_stats(_supplier_cooccurrence_edges(spark, sf_dir))
-
-
 # --------------------------------------------------------------------------
 # r7 debuts: OHLC resampling, event-type PMI
 # --------------------------------------------------------------------------
@@ -2423,90 +2220,9 @@ def events_type_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# r8-candidate debuts: k-core, referential-integrity audit, interval
+# r8-candidate debuts: referential-integrity audit, interval
 # overlap join
 # --------------------------------------------------------------------------
-
-
-def _kcore_oracle(k: int, rounds: int = 24) -> str:
-    """Unrolled peeling: DuckDB's recursive CTEs cannot aggregate in
-    the recursive term, so the oracle unrolls ``rounds`` peel rounds
-    as chained CTEs — exact as long as peeling converges within
-    ``rounds`` (peeling is idempotent once converged, so extra rounds
-    are harmless; the Spark side iterates to a true fixpoint and the
-    parity sweep would fail loudly if the corpus ever needed more)."""
-    # AS MATERIALIZED is load-bearing: DuckDB inlines plain CTEs per
-    # reference, and each round references the previous one three
-    # times -> 3^rounds expansion (observed as "Too many open files"
-    # from exponentially many parquet scans).  Materializing makes the
-    # unroll linear.
-    parts = ["""
-    WITH p AS MATERIALIZED (
-        SELECT x.l_suppkey AS u, y.l_suppkey AS v, COUNT(*) AS w
-        FROM lineitem x
-        JOIN lineitem y ON x.l_orderkey = y.l_orderkey
-                       AND x.l_suppkey < y.l_suppkey
-        GROUP BY 1, 2
-    ), t AS (SELECT SUM(w) AS tw, COUNT(*) AS np FROM p),
-    e0 AS MATERIALIZED (SELECT u, v FROM p, t WHERE w > tw // np)"""]
-    for i in range(rounds):
-        parts.append(f"""
-    , v{i} AS MATERIALIZED (
-        SELECT x FROM (SELECT u AS x FROM e{i} UNION ALL SELECT v FROM e{i})
-        GROUP BY x HAVING COUNT(*) >= {k}
-    ), e{i + 1} AS MATERIALIZED (
-        SELECT u, v FROM e{i}
-        WHERE u IN (SELECT x FROM v{i}) AND v IN (SELECT x FROM v{i})
-    )""")
-    parts.append(f"""
-    SELECT x AS vertex, COUNT(*) AS degree
-    FROM (SELECT u AS x FROM e{rounds} UNION ALL SELECT v FROM e{rounds})
-    GROUP BY x""")
-    return "".join(parts)
-
-
-def _supplier_cooccurrence_edges(spark: SparkSession, sf_dir: str):
-    """Shared above-mean supplier co-occurrence graph (the
-    graph_triangle_count construction): suppliers adjacent when their
-    same-order co-occurrence count exceeds the graph-wide mean, the
-    threshold in exact integer floor-division form."""
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey"
-    )
-    pairs = (
-        li.alias("x")
-        .join(
-            li.alias("y"),
-            (F.col("x.l_orderkey") == F.col("y.l_orderkey"))
-            & (F.col("x.l_suppkey") < F.col("y.l_suppkey")),
-        )
-        .groupBy(
-            F.col("x.l_suppkey").alias("a"), F.col("y.l_suppkey").alias("b")
-        )
-        .agg(F.count(F.lit(1)).alias("w"))
-    )
-    tot = pairs.agg(
-        F.sum("w").alias("tw"), F.count(F.lit(1)).alias("np")
-    )
-    return (
-        pairs.crossJoin(F.broadcast(tot))
-        .filter(F.col("w") > F.expr("tw DIV np"))
-        .select("a", "b")
-    )
-
-
-@register("graph_kcore", oracle=_kcore_oracle(4))
-def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """4-core of the supplier co-occurrence graph: iterative peeling
-    (one degree agg + double semi-join per round, localCheckpoint
-    lineage truncation — operators/graph.py kcore), returning each
-    surviving vertex with its induced-subgraph degree.  The dense
-    nucleus finder for similarity/spam graphs at a fraction of
-    triangle counting's cost; the oracle unrolls the peel as chained
-    CTEs (see _kcore_oracle)."""
-    from .operators.graph import kcore
-
-    return kcore(_supplier_cooccurrence_edges(spark, sf_dir), k=4)
 
 
 @register(
@@ -3286,8 +3002,6 @@ def j23_sales_opportunity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# shared with streaming_ewma (queries_ext.py): the bounded single-file
-# stream's final update per user equals this batch fold
 EWMA_LAST8_ORACLE = """
     WITH seq AS (
         SELECT user_id, COUNT(*) AS n_events,
@@ -3339,8 +3053,6 @@ def ts_ewma_last8(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# shared with streaming_cusum (queries_ext.py): the bounded
-# single-file stream's final update per user equals this batch fold
 CUSUM_ORACLE = """
     WITH RECURSIVE ev AS (
         SELECT user_id,
@@ -4286,85 +3998,6 @@ def sample_kcenter_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "graph_adamic_adar",
-    oracle="""
-    WITH po AS (
-        SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-    ), deg AS (
-        SELECT l_orderkey, COUNT(*) AS d FROM po GROUP BY 1
-    ), byd AS (
-        SELECT a.l_partkey AS part_a, b.l_partkey AS part_b,
-               g.d, COUNT(*) AS cnt
-        FROM po a
-        JOIN po b ON a.l_orderkey = b.l_orderkey
-                 AND a.l_partkey < b.l_partkey
-        JOIN deg g ON a.l_orderkey = g.l_orderkey
-        GROUP BY 1, 2, 3
-    ), score AS (
-        SELECT part_a, part_b, CAST(SUM(cnt) AS BIGINT) AS n_shared,
-               list_reduce(
-                   list(CAST(cnt AS DOUBLE) / ln(CAST(d AS DOUBLE))
-                        ORDER BY d),
-                   (acc, x) -> acc + x) AS aa
-        FROM byd GROUP BY 1, 2
-    )
-    SELECT part_a, part_b, n_shared,
-           FLOOR(aa * 1000000.0 + 0.5) / 1000000.0 AS aa_score
-    FROM score
-    ORDER BY aa_score DESC, part_a, part_b LIMIT 20
-    """,
-)
-def graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Adamic-Adar link prediction over the bipartite order-part
-    graph: candidate part pairs scored by sum over shared orders of
-    1/ln(order degree) — rare shared baskets count more than huge
-    ones (the degree-discounted sibling of rec_copurchase_lift).
-    Scale shape: the pair join is blocked by orderkey exactly like
-    the co-purchase miner (never all-pairs over parts) and the order
-    degree joins BEFORE the pair groupBy on the partitioning all
-    three relations already share.  The float sum is made
-    order-independent by first grouping per (pair, degree) — integer
-    counts — then folding cnt/ln(d) over the SORTED degree list, the
-    identical left-to-right IEEE fold on both engines."""
-    li = load_table(spark, sf_dir, "lineitem")
-    po = li.select("l_orderkey", "l_partkey").distinct()
-    deg = po.groupBy(F.col("l_orderkey").alias("ok")).agg(
-        F.count("*").alias("d")
-    )
-    a = po.select(
-        F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("part_a")
-    )
-    b = po.select(
-        F.col("l_orderkey").alias("o2"), F.col("l_partkey").alias("part_b")
-    )
-    byd = (
-        a.join(b, (F.col("o") == F.col("o2")) & (F.col("part_a") < F.col("part_b")))
-        .join(deg, F.col("o") == F.col("ok"))
-        .groupBy("part_a", "part_b", "d")
-        .agg(F.count("*").alias("cnt"))
-    )
-    score = byd.groupBy("part_a", "part_b").agg(
-        F.sum("cnt").alias("n_shared"),
-        F.aggregate(
-            F.array_sort(F.collect_list(F.struct("d", "cnt"))),
-            F.lit(0.0),
-            lambda acc, x: acc
-            + x["cnt"].cast("double") / F.log(x["d"].cast("double")),
-        ).alias("aa"),
-    )
-    return (
-        score.select(
-            "part_a",
-            "part_b",
-            "n_shared",
-            round_fixed(F.col("aa"), 6).alias("aa_score"),
-        )
-        .orderBy(F.col("aa_score").desc(), "part_a", "part_b")
-        .limit(20)
-    )
-
-
-@register(
     "events_user_stickiness",
     oracle="""
     WITH mdu AS (
@@ -4666,84 +4299,6 @@ def a39_grouped_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _lpa_oracle(iterations: int = 3) -> str:
-    """Unrolled synchronous LPA rounds over the co-purchase graph —
-    all-integer (counts and min-label tie-breaks), no float anywhere."""
-    ctes = [
-        "po AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem)",
-        """pairs AS (
-        SELECT a.l_partkey AS pa, b.l_partkey AS pb
-        FROM po a JOIN po b ON a.l_orderkey = b.l_orderkey
-                           AND a.l_partkey < b.l_partkey
-        GROUP BY 1, 2
-    )""",
-        """edges AS (
-        SELECT pa AS a, pb AS b FROM pairs
-        UNION ALL SELECT pb, pa FROM pairs
-    )""",
-        "l0 AS (SELECT DISTINCT a AS node, a AS lbl FROM edges)",
-    ]
-    for t in range(1, iterations + 1):
-        ctes.append(
-            f"""n{t} AS (
-        SELECT e.a AS node, l.lbl, COUNT(*) AS c
-        FROM edges e JOIN l{t - 1} l ON e.b = l.node
-        GROUP BY 1, 2
-    ), l{t} AS (
-        SELECT node, lbl FROM (
-            SELECT node, lbl,
-                   ROW_NUMBER() OVER (PARTITION BY node
-                                      ORDER BY c DESC, lbl) AS rn
-            FROM n{t}
-        ) WHERE rn = 1
-    )"""
-        )
-    return (
-        "WITH "
-        + ",\n    ".join(ctes)
-        + f"""
-    SELECT lbl AS community, COUNT(*) AS n_members, MIN(node) AS min_node
-    FROM l{iterations} GROUP BY 1
-    """
-    )
-
-
-@register("graph_lpa_communities", oracle=_lpa_oracle())
-def graph_lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Community detection by synchronous label propagation over the
-    part co-purchase graph (operators/graph.label_propagation, 3
-    fixed rounds, min-label tie-break): community label, size, and
-    smallest member per community.  The deterministic LPA variant —
-    async/random-order LPA is irreproducible; this one is
-    oracle-checked round for round.  Distinct pair edges keep
-    multi-line orders from double-weighting a neighbor; each round is
-    one co-partitioned node-key shuffle regardless of community
-    sizes."""
-    from .operators.graph import label_propagation
-
-    li = load_table(spark, sf_dir, "lineitem")
-    po = li.select("l_orderkey", "l_partkey").distinct()
-    a = po.select(
-        F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("pa")
-    )
-    b = po.select(
-        F.col("l_orderkey").alias("o2"), F.col("l_partkey").alias("pb")
-    )
-    pairs = (
-        a.join(b, (F.col("o") == F.col("o2")) & (F.col("pa") < F.col("pb")))
-        .select("pa", "pb")
-        .distinct()
-    )
-    edges = pairs.select(
-        F.col("pa").alias("a"), F.col("pb").alias("b")
-    ).unionAll(pairs.select(F.col("pb").alias("a"), F.col("pa").alias("b")))
-    comm = label_propagation(edges, iterations=3)
-    return comm.groupBy(F.col("community")).agg(
-        F.count("*").alias("n_members"),
-        F.min("node").alias("min_node"),
-    )
-
-
 @register(
     "events_user_features",
     oracle="""
@@ -5025,134 +4580,6 @@ def dq_uniqueness_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _bfs_oracle(depth: int = 3) -> str:
-    """Unrolled BFS frontier expansion: distance relation re-minimized
-    each round — all-integer, the LPA oracle's sibling."""
-    ctes = [
-        "po AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem)",
-        """pairs AS (
-        SELECT a.l_partkey AS pa, b.l_partkey AS pb
-        FROM po a JOIN po b ON a.l_orderkey = b.l_orderkey
-                           AND a.l_partkey < b.l_partkey
-        GROUP BY 1, 2
-    )""",
-        """edges AS (
-        SELECT pa AS a, pb AS b FROM pairs
-        UNION ALL SELECT pb, pa FROM pairs
-    )""",
-        "d0 AS (SELECT (SELECT MIN(a) FROM edges) AS node, 0 AS d)",
-    ]
-    for t in range(1, depth + 1):
-        ctes.append(
-            f"""d{t} AS (
-        SELECT node, MIN(d) AS d FROM (
-            SELECT node, d FROM d{t - 1}
-            UNION ALL
-            SELECT e.b, p.d + 1 FROM d{t - 1} p JOIN edges e ON e.a = p.node
-        ) GROUP BY node
-    )"""
-        )
-    return (
-        "WITH "
-        + ",\n    ".join(ctes)
-        + f"""
-    SELECT CAST(d AS INT) AS distance, COUNT(*) AS n_nodes
-    FROM d{depth} GROUP BY d
-    UNION ALL
-    SELECT -1,
-           (SELECT COUNT(DISTINCT a) FROM edges)
-           - (SELECT COUNT(*) FROM d{depth})
-    """
-    )
-
-
-@register("graph_bfs_levels", oracle=_bfs_oracle())
-def graph_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bounded-depth BFS from the smallest part in the co-purchase
-    graph: how many parts sit at each hop distance 0-3, plus the
-    unreached remainder (-1 bucket) — the reachability profile
-    (neighborhood growth rate) beside LPA's communities and
-    pagerank's centrality.  Each round is one frontier join + one
-    min re-aggregation on the node key (the same co-partitioned
-    per-round shuffle as label_propagation); the depth bound makes
-    the operator deterministic and oracle-checkable, and at 100 TB
-    bounded-hop BFS IS the production form (full BFS diameter sweeps
-    don't terminate on power-law graphs' long tails).
-
-    The seed probe is shuffle-minimal (r13): ``MIN(a) over edges``
-    equals the min l_partkey over orders carrying >= 2 distinct parts
-    (every part of a multi-part order appears in some within-order
-    pair, and every edge endpoint comes from such an order), so the
-    driver-side seed lookup is ONE aggregation of the distinct
-    (order, part) projection — the eager pair self-join that used to
-    run as its own job just for the 1-row seed is gone from the
-    probe.  Persisting the edge list for the frontier joins was
-    measured STRICTLY SLOWER (median 8.46 s -> 10.68 s at sf0.1,
-    best-of-5 A/B) — the triangle_stats result again: cache build +
-    per-round cache reads cost more than the runtime exchange reuse
-    they replace, so edges deliberately stays unpersisted."""
-    li = load_table(spark, sf_dir, "lineitem")
-    po = li.select("l_orderkey", "l_partkey").distinct()
-    a = po.select(
-        F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("pa")
-    )
-    b = po.select(
-        F.col("l_orderkey").alias("o2"), F.col("l_partkey").alias("pb")
-    )
-    pairs = (
-        a.join(b, (F.col("o") == F.col("o2")) & (F.col("pa") < F.col("pb")))
-        .select("pa", "pb")
-        .distinct()
-    )
-    edges = pairs.select(
-        F.col("pa").alias("a"), F.col("pb").alias("b")
-    ).unionAll(pairs.select(F.col("pb").alias("a"), F.col("pa").alias("b")))
-    seed = (
-        po.groupBy("l_orderkey")
-        .agg(
-            # count(col), not count(*): NULL partkeys must not count
-            # toward the >=2 gate — the edge-based seed this probe
-            # replaces (pa < pb pair join) can never pair a NULL, so
-            # the null-skipping count is what makes the equivalence
-            # hold unconditionally, not just on non-null TPC-H keys
-            F.count("l_partkey").alias("n"),
-            F.min("l_partkey").alias("mn"),
-        )
-        .filter(F.col("n") >= 2)
-        .agg(F.min("mn").alias("s"))
-        .first()["s"]
-    )
-    dist = (
-        edges.sparkSession.range(1)
-        .select(F.lit(int(seed)).alias("node"), F.lit(0).alias("d"))
-    )
-    for _ in range(3):
-        expanded = (
-            edges.join(
-                dist.select(F.col("node").alias("src"), "d"),
-                F.col("a") == F.col("src"),
-            )
-            .select(F.col("b").alias("node"), (F.col("d") + 1).alias("d"))
-        )
-        dist = (
-            dist.unionByName(expanded)
-            .groupBy("node")
-            .agg(F.min("d").alias("d"))
-        )
-    levels = dist.groupBy(F.col("d").cast("int").alias("distance")).agg(
-        F.count(F.lit(1)).alias("n_nodes")
-    )
-    reached = dist.select("node")
-    unreached = (
-        edges.select(F.col("a").alias("node"))
-        .distinct()
-        .join(reached, "node", "left_anti")
-        .agg(F.count(F.lit(1)).alias("n_nodes"))
-        .select(F.lit(-1).alias("distance"), "n_nodes")
-    )
-    return levels.unionByName(unreached)
-
-
 @register(
     "events_value_gini",
     oracle="""
@@ -5290,58 +4717,6 @@ def events_anomaly_seasonal(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "graph_degree_distribution",
-    oracle="""
-    WITH po AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-    pairs AS (
-        SELECT a.l_partkey AS pa, b.l_partkey AS pb
-        FROM po a JOIN po b ON a.l_orderkey = b.l_orderkey
-                           AND a.l_partkey < b.l_partkey
-        GROUP BY 1, 2
-    ), deg AS (
-        SELECT node, COUNT(*) AS degree FROM (
-            SELECT pa AS node FROM pairs
-            UNION ALL SELECT pb FROM pairs
-        ) GROUP BY 1
-    )
-    SELECT CAST(degree AS BIGINT) AS degree,
-           CAST(COUNT(*) AS BIGINT) AS n_nodes
-    FROM deg GROUP BY 1
-    """,
-)
-def graph_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Degree distribution of the part co-purchase graph — the first
-    structural read of any graph (heavy tail width decides salting,
-    skew joins, and whether triangle counting's degree-ordered
-    orientation matters).  Distinct pair edges, one node-key count,
-    one histogram re-aggregation — all integer; at 100 TB the
-    histogram is the canonical map-side-combine survivor (at most
-    |distinct degrees| rows per task)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    po = li.select("l_orderkey", "l_partkey").distinct()
-    a = po.select(
-        F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("pa")
-    )
-    b = po.select(
-        F.col("l_orderkey").alias("o2"), F.col("l_partkey").alias("pb")
-    )
-    pairs = (
-        a.join(b, (F.col("o") == F.col("o2")) & (F.col("pa") < F.col("pb")))
-        .select("pa", "pb")
-        .distinct()
-    )
-    deg = (
-        pairs.select(F.col("pa").alias("node"))
-        .unionAll(pairs.select(F.col("pb").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("degree"))
-    )
-    return deg.groupBy(F.col("degree").cast("bigint").alias("degree")).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_nodes")
-    )
-
-
-@register(
     "a42_top_customer_share",
     oracle="""
     WITH cv AS (
@@ -5474,13 +4849,10 @@ def ts_autocorr_lag1(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# r8 debuts: Holt linear trend, activity streaks, inter-arrival profile,
-# neighborhood-Jaccard link prediction
+# r8 debuts: Holt linear trend, activity streaks, inter-arrival profile
 # --------------------------------------------------------------------------
 
 
-# shared with streaming_holt (queries_ext.py): the bounded single-file
-# stream's final update per user equals this batch fold
 HOLT_LINEAR_ORACLE = """
     WITH RECURSIVE ev AS (
         SELECT user_id, value,
@@ -5651,83 +5023,3 @@ def events_interarrival_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.percentile("gap_us", F.lit(0.9)) / F.lit(1000000.0), 6
         ).alias("p90_gap_s"),
     )
-
-
-@register(
-    "graph_neighbor_jaccard",
-    oracle="""
-    WITH po AS (
-        SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-    ), deg AS (
-        SELECT l_partkey, COUNT(*) AS n_x FROM po GROUP BY 1
-    ), pairs AS (
-        SELECT a.l_partkey AS part_a, b.l_partkey AS part_b,
-               COUNT(*) AS n_ab
-        FROM po a JOIN po b ON a.l_orderkey = b.l_orderkey
-                           AND a.l_partkey < b.l_partkey
-        GROUP BY 1, 2
-    ), scored AS (
-        SELECT p.part_a, p.part_b, p.n_ab,
-               FLOOR(CAST(p.n_ab AS DOUBLE)
-                     / (ca.n_x + cb.n_x - p.n_ab)
-                     * 1000000.0 + 0.5) / 1000000.0 AS jaccard
-        FROM pairs p
-        JOIN deg ca ON p.part_a = ca.l_partkey
-        JOIN deg cb ON p.part_b = cb.l_partkey
-    )
-    SELECT part_a, part_b, n_ab, jaccard FROM scored
-    ORDER BY jaccard DESC, part_a, part_b LIMIT 20
-    """,
-)
-def graph_neighbor_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Neighborhood-Jaccard link prediction over the bipartite
-    order-part graph: top-20 part pairs by |shared orders| /
-    |order-neighborhood union| — the normalized-overlap sibling of
-    graph_adamic_adar (degree-discount) and rec_copurchase_lift
-    (independence-ratio), completing the standard link-prediction
-    trio.  Same blocked pair generation (keyed on the order, bounded
-    by basket size, never parts²); the score is one double division
-    over three exact integers, ranked on the ROUNDED value with id
-    tie-breaks so the top-20 cutoff is engine-stable."""
-    li = load_table(spark, sf_dir, "lineitem")
-    po = li.select("l_orderkey", "l_partkey").distinct()
-    deg = po.groupBy("l_partkey").agg(F.count(F.lit(1)).alias("n_x"))
-    a = po.select(
-        F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("part_a")
-    )
-    b = po.select(
-        F.col("l_orderkey").alias("o2"), F.col("l_partkey").alias("part_b")
-    )
-    pairs = (
-        a.join(
-            b,
-            (F.col("o") == F.col("o2"))
-            & (F.col("part_a") < F.col("part_b")),
-        )
-        .groupBy("part_a", "part_b")
-        .agg(F.count(F.lit(1)).alias("n_ab"))
-    )
-    # No broadcast hint on deg: it is one row per distinct part — an
-    # UNBOUNDED dimension (billions at 100 TB).  A forced broadcast
-    # cannot degrade; AQE picks broadcast when the build side actually
-    # fits and falls back to shuffled hash join when it doesn't (pairs
-    # is already hash-partitioned by part after its groupBy).
-    scored = (
-        pairs.join(
-            deg.select(F.col("l_partkey").alias("part_a"),
-                       F.col("n_x").alias("n_a")), "part_a")
-        .join(
-            deg.select(F.col("l_partkey").alias("part_b"),
-                       F.col("n_x").alias("n_b")), "part_b")
-        .select(
-            "part_a", "part_b", "n_ab",
-            round_fixed(
-                F.col("n_ab").cast("double")
-                / (F.col("n_a") + F.col("n_b") - F.col("n_ab")),
-                6,
-            ).alias("jaccard"),
-        )
-    )
-    return scored.orderBy(
-        F.col("jaccard").desc(), "part_a", "part_b"
-    ).limit(20)

@@ -1,11 +1,10 @@
 """Extension-surface queries: training-data-pipeline operators over the
-``documents`` and ``embeddings`` tables (BASELINE.json north star),
-plus streaming plumbing.
+``documents`` and ``embeddings`` tables (BASELINE.json north star).
 
 Oracle strategy: everything hash-based uses md5 (not engine-native
 hashes like xxhash64/duckdb hash), folds sequentially, and rounds any
 float that feeds a threshold or rank — so DuckDB can reproduce results
-bit-for-bit. The few genuinely non-SQL ops (streaming state, pandas
+bit-for-bit. The few genuinely non-SQL ops (pandas
 plumbing) register without an oracle and get the driver's rows-only
 check.
 """
@@ -21,7 +20,6 @@ from .io import load_table
 from .operators import dedup as dd
 from .operators import similarity as sim
 from .registry import register
-from .streaming.daily_window import run_available_now
 
 # --------------------------------------------------------------------------
 # DuckDB oracle building blocks (kept next to the queries they verify)
@@ -1561,109 +1559,6 @@ def curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# streaming
-# --------------------------------------------------------------------------
-
-
-@register(
-    "streaming_stateful_counters",
-    oracle="""
-    SELECT user_id, COUNT(*) AS n_events,
-           CAST(SUM(CASE WHEN value >= 50 THEN 1 ELSE 0 END) AS BIGINT) AS n_high
-    FROM events GROUP BY user_id
-    """,
-)
-def streaming_stateful_counters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Custom stateful streaming operator (applyInPandasWithState):
-    per-user running counters over the event stream. With the bounded
-    single-file source the final update equals the batch groupBy — the
-    oracle — while exercising real state-store semantics."""
-    from .streaming.stateful import run_available_now as run_stateful
-
-    return run_stateful(spark, sf_dir)
-
-
-@register(
-    "streaming_dedup",
-    oracle="""
-    SELECT event_id, user_id, event_type, value FROM events
-    """,
-)
-def streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming exactly-once dedup: the event stream unioned with
-    itself (at-least-once delivery simulation) deduplicated per
-    event_id via dropDuplicatesWithinWatermark — bounded state, rows
-    emitted on first arrival. The distinct events ARE the batch table,
-    which is the oracle."""
-    import itertools
-
-    from .streaming.dedup import run_available_now as run_dedup
-
-    if not hasattr(streaming_dedup, "_seq"):
-        streaming_dedup._seq = itertools.count()
-    # memory sinks need a fresh queryName per run within a session
-    return run_dedup(spark, sf_dir, name=f"dedup_stream_{next(streaming_dedup._seq)}")
-
-
-@register(
-    "streaming_static_join",
-    oracle="""
-    SELECT e.event_id, e.user_id, e.value, u.user_n_events
-    FROM events e
-    JOIN (SELECT user_id, COUNT(*) AS user_n_events
-          FROM events GROUP BY user_id) u USING (user_id)
-    """,
-)
-def streaming_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream-static dimension enrich: each micro-batch of the event
-    stream joins a static per-user profile (no state store; the static
-    side re-plans per batch). Bounded availableNow run equals the batch
-    join — the oracle."""
-    import itertools
-
-    from .streaming.dedup import run_stream_static_join
-
-    if not hasattr(streaming_static_join, "_seq"):
-        streaming_static_join._seq = itertools.count()
-    return run_stream_static_join(
-        spark, sf_dir, name=f"enrich_stream_{next(streaming_static_join._seq)}"
-    )
-
-
-@register(
-    "streaming_daily_window",
-    oracle="""
-    WITH wm AS (
-        SELECT MAX(ts) - INTERVAL 1 DAY AS w FROM events
-    ), daily AS (
-        SELECT CAST(date_trunc('day', ts) AS DATE) AS day,
-               COUNT(*) AS n_events,
-               FLOOR(AVG(value) * 10000.0 + 0.5) / 10000.0 AS value_avg
-        FROM events GROUP BY 1
-    )
-    SELECT day, n_events, value_avg
-    FROM daily, wm
-    WHERE CAST(day AS TIMESTAMP) + INTERVAL 1 DAY <= wm.w
-    """,
-)
-def streaming_daily_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Structured Streaming tumbling-day aggregation with watermark,
-    availableNow over the static events table.
-
-    Deterministic and therefore oracle-checkable: with a bounded
-    source the final watermark is max(ts) - 1 day, and append mode
-    emits exactly the windows that watermark has closed (window end ≤
-    watermark — the trailing unclosed window(s) stay in state on both
-    sides). The oracle is the batch day-groupBy with the same cutoff."""
-    # memory-sink rows live on the driver for the life of the temp
-    # view: reuse ONE view name and drop the previous run's rows first,
-    # so repeated bench/driver runs don't accumulate sink tables.
-    name = "daily_window_sink"
-    spark.catalog.dropTempView(name)
-    return run_available_now(spark, sf_dir, name=name)
-
-
-# --------------------------------------------------------------------------
 # temporal joins (beyond the reference surface: as-of + band joins, the
 # two time-series joins Spark has no native operator for)
 # --------------------------------------------------------------------------
@@ -1913,50 +1808,6 @@ def a16_kll_merge_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     return mergeable_quantile_profile(
         ev, F.date_trunc("day", F.col("ts")), "value"
     ).select("quantile", "within_bounds")
-
-
-@register(
-    "streaming_session_window",
-    oracle="""
-    WITH wm AS (
-        SELECT MAX(ts) - INTERVAL 1 HOUR AS w FROM events
-    ), ord AS (
-        SELECT user_id, ts,
-               CASE WHEN LAG(ts) OVER (PARTITION BY user_id ORDER BY ts)
-                         IS NULL
-                     OR ts - LAG(ts) OVER (PARTITION BY user_id ORDER BY ts)
-                         >= INTERVAL 30 MINUTE
-                    THEN 1 ELSE 0 END AS brk
-        FROM events
-    ), sess AS (
-        SELECT user_id, ts,
-               SUM(brk) OVER (PARTITION BY user_id ORDER BY ts
-                              ROWS UNBOUNDED PRECEDING) AS sid
-        FROM ord
-    ), agg AS (
-        SELECT user_id,
-               MIN(ts) AS session_start,
-               MAX(ts) + INTERVAL 30 MINUTE AS session_end,
-               COUNT(*) AS n_events
-        FROM sess GROUP BY user_id, sid
-    )
-    SELECT user_id, session_start, session_end, n_events
-    FROM agg, wm WHERE session_end <= wm.w
-    """,
-)
-def streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Native streaming session windows (F.session_window + watermark,
-    state per OPEN session) over the bounded events stream — the
-    incremental twin of the batch lag-based sessionize. Append mode
-    emits exactly the watermark-closed sessions; the oracle recomputes
-    them with the classic gap-break SQL and the same cutoff.
-    Events exactly gap-apart start a NEW session (the merge window
-    [t, t+gap) is half-open), hence the oracle's >= break."""
-    from .streaming.sessions import run_available_now as run_sessions
-
-    name = "session_window_sink"
-    spark.catalog.dropTempView(name)
-    return run_sessions(spark, sf_dir, name=name)
 
 
 @register(
@@ -2553,38 +2404,6 @@ def text_segment_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "streaming_stream_stream_join",
-    oracle="""
-    WITH v AS (
-      SELECT user_id, event_id AS view_id, ts AS v_ts
-      FROM events WHERE event_type = 'view'
-    ),
-    p AS (
-      SELECT user_id, event_id AS purchase_id, ts AS p_ts
-      FROM events WHERE event_type = 'purchase'
-    )
-    SELECT v.user_id, view_id, purchase_id, v_ts, p_ts
-    FROM v JOIN p
-      ON v.user_id = p.user_id
-     AND p_ts >= v_ts
-     AND p_ts < v_ts + INTERVAL 1 HOUR
-    """,
-)
-def streaming_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream-STREAM interval join (view→purchase attribution within a
-    1-hour horizon): watermarks on both sides + the time-range join
-    condition let Spark expire buffered views/purchases older than the
-    horizon, so state stays bounded at production rates — the missing
-    quadrant after stream-static (streaming_static_join).  Inner joins
-    emit on match, so the bounded availableNow run equals the batch
-    join exactly and the oracle is plain SQL
-    (streaming/stream_join.py)."""
-    from .streaming.stream_join import run_attribution_available_now
-
-    return run_attribution_available_now(spark, sf_dir)
-
-
 # upper-triangle index pairs for the gram-matrix query (dims 0..7)
 _GRAM_D = 8
 _GRAM_PAIRS = [(i, j) for i in range(_GRAM_D) for j in range(i, _GRAM_D)]
@@ -3109,64 +2928,6 @@ def sim_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.desc("adc_score"), "vec_id")
         .limit(10)
     )
-
-
-@register(
-    "streaming_stream_stream_outer_join",
-    oracle="""
-    WITH v AS (
-      SELECT user_id, event_id AS view_id, ts AS v_ts
-      FROM events WHERE event_type = 'view'
-    ),
-    p AS (
-      SELECT user_id, event_id AS purchase_id, ts AS p_ts
-      FROM events WHERE event_type = 'purchase'
-    ),
-    wm AS (
-      -- Spark's GLOBAL watermark under the default
-      -- multipleWatermarkPolicy=min: watermarks attach AFTER the
-      -- view/purchase filters, so the final watermark is the MIN of
-      -- the two per-stream maxima minus the 2h delay — not max(ts)
-      -- over all events (the two can differ by however long the
-      -- quieter stream trails the busier one).
-      SELECT LEAST(
-               (SELECT MAX(ts) FROM events WHERE event_type = 'view'),
-               (SELECT MAX(ts) FROM events WHERE event_type = 'purchase')
-             ) - INTERVAL 2 HOUR AS w
-    ),
-    m AS (
-      SELECT v.user_id, v.view_id, p.purchase_id, v.v_ts, p.p_ts
-      FROM v JOIN p
-        ON v.user_id = p.user_id
-       AND p_ts >= v_ts
-       AND p_ts < v_ts + INTERVAL 1 HOUR
-    )
-    SELECT * FROM m
-    UNION ALL
-    SELECT v.user_id, v.view_id, CAST(NULL AS BIGINT) AS purchase_id,
-           v.v_ts, CAST(NULL AS TIMESTAMP) AS p_ts
-    FROM v, wm
-    WHERE v.view_id NOT IN (SELECT view_id FROM m)
-      AND v.v_ts + INTERVAL 1 HOUR < wm.w
-    """,
-)
-def streaming_stream_stream_outer_join(spark: SparkSession,
-                                       sf_dir: str) -> DataFrame:
-    """LEFT OUTER stream-stream interval join: unmatched views emit a
-    null-joined row only after the watermark proves no match can still
-    arrive (state eviction) — the semantics that make outer joins of
-    two live streams well-defined.  Over the bounded run the emitted
-    set is matched-pairs ∪ {unmatched views whose whole match window
-    sits below the final GLOBAL watermark}; under the default
-    multipleWatermarkPolicy=min and per-stream watermarks attached
-    after the type filters, that is LEAST(max view ts, max purchase
-    ts) − 2h, which the oracle's wm CTE mirrors exactly.  Younger
-    views stay in state and don't emit (deterministic prefix, same
-    contract as streaming_daily_window)
-    (streaming/stream_join.py)."""
-    from .streaming.stream_join import run_attribution_outer_available_now
-
-    return run_attribution_outer_available_now(spark, sf_dir)
 
 
 @register(
@@ -3872,47 +3633,6 @@ def text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "streaming_ohlc",
-    oracle="""
-    WITH wm AS (
-        SELECT MAX(ts) - INTERVAL 1 DAY AS w FROM events
-    ), r AS (
-        SELECT event_type, CAST(date_trunc('day', ts) AS DATE) AS day,
-               value,
-               FIRST_VALUE(value) OVER (
-                   PARTITION BY event_type, date_trunc('day', ts)
-                   ORDER BY ts, event_id) AS open,
-               FIRST_VALUE(value) OVER (
-                   PARTITION BY event_type, date_trunc('day', ts)
-                   ORDER BY ts DESC, event_id DESC) AS close
-        FROM events
-    ), daily AS (
-        SELECT event_type, day, MIN(open) AS open, MAX(value) AS high,
-               MIN(value) AS low, MIN(close) AS close,
-               COUNT(*) AS n_events
-        FROM r GROUP BY event_type, day
-    )
-    SELECT event_type, day, open, high, low, close, n_events
-    FROM daily, wm
-    WHERE CAST(day AS TIMESTAMP) + INTERVAL 1 DAY <= wm.w
-    """,
-)
-def streaming_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming OHLC: the ts_resample_ohlc struct-extremum
-    aggregation run incrementally (streaming/ohlc.py) — struct min/max
-    are associative+commutative, so they fold in the window state
-    store like plain extrema; FIRST_VALUE-style formulations would
-    not.  availableNow + watermark => emitted rows are exactly the
-    closed (type, day) windows; the oracle is the batch OHLC with the
-    same cutoff."""
-    name = "ohlc_sink"
-    spark.catalog.dropTempView(name)
-    from .streaming.ohlc import run_available_now as run_ohlc
-
-    return run_ohlc(spark, sf_dir, name=name)
-
-
-@register(
     "j18_asof_join_forward",
     oracle="""
     WITH clicks AS (
@@ -4172,39 +3892,6 @@ def sim_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.count(F.lit(1)) * F.lit(1.0) / F.lit(10), 6
             ).alias("recall_at_k"),
         )
-    )
-
-
-def _ewma_oracle() -> str:
-    from .queries_analytics import EWMA_LAST8_ORACLE
-
-    return EWMA_LAST8_ORACLE
-
-
-@register("streaming_ewma", oracle=_ewma_oracle())
-def streaming_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming EWMA (applyInPandasWithState): the bounded-tail fold
-    of ts_ewma_last8 with the state contract made explicit — the fold
-    only ever needs the last 8 values, so that tail IS the per-user
-    state (fixed width, unbounded-stream safe; streaming/ewma.py).
-    The pandas fold runs the identical IEEE op sequence as the batch
-    operator and the DuckDB oracle, so with the bounded single-file
-    source the final update per user is bit-equal to the batch
-    query's answer — a streaming operator with a full value-level
-    oracle, not a rows-only check."""
-    import itertools
-
-    from .streaming.ewma import run_available_now as run_ewma
-
-    if not hasattr(streaming_ewma, "_seq"):
-        streaming_ewma._seq = itertools.count()
-    out = run_ewma(
-        spark, sf_dir, name=f"ewma_stream_{next(streaming_ewma._seq)}"
-    )
-    return out.select(
-        "user_id",
-        "n_events",
-        round_fixed(F.col("ewma_last"), 6).alias("ewma_last"),
     )
 
 
@@ -4540,36 +4227,6 @@ def text_tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(nb, "id_b")
         .select("id_a", "id_b", cos.alias("cos_sim"))
         .filter(F.col("cos_sim") >= 0.3)
-    )
-
-
-def _cusum_oracle() -> str:
-    from .queries_analytics import CUSUM_ORACLE
-
-    return CUSUM_ORACLE
-
-
-@register("streaming_cusum", oracle=_cusum_oracle())
-def streaming_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming CUSUM change detection (applyInPandasWithState):
-    the recurrence is Markov in (s, alarm_count), so the ENTIRE
-    per-user state is two numbers at any history length — the
-    canonical monitor-every-entity stream operator
-    (streaming/cusum.py).  Identical IEEE fold to the batch operator
-    and the recursive-CTE oracle; bounded single-file run is
-    value-level checked."""
-    import itertools
-
-    from .streaming.cusum import run_available_now as run_cusum
-
-    if not hasattr(streaming_cusum, "_seq"):
-        streaming_cusum._seq = itertools.count()
-    out = run_cusum(
-        spark, sf_dir, name=f"cusum_stream_{next(streaming_cusum._seq)}"
-    )
-    return out.select(
-        "user_id", "n_events", "n_alarms",
-        round_fixed(F.col("final_s"), 6).alias("final_s"),
     )
 
 
@@ -5238,49 +4895,6 @@ def text_retrieval_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# NOTE: frozen copy of a31_cms_point_estimates' oracle text (the
-# deliberate-duplication convention, see the _DK_QUALITY note): the
-# bounded stream's final sketch state equals the batch sketch, so the
-# same batch SQL is the value-level oracle for the STREAMING operator.
-_CMS_ORACLE = """
-    WITH sk AS (
-        SELECT j,
-               ('0x' || substr(md5(j::VARCHAR || '_' || user_id::VARCHAR),
-                               1, 8))::BIGINT % 64 AS bucket,
-               COUNT(*) AS cnt
-        FROM events, range(0, 4) t(j)
-        GROUP BY 1, 2
-    ), probes AS (
-        SELECT p::VARCHAR AS key, j
-        FROM range(1, 11) s(p), range(0, 4) t(j)
-    )
-    SELECT key,
-           MIN(COALESCE(cnt, 0)) AS est_count
-    FROM probes LEFT JOIN sk
-      ON sk.j = probes.j
-     AND sk.bucket = ('0x' || substr(md5(probes.j::VARCHAR || '_' || key),
-                                     1, 8))::BIGINT % 64
-    GROUP BY key
-    """
-
-
-@register("streaming_cms_estimates", oracle=_CMS_ORACLE)
-def streaming_cms_estimates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming Count-Min sketch maintenance (streaming/cms.py): the
-    sketch IS the aggregation state — at most depth x width counters
-    regardless of stream length or key cardinality, which is why a
-    CMS (not an exact histogram) is the unbounded-stream frequency
-    monitor.  The batch operator count_min_profile runs UNCHANGED as
-    an incremental streaming aggregation in complete mode; with the
-    bounded source the final state equals the batch sketch row for
-    row, so a31's batch oracle value-checks the streaming path.
-    Point estimates for users 1-10 read the final sketch — the fact
-    stream is never rescanned."""
-    from .streaming.cms import run_cms_estimates
-
-    return run_cms_estimates(spark, sf_dir)
-
-
 def _attrition_oracle() -> str:
     """Stage counts re-derived from the frozen curation CTE chain (the
     deliberate-duplication convention) + the a11 attrition arithmetic:
@@ -5429,29 +5043,6 @@ def curation_attrition_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "streaming_hll_distinct",
-    oracle="""
-    SELECT event_type, COUNT(DISTINCT user_id) AS n_exact,
-           1 AS within_bounds
-    FROM events GROUP BY event_type
-    """,
-)
-def streaming_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming HLL distinct-count maintenance (streaming/cms.py
-    run_hll_distinct) — a17's mergeable-sketch profile with the
-    per-(type, day) sketches built INCREMENTALLY by the stream:
-    per-key state is one fixed-size HLL register set, while the exact
-    COUNT DISTINCT the sketch replaces is precisely what a stream
-    cannot maintain with bounded state.  Register union is
-    commutative/associative (max), so microbatch boundaries are
-    invisible; the oracle (frozen copy of a17's) checks the exact
-    counts and the within-5%% flag."""
-    from .streaming.cms import run_hll_distinct
-
-    return run_hll_distinct(spark, sf_dir)
-
-
-@register(
     "curation_budget_select",
     oracle=f"""
     WITH {_DK_QUALITY}, scored AS (
@@ -5507,30 +5098,6 @@ def curation_budget_select(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("quality").alias("min_quality"),
         )
     )
-
-
-@register(
-    "streaming_kll_quantiles",
-    oracle="""
-    SELECT CAST(0.5 AS DOUBLE) AS quantile, 1 AS within_bounds
-    UNION ALL SELECT CAST(0.9 AS DOUBLE), 1
-    UNION ALL SELECT CAST(0.99 AS DOUBLE), 1
-    """,
-)
-def streaming_kll_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming KLL quantile maintenance (streaming/cms.py
-    run_kll_quantiles): per-day sketches built incrementally by the
-    stream (kll_sketch_agg_double IS the aggregation state), folded
-    and probed at read time — a16's store-sketches-not-values
-    pattern with the build half running on an unbounded stream.  All
-    three mergeable sketches (CMS frequencies, HLL distincts, KLL
-    quantiles) now maintain under Structured Streaming.  Oracle
-    contract as a16: within-bounds flags vs exact percentiles at
-    rank q +/- 0.05 (KLL compaction is randomized; the approximate
-    values themselves are pinned in tests)."""
-    from .streaming.cms import run_kll_quantiles
-
-    return run_kll_quantiles(spark, sf_dir)
 
 
 def _dot_topk_oracle(k: int = 10) -> str:
@@ -6080,43 +5647,6 @@ def emb_quantile_clip(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         .alias("v_clipped"),
-    )
-
-
-def _holt_oracle() -> str:
-    from .queries_analytics import HOLT_LINEAR_ORACLE
-
-    return HOLT_LINEAR_ORACLE
-
-
-@register("streaming_holt", oracle=_holt_oracle())
-def streaming_holt(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming Holt linear-trend smoothing (applyInPandasWithState):
-    ts_holt_linear's bounded-tail fold with the state contract made
-    explicit — the fold only ever needs the last 12 values, so that
-    tail IS the per-user state (fixed width, unbounded-stream safe;
-    streaming/holt.py).  The Python fold runs the identical IEEE op
-    sequence as the batch struct fold and the recursive-CTE oracle
-    (α, β are exact binary fractions), so the bounded single-file
-    run's final update per user is bit-equal to the batch answer —
-    a two-component-state streaming operator with a full value-level
-    oracle; cross-microbatch state carry is pinned separately in
-    tests/test_r8_debut_ops.py."""
-    import itertools
-
-    from .streaming.holt import run_available_now as run_holt
-
-    if not hasattr(streaming_holt, "_seq"):
-        streaming_holt._seq = itertools.count()
-    out = run_holt(
-        spark, sf_dir, name=f"holt_stream_{next(streaming_holt._seq)}"
-    )
-    return out.select(
-        "user_id",
-        "n_events",
-        round_fixed(F.col("level"), 6).alias("level"),
-        round_fixed(F.col("trend"), 6).alias("trend"),
-        round_fixed(F.col("level") + F.col("trend"), 6).alias("forecast_1"),
     )
 
 

@@ -166,12 +166,13 @@ def _omop_pipeline_ctes() -> str:
                LOCATION_STATE AS state
         FROM person WHERE PATIENT_LINKAGE IS NOT NULL
     ),
-    -- mis-bridge cleanup: identity-consistent keys, located rows,
-    -- deterministic one-row survivor
+    -- mis-bridge cleanup: identity-consistent keys (NULL is a value, as
+    -- in n_distinct), located rows, deterministic one-row survivor
     consistent AS (
         SELECT k FROM pop GROUP BY k
-        HAVING COUNT(DISTINCT yob) = 1 AND COUNT(DISTINCT sex) = 1
-           AND COUNT(DISTINCT race) = 1
+        HAVING COUNT(DISTINCT yob) + (COUNT(yob) < COUNT(*))::INT = 1
+           AND COUNT(DISTINCT sex) + (COUNT(sex) < COUNT(*))::INT = 1
+           AND COUNT(DISTINCT race) + (COUNT(race) < COUNT(*))::INT = 1
     ),
     located AS (
         SELECT pop.* FROM pop JOIN consistent USING (k)

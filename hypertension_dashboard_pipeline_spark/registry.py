@@ -64,6 +64,12 @@ _FRONT: list[str] = [
     # codelist-filter docstrings rewritten for the one IN (...) path
     "p9_codelist_isin",
     "j8_broadcast_codelist_join",
+    # mis-bridge consistency counts an all-NULL column as one value
+    "omop_pipeline_e2e",
+    "omop_phenotype_stats",
+    # interval join moved to operators/analytics; docstrings reworded
+    "events_last_touch_attribution",
+    "events_sessionize",
     # evidence refresh
     "text_hybrid_weighted_rrf",
     "a20_grouped_regression",
@@ -72,7 +78,6 @@ _FRONT: list[str] = [
     "a24_key_skew_profile",
     "a25_winsorized_stats",
     "curation_attrition_funnel",
-    "graph_bfs_levels",
     "cust_rfm_segments",
     "dq_drift_kl",
     "emb_gram_matrix",
@@ -80,7 +85,6 @@ _FRONT: list[str] = [
     "events_anomaly_zscore",
     "events_funnel",
     "events_path_transitions",
-    "graph_pagerank_transitions",
     "j10_asof_join",
     "j11_range_join",
     "s2_sink_partitioned_roundtrip",

@@ -185,7 +185,7 @@ EVENTS = T.StructType(
 # ``ts`` in two physical forms across rounds (nanosecond INT64 through
 # r3, microsecond TIMESTAMP since r4), so readers sniff the parquet
 # footer (io.events_read_plan) and pick the matching explicit schema —
-# explicit either way so streaming sources stay deterministic and the
+# explicit either way so no read infers a schema and the
 # nanos path needs NO session conf (`spark.sql.legacy.parquet.nanosAsLong`).
 #
 # EVENTS_RAW: ts declared LONG reads raw nanos; readers convert

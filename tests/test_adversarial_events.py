@@ -33,11 +33,10 @@ from test_driver_parity import TABLES, _canon
 registry.load_all()
 
 # window queries whose input includes the events table and that carry
-# a SQL oracle (streaming ones run their bounded stream in-process)
+# a SQL oracle
 EVENTS_QUERIES = [
     "a15_time_rollup",
     "a23_incremental_rollup",
-    "streaming_incremental_rollup",
     "w3_moving_avg",
     "w4_lag_delta",
     "w6_time_range_avg",
@@ -57,17 +56,6 @@ EVENTS_QUERIES = [
     "ts_gap_fill_interpolate",
     "a29_heavy_hitters_sampled",
     "f17_json_extract_stats",
-    "graph_pagerank_transitions",
-    "streaming_stream_stream_join",
-    "streaming_stream_stream_outer_join",
-    # externally green + byte-unchanged, but they read events and the
-    # net is cheap — the bounded streaming runs must stay oracle-equal
-    # on hostile event shapes too
-    "streaming_session_window",
-    "streaming_daily_window",
-    "streaming_dedup",
-    "streaming_stateful_counters",
-    "streaming_static_join",
     # r7 wave-3/4 fold operators: null measurements skipped by
     # contract (the sweep's NULL rows are exactly the case that
     # desynchronized collect_list from count() before the explicit
@@ -75,8 +63,6 @@ EVENTS_QUERIES = [
     # tie-break in the fold order
     "ts_ewma_last8",
     "ts_cusum_alarm",
-    "streaming_ewma",
-    "streaming_cusum",
     # wave-10 debuts: LTV sums NULL-heavy money via exact DECIMAL;
     # seasonality buckets duplicate-instant bursts; stickiness
     # deduplicates (month, day, user) before either count
@@ -84,9 +70,6 @@ EVENTS_QUERIES = [
     "ts_seasonality_profile",
     "events_user_stickiness",
     "events_user_features",
-    "streaming_cms_estimates",
-    "streaming_hll_distinct",
-    "streaming_kll_quantiles",
     "events_value_gini",
     "events_anomaly_seasonal",
     "ts_autocorr_lag1",
@@ -103,10 +86,6 @@ EVENTS_QUERIES = [
     # CAST_INVALID_INPUT on {"k": 3.7}; the tolerant-DOUBLE contract
     # is pinned value-equal over all 14 hostile payload shapes here
     "f17_json_extract",
-    # late-r8 twin debut: the streaming Holt fold must hold the
-    # null-skip contract and the event_id tie-break under
-    # duplicate-instant bursts, like its batch twin above
-    "streaming_holt",
 ]
 
 _TYPES = ["click", "signup", "error", "view", "purchase"]

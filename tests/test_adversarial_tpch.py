@@ -62,20 +62,12 @@ TPCH_QUERIES = [
     "a38_disjunctive_revenue",
     "j29_dominant_suppliers",
     "j30_waiting_suppliers",
-    "graph_adamic_adar",
     # wave-10: exact-moment correlation under 1e9-scale balances
     "a39_grouped_corr",
     "w8_percent_rank_cume",
-    "graph_lpa_communities",
     "a41_yoy_growth",
     "dq_uniqueness_report",
-    "graph_bfs_levels",
-    "graph_degree_distribution",
     "a42_top_customer_share",
-    # r8 debut: the Jaccard denominator (n_a + n_b - n_ab) must stay
-    # positive under the sweep's duplicate-lineitem blocks (the
-    # DISTINCT projection is what guarantees n_ab <= min(n_a, n_b))
-    "graph_neighbor_jaccard",
     # late-r8 parity-sweep find: raw-double sums diverged between the
     # salted two-phase plans and the unsalted oracles on fractional
     # quantities (order-dependent float addition) — now exact DECIMAL,

@@ -88,7 +88,7 @@ def test_base_population_drops_null_keys(tables):
     assert pop.filter(F.col("PATIENT_LINKAGE").isNull()).count() == 0
     # quote-trim applied (reference F1): raw '"M"' becomes 'M'
     sexes = {r["SEX"] for r in pop.select("SEX").distinct().collect()}
-    assert sexes <= {"M", "F"}
+    assert sexes <= {"M", "F", None}  # None: GOLD_NULL_SEX (P24)
 
 
 def test_misbridge_dedup(tables):
@@ -114,11 +114,12 @@ def test_adult_filter(tables):
 
 
 def test_misbridge_survivor_ignores_row_order_and_partitions(spark):
-    """One key, two rows at the same (STATE, ZIP3), YOB 1980 vs NULL:
-    the survivor is fixed by a total order in which NULL sorts first,
-    so the NULL-YOB row survives and the patient leaves at the adult
-    filter, whatever the input order or partitioning."""
-    rows = [_person_row("M1", 1980), _person_row("M1", None)]
+    """One key, YOB NULL on both rows (one value, so not mis-bridged),
+    at two locations: the survivor is fixed by a total order, so the
+    least (STATE, ZIP3) row survives and the patient leaves at the
+    adult filter, whatever the input order or partitioning."""
+    rows = [_person_row("M1", None),
+            _person_row("M1", None, zip3="331", state="FL")]
     outs = []
     for order in (rows, rows[::-1]):
         for n in (1, 3):
@@ -128,8 +129,18 @@ def test_misbridge_survivor_ignores_row_order_and_partitions(spark):
             outs.append((_sorted_rows(pop), _sorted_rows(adults(pop, YEAR))))
     assert all(out == outs[0] for out in outs), outs
     survivors, grown = outs[0]
-    assert survivors == [("M1", None, "CAUCASIAN", "M", "303", "GA")]
+    assert survivors == [("M1", None, "CAUCASIAN", "M", "331", "FL")]
     assert grown == []
+
+
+def test_misbridge_counts_null_as_a_value(tables):
+    """dplyr's n_distinct counts NA as a value (SURVEY.md §2.10-4):
+    YOB {1980, NULL} is two values, SEX NULL on every row is one."""
+    pop = drop_misbridged(base_population(tables["person"]))
+    keys = [r["PATIENT_LINKAGE"] for r in pop.collect()]
+    assert "P23" not in keys
+    assert keys.count("P24") == 1
+    assert pop.filter("PATIENT_LINKAGE = 'P24'").first()["SEX"] is None
 
 
 def test_cohort_membership(cohort):

@@ -30,7 +30,6 @@ BROADCAST_PRODUCT_DECLARED = {
     "a24_key_skew_profile",  # 10-row top-k × 1-row totals, by design
     "cust_rfm_segments",  # 1-row scalar sides (global max date, quartile cuts) — the scalar-subquery compile shape
     "ts_gap_fill_locf",  # 1-row scalar side (global horizon date)
-    "graph_pagerank_transitions",  # 1-row scalar sides (node count N, dangling mass) per iteration
     "text_lm_bigram_score",  # 1-row scalar side (vocabulary size V)
     "a26_equidepth_histogram",  # 1-row scalar side (decile cut points)
     "dq_drift_kl",  # 1-row scalar side (global event count n)
@@ -38,7 +37,6 @@ BROADCAST_PRODUCT_DECLARED = {
     "a29_heavy_hitters_sampled",  # 1-row scalar side (global count N), twice
     "dq_drift_psi",  # day-grid x |event types| dense scaffold (bounded) + 1-row total
     "text_tfidf_top_terms",  # 1-row scalar side (document count N)
-    "graph_triangle_count",  # 1-row scalar sides (mean-weight threshold; tri x wedges final join)
     "dq_referential_integrity",  # 1-row scalar sides (n_child x n_orphans per audited relationship)
     "events_type_pmi",  # 1-row scalar side (global distinct-user count N)
     "rec_copurchase_lift",  # 1-row scalar side (order count N) applied AFTER the top-20 truncation
@@ -48,7 +46,6 @@ BROADCAST_PRODUCT_DECLARED = {
     "a35_important_parts",  # 1-row scalar side (nation inventory total)
     "text_retrieval_ndcg",  # 1-row scalar side (corpus relevant count)
     "curation_dsir_sample",  # inherits dsir_weights' declared 1-row token-totals product
-    "graph_bfs_levels",  # round-1 frontier is a 1-row literal seed (constant-folded join key)
     "dedup_corpus_overlap_hll",  # |sources|² pair stage over the ~20-row KB-sized sketch relation, by design (no row data crosses it)
 }
 
@@ -184,10 +181,6 @@ def test_no_registered_query_plans_a_cartesian_product(plan):
     BroadcastNestedLoopJoin over a fact table is a non-starter.  The
     exact all-pairs variants exist only as un-registered test baselines.
 
-    Streaming queries are skipped: they run a real availableNow stream
-    inside the query function (their physical plan is per-microbatch),
-    and their batch-side joins are covered by their own tests.
-
     DECLARED exceptions: a broadcast product against a deliberately
     tiny side is legitimate (a query batch of 8 vectors scored against
     the whole corpus IS per-row work, not a join explosion) — each one
@@ -196,8 +189,6 @@ def test_no_registered_query_plans_a_cartesian_product(plan):
     """
     offenders = []
     for name in registry.QUERIES:
-        if name.startswith("streaming_"):
-            continue
         p = plan(name)
         if "CartesianProduct" in p or (
             "BroadcastNestedLoopJoin" in p
@@ -231,8 +222,6 @@ def test_no_registered_query_uses_row_python_eval(plan):
     ARROW_NODES = ("ArrowEvalPython", "MapInPandas", "FlatMapGroupsInPandas")
     row_eval, undeclared_arrow = [], []
     for name in registry.QUERIES:
-        if name.startswith("streaming_"):
-            continue
         p = plan(name)
         if "BatchEvalPython" in p:
             row_eval.append(name)
@@ -614,18 +603,14 @@ def test_no_forced_broadcast_of_per_part_counts(spark, sf_dir):
     (one row per distinct l_partkey — unbounded at 100 TB) must never
     carry a broadcast JoinHint, because a hint cannot degrade when the
     runtime size doesn't fit, while an unhinted side is AQE's call.
-    The graph pair carries no broadcast hints at all; copurchase hints
-    only its bounded sides (the <=20-row top cut and the 1-row total),
-    asserted as: every hinted child subtree either contains no
+    Copurchase hints only its bounded sides (the <=20-row top cut and
+    the 1-row total), asserted as: every hinted child subtree either contains no
     part-keyed aggregate or bounds it under a GlobalLimit."""
     import re
 
     def optimized(name: str) -> str:
         df = registry.QUERIES[name](spark, sf_dir)
         return df._jdf.queryExecution().optimizedPlan().toString()
-
-    for name in ("graph_neighbor_jaccard", "graph_adamic_adar"):
-        assert "strategy=broadcast" not in optimized(name), name
 
     p = optimized("rec_copurchase_lift")
     assert "strategy=broadcast" in p  # the bounded-side hints exist

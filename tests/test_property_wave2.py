@@ -4,9 +4,6 @@ The parity sweep pins these on the fixed testdata; hypothesis drives
 them with adversarial tiny inputs and checks the invariants a SQL
 oracle can't express directly:
 
-* PageRank: ranks form a probability distribution (sum == 1) on ANY
-  weighted graph, including graphs with dangling nodes, and match a
-  brute-force numpy power iteration.
 * gap-fill LOCF: the dense grid covers exactly [per-key min, global
   max], no filled value is null, and filled values match a brute-force
   carry-forward.
@@ -23,54 +20,8 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from hypertension_dashboard_pipeline_spark.operators import graph as gr
 from hypertension_dashboard_pipeline_spark.operators import segments as sg
 from hypertension_dashboard_pipeline_spark.operators import timeseries as ts
-
-# -------------------------------------------------------------- pagerank
-
-edge_strategy = st.lists(
-    st.tuples(
-        st.integers(min_value=0, max_value=4),
-        st.integers(min_value=0, max_value=4),
-        st.integers(min_value=1, max_value=5),
-    ),
-    min_size=1,
-    max_size=10,
-).map(lambda es: list({(s, d): w for s, d, w in es}.items()))
-
-
-def _pagerank_brute(edges, iterations=3, d=0.85):
-    nodes = sorted({s for (s, _), _ in edges} | {t for (_, t), _ in edges})
-    idx = {v: i for i, v in enumerate(nodes)}
-    n = len(nodes)
-    outw = {}
-    for (s, _), w in edges:
-        outw[s] = outw.get(s, 0) + w
-    r = [1.0 / n] * n
-    for _ in range(iterations):
-        inc = [0.0] * n
-        for (s, t), w in edges:
-            inc[idx[t]] += r[idx[s]] * (w / outw[s])
-        dm = sum(r[idx[v]] for v in nodes if v not in outw)
-        r = [(1 - d) / n + d * (inc[i] + dm / n) for i in range(n)]
-    return {v: r[idx[v]] for v in nodes}
-
-
-@settings(max_examples=6, deadline=None,
-          suppress_health_check=[HealthCheck.too_slow])
-@given(edge_strategy)
-def test_pagerank_matches_brute_force_and_sums_to_one(spark, edges):
-    df = spark.createDataFrame(
-        [(s, t, w) for (s, t), w in edges], "src int, dst int, w long"
-    )
-    got = {r.v: r.rank for r in gr.pagerank(df, iterations=3).collect()}
-    want = _pagerank_brute(edges)
-    assert abs(sum(got.values()) - 1.0) < 1e-9
-    assert set(got) == set(want)
-    for v in want:
-        assert abs(got[v] - want[v]) < 1e-9, (v, got[v], want[v])
-
 
 # -------------------------------------------------------------- gap fill
 
@@ -158,47 +109,3 @@ def test_segments_partition_counts_and_identity_below_threshold(spark, corpus):
         assert out[i].clean_md5 == hashlib.md5(
             " ".join(kept).encode()
         ).hexdigest()
-
-
-def test_pagerank_fast_path_matches_distributed(spark):
-    """r13 small-graph fast path: driver-side iteration must reproduce
-    the distributed loop on the same graph — exactly at 6 dp (the
-    rounding every registered consumer applies), and to 1e-12 raw (the
-    two are permutations of the same IEEE additions)."""
-    rows = [(s, t, w) for s in range(5) for t in range(5) if s != t
-            for w in [((s * 7 + t * 3) % 4) + 1]]
-    df = spark.createDataFrame(rows, "src int, dst int, w long")
-    fast = {r.v: r.rank for r in gr.pagerank(df, iterations=4).collect()}
-    dist = {r.v: r.rank
-            for r in gr.pagerank(df, iterations=4,
-                                 small_graph_threshold=0).collect()}
-    assert set(fast) == set(dist)
-    for v in dist:
-        assert abs(fast[v] - dist[v]) < 1e-12
-        assert round(fast[v], 6) == round(dist[v], 6)
-
-
-def test_pagerank_fast_path_declines_null_endpoints(spark):
-    """NULL src/dst: the fast path must defer to the distributed loop
-    (SQL join-vs-group NULL semantics), and both entry points must
-    agree."""
-    df = spark.createDataFrame(
-        [(1, 2, 1), (None, 2, 1), (2, None, 3)], "src int, dst int, w long"
-    )
-    via_default = sorted(
-        ((r.v, round(r.rank, 9)) for r in
-         gr.pagerank(df, iterations=3).collect()),
-        key=lambda t: (t[0] is None, str(t[0])),
-    )
-    via_forced = sorted(
-        ((r.v, round(r.rank, 9)) for r in
-         gr.pagerank(df, iterations=3,
-                     small_graph_threshold=0).collect()),
-        key=lambda t: (t[0] is None, str(t[0])),
-    )
-    assert via_default == via_forced
-
-
-def test_pagerank_fast_path_empty_edges(spark):
-    df = spark.createDataFrame([], "src int, dst int, w long")
-    assert gr.pagerank(df, iterations=2).collect() == []

@@ -356,55 +356,8 @@ def test_type_pmi_bruteforce(spark):
 
 
 # ---------------------------------------------------------------------------
-# k-core, minhash merge law, interval overlap
+# minhash merge law, interval overlap
 # ---------------------------------------------------------------------------
-
-
-def _kcore_brute(edges, k):
-    adj = defaultdict(set)
-    for a, b in edges:
-        if a != b:
-            adj[a].add(b)
-            adj[b].add(a)
-    changed = True
-    while changed:
-        changed = False
-        for v in [v for v, ns in adj.items() if len(ns) < k]:
-            for u in adj.pop(v):
-                adj[u].discard(v)
-            changed = True
-    return {v: len(ns) for v, ns in adj.items() if ns}
-
-
-@settings(max_examples=12, deadline=None,
-          suppress_health_check=[HealthCheck.too_slow])
-@given(
-    edges=st.lists(
-        st.tuples(st.integers(0, 12), st.integers(0, 12)),
-        min_size=0, max_size=40,
-    ),
-    k=st.sampled_from([2, 3]),
-)
-def test_kcore_matches_bruteforce(spark, edges, k):
-    from hypertension_dashboard_pipeline_spark.operators.graph import kcore
-
-    df = spark.createDataFrame(
-        edges or [(0, 0)], "a long, b long"  # empty-frame schema guard
-    )
-    got = {r.vertex: r.degree for r in kcore(df, k=k).collect()}
-    assert got == _kcore_brute(edges, k)
-
-
-def test_kcore_peels_transitively(spark):
-    """A chain hanging off a triangle: the chain must peel away round
-    by round (degree-1 ends first), leaving exactly the triangle as
-    the 2-core — the case a single-pass degree filter gets wrong."""
-    from hypertension_dashboard_pipeline_spark.operators.graph import kcore
-
-    edges = [(1, 2), (2, 3), (3, 1), (3, 4), (4, 5), (5, 6)]
-    df = spark.createDataFrame(edges, "a long, b long")
-    got = {r.vertex: r.degree for r in kcore(df, k=2).collect()}
-    assert got == {1: 2, 2: 2, 3: 2}
 
 
 @settings(max_examples=10, deadline=None,

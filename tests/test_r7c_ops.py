@@ -1,18 +1,15 @@
 """Unit + property tests for the round-7 wave-9/10 operators:
-greedy k-center diversity selection, MMR re-ranking, synchronous
-label propagation, and Adamic-Adar scoring — each cross-checked
-against an independent brute-force Python implementation (the
-recompute-by-hand QC idiom, SURVEY.md §5.4)."""
+greedy k-center diversity selection and MMR re-ranking — each
+cross-checked against an independent brute-force Python
+implementation (the recompute-by-hand QC idiom, SURVEY.md §5.4)."""
 
 from __future__ import annotations
 
 import math
-from collections import Counter, defaultdict
 
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from hypertension_dashboard_pipeline_spark.operators import graph as gr
 from hypertension_dashboard_pipeline_spark.operators import similarity as sim
 from hypertension_dashboard_pipeline_spark.operators.analytics import (
     kcenter_greedy,
@@ -156,60 +153,6 @@ def test_mmr_prefers_diverse_over_redundant(spark):
     out = sim.mmr_rerank(_emb_df(spark, vecs), k=2, pool=3).collect()
     got = [r["vec_id"] for r in sorted(out, key=lambda r: r["sel_step"])]
     assert got == [1, 3] == _py_mmr(vecs, k=2, pool=3)
-
-
-def _py_lpa(edges, iterations=3):
-    """Reference synchronous LPA with min-label tie-break."""
-    sym = set()
-    for a, b in edges:
-        sym.add((a, b))
-        sym.add((b, a))
-    nodes = sorted({a for a, _ in sym})
-    neigh = defaultdict(list)
-    for a, b in sym:
-        neigh[a].append(b)
-    lbl = {n: n for n in nodes}
-    for _ in range(iterations):
-        new = {}
-        for n in nodes:
-            counts = Counter(lbl[m] for m in neigh[n])
-            best = max(counts.items(), key=lambda kv: (kv[1], -kv[0]))
-            new[n] = best[0]
-        lbl = new
-    return lbl
-
-
-edge_strategy = st.lists(
-    st.tuples(st.integers(0, 8), st.integers(0, 8)).filter(
-        lambda t: t[0] != t[1]
-    ),
-    min_size=1,
-    max_size=16,
-)
-
-
-@settings(max_examples=15, deadline=None,
-          suppress_health_check=list(HealthCheck))
-@given(edge_strategy)
-def test_lpa_matches_bruteforce(spark, edges):
-    pairs = sorted({(min(a, b), max(a, b)) for a, b in edges})
-    df = spark.createDataFrame(pairs, "a long, b long")
-    sym = df.unionAll(df.selectExpr("b AS a", "a AS b"))
-    out = gr.label_propagation(sym, iterations=3).collect()
-    got = {r["node"]: r["community"] for r in out}
-    assert got == _py_lpa(pairs)
-
-
-def test_lpa_two_cliques_bridge(spark):
-    # two triangles joined by one bridge edge: propagation keeps two
-    # communities labeled by each clique's min id
-    pairs = [(0, 1), (1, 2), (0, 2), (3, 4), (4, 5), (3, 5), (2, 3)]
-    df = spark.createDataFrame(pairs, "a long, b long")
-    sym = df.unionAll(df.selectExpr("b AS a", "a AS b"))
-    out = gr.label_propagation(sym, iterations=3).collect()
-    got = {r["node"]: r["community"] for r in out}
-    assert got == _py_lpa(pairs)
-    assert len(set(got.values())) >= 2
 
 
 def test_gini_known_distributions(spark):

@@ -1,6 +1,6 @@
 """Brute-force cross-checks for the r8 debut operators beyond the
-Holt fold (test_holt_fold.py): streak detection, inter-arrival gaps,
-and neighborhood Jaccard — each recomputed by an independent Python
+Holt fold (test_holt_fold.py): streak detection and inter-arrival
+gaps — each recomputed by an independent Python
 implementation on small generated inputs (the recompute-by-hand QC
 idiom, 3_blood_pressure.R:177-182, SURVEY.md §5.4)."""
 
@@ -85,45 +85,6 @@ def test_user_streaks_match_bruteforce(spark, tmp_path_factory, users):
 
 
 # ---------------------------------------------------------------------------
-# graph_neighbor_jaccard: brute-force over the bipartite projection
-# ---------------------------------------------------------------------------
-
-
-def test_neighbor_jaccard_matches_bruteforce(spark, sf_dir):
-    from hypertension_dashboard_pipeline_spark.io import load_table
-
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_partkey"
-    ).collect()
-    orders_of: dict[int, set[int]] = {}
-    for r in li:
-        orders_of.setdefault(r.l_partkey, set()).add(r.l_orderkey)
-    import math
-
-    def rf(x):
-        return math.floor(x * 1e6 + 0.5) / 1e6
-
-    scores = {}
-    parts = sorted(orders_of)
-    for i, a in enumerate(parts):
-        for b in parts[i + 1:]:
-            inter = len(orders_of[a] & orders_of[b])
-            if inter:
-                scores[(a, b)] = (
-                    inter,
-                    rf(inter / (len(orders_of[a]) + len(orders_of[b]) - inter)),
-                )
-    expected = sorted(
-        ((j, a, b, n) for (a, b), (n, j) in scores.items()),
-        key=lambda t: (-t[0], t[1], t[2]),
-    )[:20]
-    got = registry.QUERIES["graph_neighbor_jaccard"](spark, sf_dir).collect()
-    assert len(got) == 20
-    for row, (j, a, b, n) in zip(got, expected):
-        assert (row.part_a, row.part_b, row.n_ab, row.jaccard) == (a, b, n, j)
-
-
-# ---------------------------------------------------------------------------
 # emb_quantile_clip: every output inside its dimension's [p5, p95]
 # ---------------------------------------------------------------------------
 
@@ -171,68 +132,6 @@ def test_pack_efficiency_bin_invariants(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# streaming Holt: cross-microbatch state carry
-# ---------------------------------------------------------------------------
-
-
-def test_streaming_holt_state_carries_across_microbatches(spark, tmp_path):
-    """Two files delivered as two microbatches (maxFilesPerTrigger=1):
-    the LAST update per user must equal the batch fold over the FULL
-    series — the (tail) state carried between batches, not recomputed
-    from batch-local rows (the registered bounded run is a single
-    microbatch, which would mask a state bug)."""
-    import math
-    import time
-
-    from pyspark.sql import functions as F
-
-    from hypertension_dashboard_pipeline_spark.streaming.holt import (
-        running_user_holt,
-    )
-    from hypertension_dashboard_pipeline_spark.streaming.runner import (
-        run_bounded,
-    )
-    from test_holt_fold import _brute_holt
-
-    vals = [float(v) for v in
-            [10, 20, 30, 40, 55, 65, 75, 85, 95, 105, 90, 80, 70, 60]]
-    rows = [
-        (1, i, f"2024-01-{i + 1:02d} 00:00:00", v)
-        for i, v in enumerate(vals)
-    ]
-    df = spark.createDataFrame(
-        rows, "user_id long, event_id long, ts_s string, value double"
-    ).select(
-        "user_id", "event_id",
-        F.to_timestamp("ts_s").alias("ts"), "value",
-    )
-    src_dir = str(tmp_path / "holt_src")
-    df.filter(F.col("event_id") < 7).coalesce(1).write.parquet(
-        src_dir, mode="overwrite"
-    )
-    time.sleep(1.1)
-    df.filter(F.col("event_id") >= 7).coalesce(1).write.mode(
-        "append"
-    ).parquet(src_dir)
-    src = (
-        spark.readStream.schema(df.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    sink = run_bounded(
-        spark, running_user_holt(src), "holt_multibatch_test",
-        ckpt_prefix="spark_graft_holt_test_", output_mode="update",
-    )
-    updates = sink.collect()
-    assert len(updates) == 2, updates
-    final = max(updates, key=lambda r: r.n_events)
-    assert final.n_events == len(vals)
-    lvl, trd = _brute_holt(vals)
-    assert math.isclose(final.level, lvl, rel_tol=0, abs_tol=0)
-    assert math.isclose(final.trend, trd, rel_tol=0, abs_tol=0)
-
-
-# ---------------------------------------------------------------------------
 # empty-input contract for the KLL quantile profiles (r8 sweep find)
 # ---------------------------------------------------------------------------
 
@@ -262,9 +161,7 @@ def empty_events_dir(tmp_path_factory, sf_smoke):
     return str(root)
 
 
-@pytest.mark.parametrize(
-    "name", ["a16_kll_merge_quantiles", "streaming_kll_quantiles"]
-)
+@pytest.mark.parametrize("name", ["a16_kll_merge_quantiles"])
 def test_kll_profiles_empty_input_contract(spark, empty_events_dir, name):
     """The quantile profile of a range with NO observations is the
     EMPTY profile — found by the r8 empty-events sweep: percentile of

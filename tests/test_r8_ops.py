@@ -280,68 +280,6 @@ def test_cusum_query_single_exchange(plan):
 
 
 # ---------------------------------------------------------------------------
-# streaming EWMA: cross-microbatch state carry
-# ---------------------------------------------------------------------------
-
-
-def test_streaming_ewma_state_carries_across_microbatches(spark, tmp_path):
-    """Two files delivered as two microbatches (maxFilesPerTrigger=1):
-    the LAST update per user must equal the batch fold over the FULL
-    series — the tail state carried between batches, it wasn't
-    recomputed from batch-local rows.  This is the first multi-batch
-    state test in the repo: the registered bounded runs form a single
-    microbatch, which would mask a state bug."""
-    import time
-
-    from pyspark.sql import functions as F
-
-    from hypertension_dashboard_pipeline_spark.streaming.ewma import (
-        running_user_ewma,
-    )
-    from hypertension_dashboard_pipeline_spark.streaming.runner import (
-        run_bounded,
-    )
-
-    vals = [float(v) for v in [10, 20, 30, 40, 55, 65, 75, 85, 95, 105]]
-    rows = [
-        (1, i, f"2024-01-0{i + 1} 00:00:00" if i < 9 else
-         "2024-01-10 00:00:00", v)
-        for i, v in enumerate(vals)
-    ]
-    df = spark.createDataFrame(
-        rows, "user_id long, event_id long, ts_s string, value double"
-    ).select(
-        "user_id", "event_id",
-        F.to_timestamp("ts_s").alias("ts"), "value",
-    )
-    src_dir = str(tmp_path / "ewma_src")
-    # first half, then second half as a LATER file (mtime order)
-    df.filter(F.col("event_id") < 5).coalesce(1).write.parquet(
-        src_dir, mode="overwrite"
-    )
-    time.sleep(1.1)
-    df.filter(F.col("event_id") >= 5).coalesce(1).write.mode(
-        "append"
-    ).parquet(src_dir)
-    src = (
-        spark.readStream.schema(df.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-    sink = run_bounded(
-        spark, running_user_ewma(src), "ewma_multibatch_test",
-        ckpt_prefix="spark_graft_ewma_test_", output_mode="update",
-    )
-    updates = sink.collect()
-    # one update per microbatch that contained user 1
-    assert len(updates) == 2, updates
-    final = max(updates, key=lambda r: r.n_events)
-    assert final.n_events == 10
-    assert math.isclose(final.ewma_last, _brute_ewma(vals),
-                        rel_tol=0, abs_tol=0)
-
-
-# ---------------------------------------------------------------------------
 # DSIR importance weights
 # ---------------------------------------------------------------------------
 
@@ -530,52 +468,6 @@ def test_tfidf_cosine_identical_docs_score_one(spark, tmp_path):
         ).collect()
     }
     assert rows == {(0, 1): 1.0}
-
-
-def test_streaming_cusum_state_carries_across_microbatches(spark, tmp_path):
-    """An alarm whose build-up SPANS the batch boundary: batch 1 ends
-    with s just below threshold, batch 2's first row tips it over —
-    only carried (s, a) state detects it."""
-    import time
-
-    from pyspark.sql import functions as F
-
-    from hypertension_dashboard_pipeline_spark.streaming.cusum import (
-        LEVEL, THRESHOLD, running_user_cusum,
-    )
-    from hypertension_dashboard_pipeline_spark.streaming.runner import (
-        run_bounded,
-    )
-
-    # level 90, threshold 120: batch1 builds s = 110, batch2 adds 110
-    # -> t = 130 > 120 -> alarm + reset
-    vals1 = [200.0]          # s = 110 after batch 1
-    vals2 = [200.0, 10.0]    # alarm fires, then s = 0
-    rows = [
-        (1, i, f"2024-01-0{i + 1} 00:00:00", v)
-        for i, v in enumerate(vals1 + vals2)
-    ]
-    df = spark.createDataFrame(
-        rows, "user_id long, event_id long, ts_s string, value double"
-    ).select("user_id", "event_id",
-             F.to_timestamp("ts_s").alias("ts"), "value")
-    src_dir = str(tmp_path / "cusum_src")
-    df.filter(F.col("event_id") < 1).coalesce(1).write.parquet(
-        src_dir, mode="overwrite")
-    time.sleep(1.1)
-    df.filter(F.col("event_id") >= 1).coalesce(1).write.mode(
-        "append").parquet(src_dir)
-    src = (spark.readStream.schema(df.schema)
-           .option("maxFilesPerTrigger", 1).parquet(src_dir))
-    sink = run_bounded(
-        spark, running_user_cusum(src), "cusum_multibatch_test",
-        ckpt_prefix="spark_graft_cusum_test_", output_mode="update",
-    )
-    updates = sorted(sink.collect(), key=lambda r: r.n_events)
-    assert [(r.n_events, r.n_alarms) for r in updates] == [(1, 0), (3, 1)]
-    a, s = _brute_cusum(vals1 + vals2, LEVEL, THRESHOLD)
-    assert updates[-1].n_alarms == a
-    assert math.isclose(updates[-1].final_s, s, rel_tol=0, abs_tol=0)
 
 
 def test_standardize_post_moments_are_identity(spark, sf_dir):

@@ -1,16 +1,15 @@
-"""Boundary semantics for the stream-stream attribution join.
+"""Boundary semantics for the view→purchase attribution join.
 
-``view_purchase_attribution`` is the same join expression in batch and
-streaming (withWatermark is a no-op on batch frames), so the interval
-boundaries are pinned here on toy batch data; the full streaming run
-is oracle-checked by the parity sweep (streaming_stream_stream_join).
+``view_purchase_attribution`` is the interval join under
+events_last_touch_attribution; its boundaries are pinned here on toy
+data, and the query is oracle-checked by the parity sweep.
 """
 
 from __future__ import annotations
 
 import datetime as dt
 
-from hypertension_dashboard_pipeline_spark.streaming.stream_join import (
+from hypertension_dashboard_pipeline_spark.operators.analytics import (
     view_purchase_attribution,
 )
 

@@ -1,17 +1,15 @@
 """Unit tests for the round-4 wave-2 operators: time-series gap fill
-(LOCF), PageRank, and segment-level boilerplate removal — toy-frame
-semantics the parity sweep can't isolate (dangling nodes, all-boiler
-documents, leading-gap behavior)."""
+(LOCF) and segment-level boilerplate removal — toy-frame semantics
+the parity sweep can't isolate (all-boiler documents, leading-gap
+behavior)."""
 
 from __future__ import annotations
 
 import datetime as dt
 import hashlib
 
-import pytest
 from pyspark.sql import functions as F
 
-from hypertension_dashboard_pipeline_spark.operators import graph as gr
 from hypertension_dashboard_pipeline_spark.operators import segments as sg
 from hypertension_dashboard_pipeline_spark.operators import timeseries as ts
 
@@ -54,37 +52,6 @@ class TestGapFillLocf:
         assert out.filter(F.col("filled").isNull()).count() == 0
 
 
-class TestPagerank:
-    def test_symmetric_two_node_graph_splits_evenly(self, spark):
-        edges = spark.createDataFrame(
-            [("a", "b", 1), ("b", "a", 1)], "src string, dst string, w long"
-        )
-        ranks = {r.v: r.rank for r in gr.pagerank(edges, iterations=4).collect()}
-        assert ranks["a"] == pytest.approx(0.5)
-        assert ranks["b"] == pytest.approx(0.5)
-        assert sum(ranks.values()) == pytest.approx(1.0)
-
-    def test_dangling_node_mass_redistributed(self, spark):
-        # a -> b, b has no out-edges: without the dangling correction
-        # total rank leaks below 1 each iteration.
-        edges = spark.createDataFrame(
-            [("a", "b", 1)], "src string, dst string, w long"
-        )
-        ranks = {r.v: r.rank for r in gr.pagerank(edges, iterations=6).collect()}
-        assert sum(ranks.values()) == pytest.approx(1.0, abs=1e-9)
-        assert ranks["b"] > ranks["a"]  # b receives a's full out-mass
-
-    def test_weighted_edges_bias_rank(self, spark):
-        # c splits its mass 9:1 toward a; a and b both return to c.
-        edges = spark.createDataFrame(
-            [("c", "a", 9), ("c", "b", 1), ("a", "c", 1), ("b", "c", 1)],
-            "src string, dst string, w long",
-        )
-        ranks = {r.v: r.rank for r in gr.pagerank(edges, iterations=8).collect()}
-        assert ranks["a"] > ranks["b"]
-        assert sum(ranks.values()) == pytest.approx(1.0, abs=1e-9)
-
-
 class TestSegmentBoilerplate:
     WORDS = "w0 w1 w2 w3 w4 w5 w6 w7 w8 w9"  # one exact 10-word segment
 
@@ -125,60 +92,3 @@ class TestSegmentBoilerplate:
         )
         out = sg.remove_boilerplate(docs, width=10, min_df=3)
         assert [r.doc_id for r in out.collect()] == [1]
-
-
-class TestTriangleStats:
-    def _stats(self, spark, edges):
-        df = spark.createDataFrame(edges, "a long, b long")
-        return gr.triangle_stats(df).collect()[0]
-
-    def test_single_triangle(self, spark):
-        r = self._stats(spark, [(1, 2), (2, 3), (3, 1)])
-        assert (r.n_triangles, r.n_wedges) == (1, 3)
-        assert r.global_clustering == 1.0
-
-    def test_wedge_without_closure(self, spark):
-        r = self._stats(spark, [(1, 2), (2, 3)])
-        assert (r.n_triangles, r.n_wedges) == (0, 1)
-        assert r.global_clustering == 0.0
-
-    def test_no_wedges_null_clustering(self, spark):
-        r = self._stats(spark, [(1, 2), (3, 4)])
-        assert (r.n_triangles, r.n_wedges) == (0, 0)
-        assert r.global_clustering is None
-
-    def test_dup_edges_self_loops_and_orientation_ignored(self, spark):
-        r = self._stats(
-            spark,
-            [(1, 2), (2, 1), (2, 3), (3, 1), (1, 1), (2, 3), (3, 3)],
-        )
-        assert (r.n_triangles, r.n_wedges) == (1, 3)
-
-    def test_random_graphs_match_bruteforce(self, spark):
-        import itertools
-        import random
-
-        rng = random.Random(20260814)
-        for trial in range(4):
-            n = rng.randint(4, 9)
-            edges = [
-                (a, b)
-                for a, b in itertools.combinations(range(n), 2)
-                if rng.random() < 0.55
-            ]
-            if not edges:
-                continue
-            adj = {v: set() for v in range(n)}
-            for a, b in edges:
-                adj[a].add(b)
-                adj[b].add(a)
-            tri = sum(
-                1
-                for a, b, c in itertools.combinations(range(n), 3)
-                if b in adj[a] and c in adj[b] and c in adj[a]
-            )
-            wedges = sum(
-                len(ns) * (len(ns) - 1) // 2 for ns in adj.values()
-            )
-            r = self._stats(spark, edges)
-            assert (r.n_triangles, r.n_wedges) == (tri, wedges), edges
