@@ -26,8 +26,6 @@ from pyspark.sql import types as T
 
 from .schemas import TESTDATA_TABLES
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 # --------------------------------------------------------------------------
 # sources  (reference S1/S3/S4, SURVEY.md §2.1)

@@ -141,9 +141,16 @@ def freq_table(df: DataFrame, col: str, pct_scale: int = 6) -> DataFrame:
 
 def freq_table_with_total(df: DataFrame, col: str) -> DataFrame:
     """Reference A7: frequency table with an appended totals row
-    (janitor ``adorn_totals``) — the one grouping-sets-shaped op in the
-    reference. ``rollup`` emits the NULL-key total row natively."""
-    return df.rollup(col).agg(F.count(F.lit(1)).alias("n"))
+    (janitor ``adorn_totals``), NULL-keyed as SQL's ``GROUP BY ROLLUP``
+    gives it. One ``groupBy`` counts per value; the total is a global
+    aggregate over those counts, so it is one row even on empty input,
+    where Spark's ``rollup`` returns no row at all. The counts (one row
+    per distinct value) sit in one partition, so the total needs no
+    second shuffle, and the union reuses the counts' one."""
+    counts = df.groupBy(col).agg(F.count(F.lit(1)).alias("n")).coalesce(1)
+    total = counts.agg(F.lit(None).cast(df.schema[col].dataType).alias(col),
+                       F.coalesce(F.sum("n"), F.lit(0)).alias("n"))
+    return counts.unionByName(total)
 
 
 def time_rollup(df: DataFrame, ts_col: str = "ts",

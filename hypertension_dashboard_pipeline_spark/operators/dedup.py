@@ -31,7 +31,6 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from ..functions.expressions import round_fixed
-from ..functions.text import word_shingles
 
 
 # Live persisted intermediates from the last near-dup call.  Persisted

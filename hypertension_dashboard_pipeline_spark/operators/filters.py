@@ -28,15 +28,21 @@ def codelist_predicate(col: str, codes: Sequence[int]) -> Column:
 
     The expression is built as one SQL string — a single JVM call however
     long the list (``Column.isin`` costs a py4j round trip per literal).
-    Every code must convert with ``int()`` (ValueError otherwise), so no
-    outside text reaches the SQL; the column name is backtick-quoted. An
-    empty codelist selects nothing.
+    Every code must convert with ``int()`` and fit in 64 bits (ValueError
+    otherwise), so no outside text reaches the SQL; the column name is
+    backtick-quoted. The codes are BIGINT literals (``4152194L``), the
+    type of the OMOP concept columns, so the analyzer wraps no ``Cast``
+    around each one; on a narrower integer column it casts the column
+    once, and the optimizer unwraps that cast so the filter still pushes
+    into the scan. An empty codelist selects nothing.
     """
-    literals = ", ".join(str(int(c)) for c in codes)
-    if not literals:
+    values = [int(c) for c in codes]
+    if not values:
         return F.lit(False)
+    if not all(-(1 << 63) <= v < (1 << 63) for v in values):
+        raise ValueError("codelist code outside the 64-bit integer range")
     quoted = "`" + col.replace("`", "``") + "`"
-    return F.expr(f"{quoted} IN ({literals})")
+    return F.expr(f"{quoted} IN ({', '.join(f'{v}L' for v in values)})")
 
 
 def codelist_filter(df: DataFrame, col: str,

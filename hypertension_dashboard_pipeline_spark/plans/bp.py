@@ -26,7 +26,7 @@ Scale: one filtered scan of the measurement table feeds one hash
 aggregation on (patient, date) — each side a conditional average, so
 pairing is a null check instead of a join — and one on patient that
 computes every flag (max-struct for the latest visit). One left join
-attaches the flags to the cohort. No windows, no driver round-trips.
+attaches the flags to the cohort rows. No windows, no driver round-trips.
 """
 
 from __future__ import annotations
@@ -68,8 +68,8 @@ def paired_daily_bp(measurement: DataFrame, year: int = 2023) -> DataFrame:
 
 def build_bp_flags(cohort: DataFrame, measurement: DataFrame,
                    year: int = 2023) -> DataFrame:
-    """Script-3 end-to-end: cohort enriched with BP denominator + HTN +
-    control flags, deterministic 0/1 everywhere (look-back-only
+    """Script-3 end-to-end: every cohort row enriched with BP denominator
+    + HTN + control flags, deterministic 0/1 everywhere (look-back-only
     patients get 0, not NULL — SURVEY.md §2.10-1)."""
     sbp, dbp = F.col("SBP"), F.col("DBP")
     in_year = F.year(F.col(DATE)) == year
@@ -88,7 +88,7 @@ def build_bp_flags(cohort: DataFrame, measurement: DataFrame,
         flag((F.col("latest.SBP") < 130) & (F.col("latest.DBP") < 80))
         .alias("HTNcontrol130"),
     )
-    return jn.enrich(cohort.select(KEY), flags, KEY).fillna(
+    return jn.enrich(cohort, flags, KEY).fillna(
         {"has_bp": 0, "HTN140_90": 0, "HTN130_80": 0,
          "HTNcontrol140": 0, "HTNcontrol130": 0}
     )

@@ -10,10 +10,12 @@ intermediate counts (the reference's manual QC idiom, SURVEY.md §5):
    conflicts) to one deterministic survivor
    (2_data_importing_cleaning.R:85-161)
 3. adult filter (YOB ≤ year-18, :186-187)
-4. exclusions — pregnancy (women 18-44 only), ESRD, palliative/
-   hospice care: one 0/1 flag per reason and patient, from the
-   domain tables filtered by codelist + year; a patient with any
-   applicable flag leaves the cohort (:283-620)
+4. evidence and exclusions — one 0/1 flag per kind of evidence and
+   patient, from the domain tables filtered by codelist + year:
+   pregnancy (women 18-44 only), ESRD and palliative/hospice care
+   exclude the patient (:283-620); script 4's hypertension diagnosis
+   and prescription evidence (HTN_DX, HTN_MEDS) ride along, so the
+   phenotype stage scans no domain table again
 5. presentation labels: age, sex/race recodes, ZIP3 de-quote
    (:640-658)
 
@@ -21,9 +23,10 @@ Scale: every input is scanned once. Person is one hash aggregation on
 the patient key (one value per identity column, NULL counted as a value;
 the survivor as a min over a struct). Each domain table is one filtered
 scan (IN over the union of its codelists and years) emitting a flag
-column per reason; the union of those scans is one aggregation on the
-patient key, applied by one left join and a filter. No windows, no
-anti-joins, and nothing touches the driver except codelist literals.
+column per kind of evidence; the union of those scans is one
+aggregation on the patient key, applied by one left join and a filter.
+No windows, no anti-joins, and nothing touches the driver except
+codelist literals.
 """
 
 from __future__ import annotations
@@ -104,12 +107,14 @@ def adults(pop: DataFrame, year: int = 2023) -> DataFrame:
 
 
 # per domain table: concept column, date column, and the codelists of
-# each exclusion reason it carries evidence for
-# (2_data_importing_cleaning.R:283-400, 409-484, 526-611)
+# each kind of evidence it carries: the exclusion reasons
+# (2_data_importing_cleaning.R:283-400, 409-484, 526-611) and script 4's
+# diagnosis and prescription evidence (4_hypertension_phenotype_main.R:62-110)
 DOMAINS = {
     "condition": ("CONDITION_CONCEPT_ID", "CONDITION_START_DATE", {
         "preg": ["preg_condition"],
         "esrd": ["esrd_condition"],
+        "dx": ["htn_dx"],
     }),
     "measurement": ("MEASUREMENT_CONCEPT_ID", "MEASUREMENT_DATE", {
         "preg": ["preg_measurement"],
@@ -124,45 +129,56 @@ DOMAINS = {
         "esrd": ["esrd_procedure"],
         "care": ["palliative_procedure", "hospice_procedure"],
     }),
+    "drug_exposure": ("DRUG_CONCEPT_ID", "DRUG_EXPOSURE_START_DATE", {
+        "meds": ["htn_rx"],
+    }),
 }
 REASONS = ("preg", "esrd", "care")
+EVIDENCE = REASONS + ("dx", "meds")
 
 
-def exclusion_flags(condition: DataFrame, measurement: DataFrame,
-                    observation: DataFrame, procedure: DataFrame,
-                    codelists: Codelists, year: int = 2023) -> DataFrame:
-    """Per-patient exclusion evidence ``(KEY, preg, esrd, care)``, 0/1,
+def evidence_flags(condition: DataFrame, measurement: DataFrame,
+                   observation: DataFrame, procedure: DataFrame,
+                   drug_exposure: DataFrame, codelists: Codelists,
+                   year: int = 2023) -> DataFrame:
+    """Per-patient evidence ``(KEY, preg, esrd, care, dx, meds)``, 0/1,
     one row per key with any evidence.
 
-    Pregnancy counts in the measurement year only; ESRD and palliative/
-    hospice care include the look-back year like the reference's
-    2022-2023 window. Care uses both the palliative and the hospice
-    lists (the reference's undefined-variable bug at :610 is not
-    reproduced; SURVEY.md §2.10-5d). Pregnancy evidence still has to be
-    restricted to women of reproductive age by the caller.
+    Pregnancy, diagnosis and prescription evidence count in the
+    measurement year only; ESRD and palliative/hospice care include the
+    look-back year like the reference's 2022-2023 window. Care uses both
+    the palliative and the hospice lists (the reference's
+    undefined-variable bug at :610 is not reproduced; SURVEY.md
+    §2.10-5d). Pregnancy evidence still has to be restricted to women of
+    reproductive age by the caller.
     """
     tables = {"condition": condition, "measurement": measurement,
-              "observation": observation, "procedure": procedure}
-    years = {"preg": [year], "esrd": [year - 1, year], "care": [year - 1, year]}
+              "observation": observation, "procedure": procedure,
+              "drug_exposure": drug_exposure}
+    lookback = [year - 1, year]
+    years = {"preg": [year], "esrd": lookback, "care": lookback,
+             "dx": [year], "meds": [year]}
     scans = []
     for name, (concept, date, lists) in DOMAINS.items():
-        codes = {r: [c for n in names for c in codelists[n]] for r, names in lists.items()}
+        codes = {e: [c for n in names for c in codelists[n]] for e, names in lists.items()}
         every_code = [c for cs in codes.values() for c in cs]
-        every_year = sorted({y for r in lists for y in years[r]})
+        every_year = sorted({y for e in lists for y in years[e]})
         hits = flt.year_in(
             flt.codelist_filter(tables[name], concept, every_code), date, every_year
         ).filter(F.col(KEY).isNotNull())
-        flags = {r: flag(flt.codelist_predicate(concept, codes[r])
-                         & F.year(F.col(date)).isin(years[r])) for r in lists}
-        scans.append(hits.select(KEY, *(flags.get(r, F.lit(0)).alias(r) for r in REASONS)))
+        flags = {e: flag(flt.codelist_predicate(concept, codes[e])
+                         & F.year(F.col(date)).isin(years[e])) for e in lists}
+        scans.append(hits.select(KEY, *(flags.get(e, F.lit(0)).alias(e) for e in EVIDENCE)))
     return reduce(DataFrame.unionByName, scans).groupBy(KEY).agg(
-        *(F.max(r).alias(r) for r in REASONS)
+        *(F.max(e).alias(e) for e in EVIDENCE)
     )
 
 
 def clean_labels(cohort: DataFrame, year: int = 2023) -> DataFrame:
     """Presentation columns (2_data_importing_cleaning.R:640-658):
-    derived age, human-readable sex/race, de-quoted ZIP3."""
+    derived age, human-readable sex/race, de-quoted ZIP3; then the
+    DX/MEDS evidence as script 4 names it, NULL (no evidence) filled to 0
+    (4_hypertension_phenotype_main.R:139-144)."""
     return cohort.select(
         KEY,
         age_from_birth_year("YEAR_OF_BIRTH", year).alias("age"),
@@ -170,17 +186,20 @@ def clean_labels(cohort: DataFrame, year: int = 2023) -> DataFrame:
         recode("RACE", RACE_RECODE).alias("race"),
         F.col("STATE").alias("state"),
         F.col("ZIP3").alias("zip3"),
+        F.coalesce(F.col("dx"), F.lit(0)).alias("HTN_DX"),
+        F.coalesce(F.col("meds"), F.lit(0)).alias("HTN_MEDS"),
     )
 
 
 def build_cohort(person: DataFrame, condition: DataFrame,
                  measurement: DataFrame, observation: DataFrame,
-                 procedure: DataFrame, codelists: Codelists,
-                 year: int = 2023) -> DataFrame:
-    """Script-2 end-to-end: eligible adult cohort with clean labels."""
+                 procedure: DataFrame, drug_exposure: DataFrame,
+                 codelists: Codelists, year: int = 2023) -> DataFrame:
+    """Script-2 end-to-end: eligible adult cohort with clean labels and
+    script 4's DX/MEDS evidence."""
     grown = adults(drop_misbridged(base_population(person)), year)
-    flags = exclusion_flags(condition, measurement, observation, procedure,
-                            codelists, year)
+    flags = evidence_flags(condition, measurement, observation, procedure,
+                           drug_exposure, codelists, year)
     wra = F.col("YEAR_OF_BIRTH").between(year - 44, year - 18) & (F.col("SEX") == "F")
     excluded = ((F.col("preg") == 1) & wra) | (F.col("esrd") == 1) | (F.col("care") == 1)
     eligible = jn.enrich(grown, flags, KEY).filter(~F.coalesce(excluded, F.lit(False)))

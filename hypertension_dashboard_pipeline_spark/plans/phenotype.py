@@ -3,11 +3,13 @@
 
 Evidence: a hypertension diagnosis code in the measurement year
 (:62-81), an anti-hypertensive prescription in the measurement year
-(:92-110), or the BP-based flag from script 3. The final phenotype is
-the OR of the three (:150-160), with every input NULL-filled to 0
-first — the reference fills only DX and MEDS (:139-144), leaving NA
-phenotypes for look-back-only patients; the engine makes all flags
-deterministic 0/1 (SURVEY.md §2.10-1).
+(:92-110), or the BP-based flag from script 3. The DX and MEDS flags
+come from the cohort stage's evidence scans (``cohort.evidence_flags``),
+so this stage reads no table. The final phenotype is the OR of the
+three (:150-160), with every input NULL-filled to 0 first — the
+reference fills only DX and MEDS (:139-144), leaving NA phenotypes for
+look-back-only patients; the engine makes all flags deterministic 0/1
+(SURVEY.md §2.10-1).
 """
 
 from __future__ import annotations
@@ -17,48 +19,17 @@ from pyspark.sql import functions as F
 
 from ..functions.expressions import flag
 from ..operators import aggregates as agg
-from ..operators import filters as flt
-from ..operators import joins as jn
-from ..sources.codelists import Codelists
-
-KEY = "PATIENT_LINKAGE"
 
 
-def evidence_flag(df: DataFrame, concept_col: str, date_col: str,
-                  codes, year: int, out_col: str) -> DataFrame:
-    """Distinct patient keys with a codelist hit in the year, flagged 1
-    (the reference's `SELECT DISTINCT key, '1' AS flag` queries,
-    4_hypertension_phenotype_main.R:65-76 — flag standardized to int)."""
-    hits = flt.year_in(
-        flt.codelist_filter(df, concept_col, codes), date_col, [year]
-    )
-    return hits.select(KEY).distinct().withColumn(out_col, F.lit(1))
-
-
-def build_phenotype(bp_flags: DataFrame, condition: DataFrame,
-                    drug_exposure: DataFrame, codelists: Codelists,
-                    year: int = 2023) -> DataFrame:
-    """Script-4 end-to-end: per-patient phenotype flags."""
-    dx = evidence_flag(condition, "CONDITION_CONCEPT_ID",
-                       "CONDITION_START_DATE", codelists["htn_dx"], year,
-                       "HTN_DX")
-    meds = evidence_flag(drug_exposure, "DRUG_CONCEPT_ID",
-                         "DRUG_EXPOSURE_START_DATE", codelists["htn_rx"], year,
-                         "HTN_MEDS")
-    merged = (
-        jn.enrich(bp_flags, dx, KEY)
-        .transform(lambda d: jn.enrich(d, meds, KEY))
-        .fillna({"HTN_DX": 0, "HTN_MEDS": 0})
-    )
-    return merged.withColumn(
-        "hypertension_140",
-        flag((F.col("HTN_DX") == 1) | (F.col("HTN_MEDS") == 1)
-             | (F.col("HTN140_90") == 1)),
-    ).withColumn(
-        "hypertension_130",
-        flag((F.col("HTN_DX") == 1) | (F.col("HTN_MEDS") == 1)
-             | (F.col("HTN130_80") == 1)),
-    )
+def build_phenotype(bp_flags: DataFrame) -> DataFrame:
+    """Script-4 end-to-end: the two phenotype flags, added to rows that
+    carry the DX/MEDS evidence (plans.cohort) and the BP flags
+    (plans.bp)."""
+    evidence = (F.col("HTN_DX") == 1) | (F.col("HTN_MEDS") == 1)
+    return bp_flags.withColumns({
+        "hypertension_140": flag(evidence | (F.col("HTN140_90") == 1)),
+        "hypertension_130": flag(evidence | (F.col("HTN130_80") == 1)),
+    })
 
 
 def phenotype_stats(phenotype: DataFrame,

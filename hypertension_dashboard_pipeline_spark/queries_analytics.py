@@ -4429,8 +4429,6 @@ def a40_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     fact twice).  Exact DECIMAL sums; the grouping-id column
     disambiguates which set each row belongs to, and NULLed-out keys
     sort null-safely on both engines."""
-    from .functions.expressions import dec_present
-
     li = load_table(spark, sf_dir, "lineitem")
     return spark.sql(
         """

@@ -1380,7 +1380,6 @@ def udf_pandas_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arrow-vectorized scalar pandas_udf (the engine's sanctioned slow
     path — never row-at-a-time Python). Matches the JVM-side token
     count bit-for-bit, which the oracle pins."""
-    import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
     # note: no type annotations — the module-level `from __future__

@@ -304,8 +304,8 @@ def _cleanup_checkpoint_dirs() -> None:
 
 
 def _run_stages(spark: SparkSession) -> dict[str, DataFrame]:
-    """Run the real staged pipeline (plans/run.py) over the fixture
-    tables, once per SparkSession. Checkpoints land in a temp dir that
+    """Run the real pipeline (plans/run.py) over the fixture tables,
+    once per SparkSession. The checkpoint lands in a temp dir that
     outlives the call (the returned DataFrames are backed by those
     parquet files; the driver collects them after this function
     returns) and is removed at interpreter exit."""
@@ -333,8 +333,8 @@ def _run_stages(spark: SparkSession) -> dict[str, DataFrame]:
 )
 def omop_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference pipeline itself, driver-verified per patient:
-    run_pipeline (cohort → BP flags → phenotype, parquet-checkpointed
-    stage boundaries) over the golden-patient fixtures; returns the
+    run_pipeline (cohort → BP flags → phenotype as one query with one
+    parquet checkpoint) over the golden-patient fixtures; returns the
     per-patient phenotype table, every flag oracle-checked."""
     return _run_stages(spark)["phenotype"].select(
         "PATIENT_LINKAGE", "has_bp", "HTN140_90", "HTN130_80",

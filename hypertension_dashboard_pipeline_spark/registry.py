@@ -64,9 +64,14 @@ _FRONT: list[str] = [
     # codelist-filter docstrings rewritten for the one IN (...) path
     "p9_codelist_isin",
     "j8_broadcast_codelist_join",
-    # mis-bridge consistency counts an all-NULL column as one value
+    # mis-bridge consistency counts an all-NULL column as one value;
+    # cohort → BP → phenotype is one query with one checkpoint, and the
+    # totals row survives an empty cohort
     "omop_pipeline_e2e",
     "omop_phenotype_stats",
+    # unused imports deleted from the query bodies
+    "udf_pandas_token_count",
+    "a40_grouping_sets",
     # interval join moved to operators/analytics; docstrings reworded
     "events_last_touch_attribution",
     "events_sessionize",

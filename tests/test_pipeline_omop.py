@@ -7,6 +7,8 @@ aggregates (SURVEY.md §5).
 from __future__ import annotations
 
 import datetime as dt
+import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -37,6 +39,10 @@ from hypertension_dashboard_pipeline_spark.plans.phenotype import (
 from hypertension_dashboard_pipeline_spark.plans.run import run_pipeline
 
 YEAR = 2023
+# the phenotype stage's columns, in order
+PHENOTYPE_COLS = ["PATIENT_LINKAGE", "has_bp", "HTN140_90", "HTN130_80",
+                  "HTNcontrol140", "HTNcontrol130", "HTN_DX", "HTN_MEDS",
+                  "hypertension_140", "hypertension_130"]
 
 # every fixture codelist padded past 128 codes with concept IDs that no
 # fixture row carries: real deployments ship lists of hundreds to
@@ -56,7 +62,8 @@ def tables(spark):
 def cohort(spark, tables):
     df = build_cohort(
         tables["person"], tables["condition"], tables["measurement"],
-        tables["observation"], tables["procedure"], CODELISTS, YEAR,
+        tables["observation"], tables["procedure"], tables["drug_exposure"],
+        CODELISTS, YEAR,
     )
     df.cache()
     return df
@@ -70,9 +77,8 @@ def bp_flags(cohort, tables):
 
 
 @pytest.fixture(scope="module")
-def phenotype(bp_flags, tables):
-    df = build_phenotype(bp_flags, tables["condition"],
-                         tables["drug_exposure"], CODELISTS, YEAR)
+def phenotype(bp_flags):
+    df = build_phenotype(bp_flags)
     df.cache()
     return df
 
@@ -220,16 +226,12 @@ def test_phenotype_stats_rollup(phenotype):
 
 def test_staged_runner_checkpoints_match_direct(spark, tables, phenotype,
                                                 tmp_path):
-    """plans/run.py: the checkpointed staged run must produce exactly
-    the directly-composed phenotype, and each stage boundary must exist
-    on disk as readable Parquet (the reference's CSV-handoff pattern,
-    type-exact)."""
-    import os
-
+    """plans/run.py: the checkpointed run must produce exactly the
+    directly-composed phenotype, and its one checkpoint must exist on
+    disk as readable Parquet (type-exact, where the reference hands CSV
+    files between its scripts)."""
     out = run_pipeline(spark, tables, CODELISTS, str(tmp_path), YEAR)
-    for stage in ("stage2_cohort", "stage3_bp_flags", "stage4_phenotype",
-                  "stage4_stats"):
-        assert os.path.isdir(tmp_path / stage)
+    assert sorted(os.listdir(tmp_path)) == ["stage4_phenotype"]
 
     direct = {r["PATIENT_LINKAGE"]: r for r in phenotype.collect()}
     staged = {r["PATIENT_LINKAGE"]: r for r in out["phenotype"].collect()}
@@ -238,14 +240,14 @@ def test_staged_runner_checkpoints_match_direct(spark, tables, phenotype,
         assert staged[k]["hypertension_140"] == direct[k]["hypertension_140"]
         assert staged[k]["hypertension_130"] == direct[k]["hypertension_130"]
     # checkpoint round-trip preserved types (no CSV-style degradation)
-    assert dict(out["phenotype"].dtypes) == dict(phenotype.dtypes)
+    assert out["phenotype"].dtypes == phenotype.select(*PHENOTYPE_COLS).dtypes
 
 
 def test_checkpoint_read_back_starts_no_job(spark, tables, tmp_path,
                                             monkeypatch):
-    """Each of run_pipeline's four checkpoints is read back with the
-    written DataFrame's schema: no schema-inference job runs, and the
-    schema equals the one Spark infers from the files."""
+    """run_pipeline's one checkpoint is read back once, with the written
+    DataFrame's schema: no schema-inference job runs, and each stage's
+    projection has the schema Spark infers from the files."""
     from pyspark.sql.readwriter import DataFrameReader
 
     sc = spark.sparkContext
@@ -267,13 +269,13 @@ def test_checkpoint_read_back_starts_no_job(spark, tables, tmp_path,
     # job events reach the status tracker through the listener bus
     sc._jsc.sc().listenerBus().waitUntilEmpty()
 
-    stages = {"cohort": "stage2_cohort", "bp_flags": "stage3_bp_flags",
-              "phenotype": "stage4_phenotype", "stats": "stage4_stats"}
-    assert [paths for _, paths in reads] == [
-        (str(tmp_path / d),) for d in stages.values()]
-    for (group, (path,)), stage in zip(reads, stages):
-        assert list(sc.statusTracker().getJobIdsForGroup(group)) == [], stage
-        assert out[stage].schema == spark.read.parquet(path).schema, stage
+    assert sorted(os.listdir(tmp_path)) == ["stage4_phenotype"]
+    assert [paths for _, paths in reads] == [(str(tmp_path / "stage4_phenotype"),)]
+    [(group, (path,))] = reads
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    inferred = spark.read.parquet(path)
+    for stage in ("cohort", "bp_flags", "phenotype"):
+        assert out[stage].schema == inferred.select(*out[stage].columns).schema, stage
 
 
 def _sorted_rows(df):
@@ -292,6 +294,17 @@ def test_long_codelists_give_identical_outputs(spark, tables, tmp_path):
         assert _sorted_rows(padded[stage]) == _sorted_rows(short[stage]), stage
 
 
+def test_empty_cohort_keeps_the_totals_row(spark, tables, tmp_path):
+    """When no patient survives, the prevalence table is still its
+    totals row, as DuckDB's GROUP BY ROLLUP (the omop_phenotype_stats
+    oracle) gives it; Spark's rollup would give no row."""
+    minors = dict(tables, person=tables["person"].filter(F.col("YEAR_OF_BIRTH") > YEAR - 18))
+    out = run_pipeline(spark, minors, CODELISTS, str(tmp_path), YEAR)
+    assert out["phenotype"].count() == 0
+    assert [tuple(r) for r in out["stats"].collect()] == [(None, 0)]
+    assert out["stats"].dtypes == [("hypertension_140", "int"), ("n", "bigint")]
+
+
 # ------------------------------------------------------------ plan shape
 
 
@@ -306,7 +319,8 @@ def parquet_tables(tables, tmp_path_factory):
 def _cohort_of(tables, codelists):
     return build_cohort(
         tables["person"], tables["condition"], tables["measurement"],
-        tables["observation"], tables["procedure"], codelists, YEAR,
+        tables["observation"], tables["procedure"], tables["drug_exposure"],
+        codelists, YEAR,
     )
 
 
@@ -341,9 +355,34 @@ def test_cohort_stage_scans_each_input_once(parquet_tables):
     plan = _executed_plan(_cohort_of(parquet_tables, PADDED_CODELISTS))
     scans = [line for line in plan.splitlines() if "FileScan" in line]
     for col in ("YEAR_OF_BIRTH", "CONDITION_CONCEPT_ID", "MEASUREMENT_CONCEPT_ID",
-                "OBSERVATION_CONCEPT_ID", "PROCEDURE_CONCEPT_ID"):
+                "OBSERVATION_CONCEPT_ID", "PROCEDURE_CONCEPT_ID", "DRUG_CONCEPT_ID"):
         assert sum(col in line for line in scans) == 1, (col, plan)
-    assert len(scans) == 5, plan
+    assert len(scans) == 6, plan
+
+
+def test_run_write_scans_each_input_once(spark, parquet_tables, tmp_path,
+                                         monkeypatch):
+    """The run's one write scans person and every domain table once;
+    measurement twice at most (BP readings, pregnancy evidence)."""
+    from hypertension_dashboard_pipeline_spark.plans import run as run_plan
+
+    written = []
+
+    def keep(df, path):
+        written.append(df)
+        return checkpoint(df, path)
+
+    monkeypatch.setattr(run_plan, "checkpoint", keep)
+    run_pipeline(spark, parquet_tables, PADDED_CODELISTS, str(tmp_path), YEAR)
+    [df] = written
+    plan = _executed_plan(df)
+    scans = [line for line in plan.splitlines() if "FileScan" in line]
+    for col in ("YEAR_OF_BIRTH", "CONDITION_CONCEPT_ID", "OBSERVATION_CONCEPT_ID",
+                "PROCEDURE_CONCEPT_ID", "DRUG_CONCEPT_ID"):
+        assert sum(col in line for line in scans) == 1, (col, plan)
+    n_measurement = sum("MEASUREMENT_CONCEPT_ID" in line for line in scans)
+    assert 1 <= n_measurement <= 2, plan
+    assert len(scans) == 5 + n_measurement, plan
 
 
 # ------------------------------------------------------ exclusion flags
@@ -351,18 +390,37 @@ def test_cohort_stage_scans_each_input_once(parquet_tables):
 D22, D23 = dt.date(2022, 6, 1), dt.date(2023, 6, 1)
 
 
-def _eligible(spark, persons, condition=(), measurement=(), observation=(),
-              procedure=(), codelists=CODELISTS):
-    """Keys of the cohort built over tiny in-memory tables."""
-    df = build_cohort(
+def _cohort_over(spark, persons, condition=(), measurement=(), observation=(),
+                 procedure=(), drug_exposure=(), codelists=CODELISTS):
+    """The cohort built over tiny in-memory tables."""
+    return build_cohort(
         spark.createDataFrame(persons, S.PERSON),
         spark.createDataFrame(list(condition), S.CONDITION_OCCURRENCE),
         spark.createDataFrame(list(measurement), S.MEASUREMENT),
         spark.createDataFrame(list(observation), S.OBSERVATION),
         spark.createDataFrame(list(procedure), S.PROCEDURE_OCCURRENCE),
+        spark.createDataFrame(list(drug_exposure), S.DRUG_EXPOSURE),
         codelists, YEAR,
     )
-    return {r["PATIENT_LINKAGE"] for r in df.collect()}
+
+
+def _eligible(spark, persons, **domains):
+    """Keys of the cohort built over tiny in-memory tables."""
+    return {r["PATIENT_LINKAGE"] for r in _cohort_over(spark, persons, **domains).collect()}
+
+
+def test_dx_and_meds_count_in_the_measurement_year_only(spark):
+    # the condition scan reads look-back-year rows for ESRD; DX and
+    # MEDS evidence still count only in the measurement year (D1, M2),
+    # and M1's look-back ESRD evidence still excludes it
+    df = _cohort_over(
+        spark, [_person_row(k, 1970) for k in ("D1", "D2", "M1", "M2")],
+        condition=[("D1", 9401, q("htn"), D22), ("D2", 9402, q("htn"), D23),
+                   ("M1", 9101, q("esrd"), D22)],
+        drug_exposure=[("M1", 9501, D23), ("M2", 9502, D22), ("D2", 9501, D23)],
+    )
+    assert _by_key(df, ["HTN_DX", "HTN_MEDS"]) == {
+        "D1": (0, 0), "D2": (1, 1), "M2": (0, 0)}
 
 
 def test_pregnancy_in_lookback_year_does_not_exclude(spark):
@@ -431,6 +489,39 @@ def test_codelist_filter_rejects_non_integer_code(spark):
     df = spark.createDataFrame([(1,)], "c long")
     with pytest.raises(ValueError):
         flt.codelist_filter(df, "c", [1, "2) OR (1 = 1"])
+
+
+def test_codelist_filter_rejects_codes_outside_64_bits(spark):
+    for code in (1 << 63, -(1 << 63) - 1):
+        with pytest.raises(ValueError):
+            flt.codelist_predicate("c", [1, code])
+    df = spark.createDataFrame([(1,), ((1 << 63) - 1,), (-(1 << 63),)], "c long")
+    out = flt.codelist_filter(df, "c", [(1 << 63) - 1, -(1 << 63)])
+    assert sorted(r[0] for r in out.collect()) == [-(1 << 63), (1 << 63) - 1]
+
+
+def test_codelist_predicate_casts_no_code_on_a_bigint_column(spark):
+    """The codes are BIGINT literals, the concept columns' type: the
+    analyzer wraps no Cast around each code."""
+    df = spark.createDataFrame([(1,), (2,)], "c long")
+    out = flt.codelist_filter(df, "c", list(range(2, 2502)))
+    analyzed = out._jdf.queryExecution().analyzed().toString()
+    assert "cast(" not in analyzed.lower(), analyzed[:500]
+    assert [r[0] for r in out.collect()] == [2]
+
+
+def test_codelist_filter_on_an_int_column_is_pushed_to_the_scan(spark, tmp_path):
+    """On an int column the BIGINT codes give the same rows (a code past
+    the int range matches nothing) and the filter still reaches the
+    Parquet scan."""
+    path = str(tmp_path / "ints")
+    spark.createDataFrame([(i,) for i in range(40)] + [(None,)], "c int").write.parquet(path)
+    df = spark.read.parquet(path)
+    for codes in ([3, 7, 1 << 40], list(range(10, 30)) + [1 << 40, -(1 << 40)]):
+        out = flt.codelist_filter(df, "c", codes)
+        assert sorted(r[0] for r in out.collect()) == sorted(c for c in codes if 0 <= c < 40)
+        scan = next(line for line in _executed_plan(out).splitlines() if "FileScan" in line)
+        assert re.search(r"PushedFilters: \[.*\bIn\(c, ", scan), scan
 
 
 def test_codelist_filter_escapes_backtick_in_column_name(spark):
@@ -507,9 +598,10 @@ def test_attrition_proportions_within_reference_bands(spark):
 
     # the reasons applied in the reference's order: pregnancy among
     # WRA, then ESRD, then care
+    drug_exposure = spark.createDataFrame([], S.DRUG_EXPOSURE)
     flagged = grown.join(
-        co.exclusion_flags(condition, measurement, observation, procedure,
-                           CODELISTS, YEAR),
+        co.evidence_flags(condition, measurement, observation, procedure,
+                          drug_exposure, CODELISTS, YEAR),
         co.KEY, "left",
     ).fillna(0, subset=list(co.REASONS))
     after_preg = flagged.filter(~(wra & (F.col("preg") == 1)))
